@@ -327,15 +327,23 @@ def explode_events(decoded: DataFrame) -> DataFrame:
     )
 
 
-def transform_message(events: DataFrame) -> DataFrame:
+def rewrite_message(message: Column) -> Column:
     """Per-event scalar transform (reference lambda/main.py:55-69):
     'Hello' → 'Hell Yeah' (all occurrences), then append '\\n'."""
-    return events.withColumn(
-        "transformed",
-        F.concat(
-            F.regexp_replace("message", "Hello", "Hell Yeah"), F.lit("\n")
-        ),
-    )
+    return F.concat(F.regexp_replace(message, "Hello", "Hell Yeah"), F.lit("\n"))
+
+
+def unchunked_base64(payload: Column) -> Column:
+    """Wire-format base64 of a string payload. Spark's base64 emits
+    RFC-2045 MIME chunking (CRLF every 76 chars); the Firehose contract
+    (and DuckDB's to_base64) is the unchunked RFC-4648 form — strip the
+    breaks."""
+    return F.translate(F.base64(payload.cast("binary")), "\r\n", "")
+
+
+def transform_message(events: DataFrame) -> DataFrame:
+    """``rewrite_message`` over exploded events → ``transformed``."""
+    return events.withColumn("transformed", rewrite_message(F.col("message")))
 
 
 def reassemble(transformed: DataFrame) -> DataFrame:
@@ -354,48 +362,48 @@ def reassemble(transformed: DataFrame) -> DataFrame:
                 "",
             ).alias("payload")
         )
-        # Spark's base64 emits RFC-2045 MIME chunking (CRLF every 76
-        # chars); the Firehose contract (and DuckDB's to_base64) is the
-        # unchunked RFC-4648 form — strip the breaks.
-        .withColumn(
-            "data",
-            F.translate(F.base64(F.col("payload").cast("binary")), "\r\n", ""),
-        )
+        .withColumn("data", unchunked_base64(F.col("payload")))
     )
 
 
 def route(decoded: DataFrame) -> DataFrame:
     """3-way dispatch (lambda/main.py:80-98): bare → Ok (pass-through,
     'data that is re-ingested'), control → ProcessingFailed, data → Ok
-    with the transformed+reassembled payload."""
-    out = reassemble(transform_message(explode_events(decoded))).select(
-        "idx",
-        F.col("payload").alias("out_payload"),
-        F.col("data").alias("out_data"),
+    with the transformed+reassembled payload.
+
+    Row-local: the reference transforms each record's own events
+    (lambda/main.py:92), so the payload is a projection over the
+    record's ``logEvents`` array — array order is event order, and
+    ``array_join`` skips a NULL-message event exactly as the
+    explode → ``reassemble`` composition does. No shuffle, no join
+    back, and ``decoded`` (with its gzip UDF) is read once."""
+    payload = F.array_join(
+        F.transform("envelope.logEvents", lambda e: rewrite_message(e.message)),
+        "",
     )
-    return (
-        decoded.join(out, "idx", "left")
-        .select(
-            "idx",
-            "record_id",
-            "kind",
-            F.when(F.col("kind").isin("control", "error"), "ProcessingFailed")
-            .otherwise("Ok")
-            .alias("result"),
-            F.when(F.col("kind") == "bare", F.col("bare_value"))
-            # empty logEvents → empty payload, not null: the reference
-            # joins an empty list to b'' (lambda/main.py:92).
-            .when(F.col("kind") == "data", F.coalesce("out_payload", F.lit("")))
-            .alias("payload"),
-            # the wire-format 'data' field of the processor result record:
-            # bare records pass the decoded string through unmodified
-            # (lambda/main.py:80-85 yields the str, not a re-encoding),
-            # data records carry the base64 of the reassembled payload
-            # (lambda/main.py:93), failed records carry none.
-            F.when(F.col("kind") == "bare", F.col("bare_value"))
-            .when(F.col("kind") == "data", F.coalesce("out_data", F.lit("")))
-            .alias("data"),
-        )
+    kind = F.col("kind")
+    return decoded.select(
+        "idx",
+        "record_id",
+        "kind",
+        F.when(kind.isin("control", "error"), "ProcessingFailed")
+        .otherwise("Ok")
+        .alias("result"),
+        F.when(kind == "bare", F.col("bare_value"))
+        # empty or NULL logEvents → empty payload, not null: the
+        # reference joins an empty list to b'' (lambda/main.py:92).
+        .when(kind == "data", F.coalesce(payload, F.lit("")))
+        .alias("payload"),
+    ).withColumn(
+        # the wire-format 'data' field of the processor result record:
+        # bare records pass the decoded string through unmodified
+        # (lambda/main.py:80-85 yields the str, not a re-encoding),
+        # data records carry the base64 of the reassembled payload
+        # (lambda/main.py:93), failed records carry none.
+        "data",
+        F.when(kind == "bare", F.col("payload")).when(
+            kind == "data", unchunked_base64(F.col("payload"))
+        ),
     )
 
 
@@ -466,8 +474,13 @@ def reingest(
     ``aggregate()`` expression fold was tried first and REJECTED:
     appending to the lambda's accumulator array copies it per element
     — O(n²) in the 8.8 k-row tail, measured slower than the loop.)"""
-    sz = F.when(F.col("result") == "ProcessingFailed", F.lit(0)).otherwise(
-        F.length("data") + F.length("record_id")
+    # A NULL data/record_id sizes 0, as the per-round window F.sum
+    # skipped it; left NULL, pandas sees NaN and poisons pack's `run`.
+    sz = F.coalesce(
+        F.when(F.col("result") == "ProcessingFailed", F.lit(0)).otherwise(
+            F.length("data") + F.length("record_id")
+        ),
+        F.lit(0),
     )
     base = split_df.select("idx", "record_id", "result", sz.alias("sz"))
     settled = base.filter(F.col("result") != "Dropped").select(
@@ -815,16 +828,10 @@ def q_decode_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrupted = records.filter(is_corrupt).withColumn(
         "data", F.substring("data", 1, 10)
     )
-    # route() consumes `decoded` twice (the reassembly subtree and the
-    # join-back side); without a barrier the corrupt slice's Arrow
-    # decode re-runs per reference (no CSE across branches — measured
-    # full key 3.2-5.6 s warm vs ~2 s with the slice checkpointed,
-    # round 14). Checkpoint ONLY the 1/29 slice: the clean side is
-    # already the session-persisted decode, and at 100 TB the barrier
-    # holds quarantine candidates, not the batch.
-    corrupt_decoded = decode_chain(corrupted).localCheckpoint()
+    # route() is row-local and reads `decoded` once, so the slice's
+    # Arrow decode runs once without a checkpoint barrier.
     decoded = decoded_records(spark, sf_dir).filter(~is_corrupt).unionByName(
-        corrupt_decoded
+        decode_chain(corrupted)
     )
     routed = route(decoded)
     return routed.groupBy("kind", "result").agg(

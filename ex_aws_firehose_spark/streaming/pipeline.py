@@ -19,7 +19,10 @@ parquet sinks on replay (idempotent file commits per epoch).
 
 At scale: the trigger interval plays the role of buffer_interval
 (main.tf:18); each sink write is append-only partitioned parquet; no
-state is kept on the driver.
+state is kept on the driver. A micro-batch runs two single-stage jobs
+(the backup write and the result-partitioned routed write) with no
+shuffle; tests/test_plans.py::test_tri_sink_batch_two_jobs_no_shuffle
+pins that shape.
 """
 
 from __future__ import annotations
@@ -117,20 +120,25 @@ def prepare_source_files(
 def tri_sink_batch(batch_df: DataFrame, batch_id: int, paths: SinkPaths) -> None:
     """One micro-batch = one reference Lambda invocation: decode, route,
     and fan out to the three sinks. The primary and error sinks are the
-    two partitions of ONE result-partitioned write, so the decode/gzip
-    chain runs exactly once per batch inside a single job (no persist
-    round-trip, one less write job than sink-per-write — per-batch data
-    is tiny, so job count IS the cost)."""
-    routed = route(decode_chain(batch_df)).withColumn(
-        "batch_id", F.lit(batch_id)
+    two partitions of ONE result-partitioned write, and ``route`` is
+    row-local, so a batch is exactly two single-stage jobs: the backup
+    write, then the routed write, whose one stage runs the gzip UDF
+    once with no exchange or join (per-batch data is tiny, so job count
+    IS the cost)."""
+    # Every routed row is Ok or ProcessingFailed, so the write needs no
+    # filter on `result`: one would be pushed below the decode and run
+    # the gzip UDF a second time.
+    routed = route(decode_chain(batch_df)).select(
+        "idx",
+        "record_id",
+        "payload",
+        "kind",
+        F.lit(batch_id).alias("batch_id"),
+        "result",
     )
     # backup: raw source records verbatim (main.tf:27-34 semantics)
     batch_df.write.mode("append").parquet(paths.backup)
-    routed.filter(
-        F.col("result").isin("Ok", "ProcessingFailed")
-    ).select(
-        "idx", "record_id", "payload", "kind", "batch_id", "result"
-    ).write.partitionBy("result").mode("append").parquet(paths.routed)
+    routed.write.partitionBy("result").mode("append").parquet(paths.routed)
 
 
 def run_stream(

@@ -15,9 +15,12 @@ from pyspark.sql import functions as F
 
 from ex_aws_firehose_spark.operators.firehose import (
     decode_chain,
+    explode_events,
     overflow_split,
+    reassemble,
     reingest,
     route,
+    transform_message,
 )
 
 RECORDS_SCHEMA = "idx long, record_id string, data string"
@@ -205,3 +208,84 @@ def test_corrupt_records_dead_letter(spark):
     assert routed["rec-badb64"]["kind"] == "error"
     assert routed["rec-badgzip"]["result"] == "ProcessingFailed"
     assert routed["rec-badgzip"]["kind"] == "error"
+
+
+def _relational_route(decoded):
+    """The explode → transform → reassemble → join-back-on-idx
+    composition that ``route`` replaced with a row-local projection."""
+    out = reassemble(transform_message(explode_events(decoded))).select(
+        "idx", F.col("payload").alias("out_payload"), F.col("data").alias("out_data")
+    )
+    kind = F.col("kind")
+    return decoded.join(out, "idx", "left").select(
+        "idx",
+        "record_id",
+        "kind",
+        F.when(kind.isin("control", "error"), "ProcessingFailed")
+        .otherwise("Ok")
+        .alias("result"),
+        F.when(kind == "bare", F.col("bare_value"))
+        .when(kind == "data", F.coalesce("out_payload", F.lit("")))
+        .alias("payload"),
+        F.when(kind == "bare", F.col("bare_value"))
+        .when(kind == "data", F.coalesce("out_data", F.lit("")))
+        .alias("data"),
+    )
+
+
+def test_row_local_route_matches_relational_composition(spark):
+    """Row-local ``route`` equals the explode → reassemble → join
+    composition on the shapes the fixtures never produce: empty and
+    NULL logEvents, NULL messages, repeated 'Hello's, a payload long
+    enough for base64 line breaks, and control/bare/corrupt records."""
+
+    def ev(i, message):
+        return {"id": f"{i:02d}", "timestamp": 1704067200000 + i, "message": message}
+
+    no_events = _env("DATA_MESSAGE", [])
+    del no_events["logEvents"]
+    envelopes = [
+        _env(
+            "DATA_MESSAGE",
+            [ev(1, "Hello Hello Hello"), ev(2, "HelloHello"), ev(3, "plain")],
+        ),
+        _env("DATA_MESSAGE", []),
+        {**_env("DATA_MESSAGE", []), "logEvents": None},
+        no_events,
+        _env("DATA_MESSAGE", [ev(4, None), ev(5, "after a Hello null")]),
+        _env("DATA_MESSAGE", [ev(6, None)]),
+        _env("DATA_MESSAGE", [ev(7, "Hello " + "x" * 300)]),
+        _env("CONTROL_MESSAGE", []),
+        "bare-Hello-payload",
+    ]
+    rows = [(i, f"rec-{i}", _encode(e)) for i, e in enumerate(envelopes)]
+    rows += [
+        (len(rows), "rec-badb64", "!!!not-base64!!!"),
+        (len(rows) + 1, "rec-badgzip", base64.b64encode(b"not gzip").decode()),
+    ]
+    decoded = decode_chain(spark.createDataFrame(rows, RECORDS_SCHEMA))
+    got = sorted(route(decoded).collect())
+    assert got == sorted(_relational_route(decoded).collect())
+    by_id = {r["record_id"]: r for r in got}
+    assert by_id["rec-0"]["payload"] == (
+        "Hell Yeah Hell Yeah Hell Yeah\nHell YeahHell Yeah\nplain\n"
+    )
+    for rid in ("rec-1", "rec-2", "rec-3", "rec-5"):
+        assert (by_id[rid]["payload"], by_id[rid]["data"]) == ("", ""), rid
+    assert by_id["rec-4"]["payload"] == "after a Hell Yeah null\n"
+    assert base64.b64decode(by_id["rec-6"]["data"]).decode() == by_id["rec-6"]["payload"]
+    assert by_id["rec-badb64"]["result"] == by_id["rec-badgzip"]["result"] == "ProcessingFailed"
+
+
+def test_route_duplicate_idx_one_row_per_record(spark):
+    """Two data records sharing an ``idx`` route to one row each, each
+    with its own payload (a join back on ``idx`` alone fans out to 4)."""
+    rows = [
+        (7, rid, _encode(_env("DATA_MESSAGE", [{"id": rid, "timestamp": 1, "message": m}])))
+        for rid, m in (("rec-a", "Hello a"), ("rec-b", "b"))
+    ]
+    routed = route(decode_chain(spark.createDataFrame(rows, RECORDS_SCHEMA))).collect()
+    assert sorted((r["record_id"], r["payload"]) for r in routed) == [
+        ("rec-a", "Hell Yeah a\n"),
+        ("rec-b", "b\n"),
+    ]

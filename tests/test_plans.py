@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from ex_aws_firehose_spark.plans.audit import (
@@ -1217,15 +1219,14 @@ def test_ivm_join_delta_broadcasts_delta_sides(spark, sf_dir):
 
 
 def test_reingest_fold_matches_loop(spark, sf_dir):
-    """Round 15: the reingest attempt loop runs as ONE aggregate()
-    fold over the idx-sorted Dropped tail. Bit-equivalence against a
-    straightforward per-round loop reference (the round-14 execution:
-    per-round running sum, deliver the prefix that fits, give up at
-    the attempt bound) on a synthetic tail exercising: exact-threshold
+    """Round 15: the reingest attempt loop runs as ONE sequential
+    greedy bin-packing pass over the idx-sorted Dropped tail.
+    Bit-equivalence against a straightforward per-round loop
+    reference (the round-14 execution: per-round running sum, deliver
+    the prefix that fits, give up at the attempt bound) on a synthetic
+    tail exercising: exact-threshold
     fit, bin rollover, an over-threshold blocker that bricks the queue
     behind it, and a queue long enough to outlast the attempt bound."""
-    from pyspark.sql import functions as F
-
     from ex_aws_firehose_spark.operators.firehose import reingest
 
     thr, max_att = 10, 5
@@ -1270,6 +1271,90 @@ def test_reingest_fold_matches_loop(spark, sf_dir):
         exp[rid] = ("Dropped", attempt)
 
     assert got == exp, (got, exp)
+
+
+def test_reingest_null_size_does_not_poison_packing(spark):
+    """A Dropped record with NULL ``data`` sizes 0, as the per-round
+    window sum skipped it: the records behind it still share bins
+    (a NULL reaching the pandas pass as NaN made every later record
+    open a new bin)."""
+    from ex_aws_firehose_spark.operators.firehose import reingest
+
+    rows = [
+        (0, "a", "Dropped", "x" * 4),  # sz 5
+        (1, "n", "Dropped", None),     # sz NULL → 0
+        (2, "b", "Dropped", "x" * 2),  # sz 3
+        (3, "c", "Dropped", "x"),      # sz 2: running sum 10 == thr
+    ]
+    split_df = spark.createDataFrame(
+        rows, "idx long, record_id string, result string, data string"
+    )
+    got = {
+        r["record_id"]: (r["final_result"], r["attempts"])
+        for r in reingest(split_df, max_attempts=5, threshold=10).collect()
+    }
+    assert got == {rid: ("Ok", 2) for rid in "anbc"}, got
+
+
+def test_tri_sink_batch_two_jobs_no_shuffle(spark, tmp_path):
+    """One delivery micro-batch is exactly two jobs (backup write,
+    routed write), and the routed write decodes once (one
+    ArrowEvalPython) with no exchange or join — a return to the
+    explode/join-back route (4 jobs, 4 gzip decodes) fails here."""
+    import base64
+    import gzip
+    import json
+
+    from ex_aws_firehose_spark.streaming.pipeline import SinkPaths, tri_sink_batch
+
+    def enc(payload):
+        return base64.b64encode(gzip.compress(json.dumps(payload).encode())).decode()
+
+    env = {
+        "messageType": "DATA_MESSAGE",
+        "logEvents": [{"id": "1", "timestamp": 1, "message": "Hello"}],
+    }
+    rows = [
+        (0, "rec-0", enc(env)),
+        (1, "rec-1", enc({**env, "messageType": "CONTROL_MESSAGE"})),
+        (2, "rec-2", enc("bare")),
+    ]
+    src = str(tmp_path / "source")
+    spark.createDataFrame(
+        rows, "idx long, record_id string, data string"
+    ).coalesce(1).write.parquet(src)
+    batch = spark.read.parquet(src)
+    routed = str(tmp_path / "routed")
+    paths = SinkPaths(
+        source=src,
+        routed=routed,
+        primary=routed + "/result=Ok",
+        backup=str(tmp_path / "backup"),
+        errors=routed + "/result=ProcessingFailed",
+        checkpoint=str(tmp_path / "checkpoint"),
+    )
+
+    sc = spark.sparkContext
+    group = f"tri_sink_structure_{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        tri_sink_batch(batch, 0, paths)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    # the executed plan of the last SQL execution: the routed write
+    plan = (
+        spark._jsparkSession.sharedState()
+        .statusStore()
+        .executionsList()
+        .last()
+        .physicalPlanDescription()
+    )
+    assert '__partition_columns=["result"]' in plan, plan
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
+    assert "Exchange" not in plan and "Join" not in plan, plan
+    assert spark.read.parquet(routed).count() == 3
 
 
 def test_bradley_terry_fold_matches_loop(spark, sf_dir):
