@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ex_aws_firehose_spark.functions.codec import gzip_compress, gzip_decompress
-from ex_aws_firehose_spark.caching import SessionCache
+from ex_aws_firehose_spark.caching import session_cached
 from ex_aws_firehose_spark.registry import query
 from ex_aws_firehose_spark.tables import load_table, spread
 
@@ -155,40 +155,26 @@ def _message_col() -> Column:
 # One materialization of the synthesized record batch per (session,
 # sf_dir): every §2.1-2.3 query starts from the same records, so without
 # this each query would re-run the groupBy+gzip synthesis from scratch.
-_RECORDS_CACHE: SessionCache = SessionCache()
 # Same for the decoded batch: the gzip-decompress UDF is the single most
 # expensive stage of the pipeline, and every downstream query
 # (explode/transform/reassemble/route/split/reingest) starts from it.
-_DECODED_CACHE: SessionCache = SessionCache()
-
-
+@session_cached
 def decoded_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """synthesize_records → decode_chain, persisted once per (session,
     sf_dir) so the gunzip UDF runs a single time across all queries."""
-    key = _DECODED_CACHE.scoped_key(spark, sf_dir)
-    cached = _DECODED_CACHE.get(key)
-    if cached is None:
-        cached = decode_chain(synthesize_records(spark, sf_dir)).persist()
-        _DECODED_CACHE[key] = cached
-    return cached
+    return decode_chain(synthesize_records(spark, sf_dir)).persist()
 
 
-_SPLIT_CACHE: SessionCache = SessionCache()
-
-
+@session_cached
 def split_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """route → overflow_split, persisted per (session, sf_dir): the
     split frame feeds several consumers inside reingest (pass-1 results,
     the Dropped selection, the union), so the route join + ordered
     window would otherwise run three times."""
-    key = _SPLIT_CACHE.scoped_key(spark, sf_dir)
-    cached = _SPLIT_CACHE.get(key)
-    if cached is None:
-        cached = overflow_split(route(decoded_records(spark, sf_dir))).persist()
-        _SPLIT_CACHE[key] = cached
-    return cached
+    return overflow_split(route(decoded_records(spark, sf_dir))).persist()
 
 
+@session_cached
 def synthesize_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events table → Firehose record batch
     ``(idx BIGINT, record_id STRING, data STRING)`` where ``data`` is
@@ -199,13 +185,7 @@ def synthesize_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality), gzip UDF Arrow-batched, no driver materialization.
     The result is persisted (MEMORY_AND_DISK) and shared across queries.
     """
-    key = _RECORDS_CACHE.scoped_key(spark, sf_dir)
-    cached = _RECORDS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    records = _synthesize_records_uncached(spark, sf_dir).persist()
-    _RECORDS_CACHE[key] = records
-    return records
+    return _synthesize_records_uncached(spark, sf_dir).persist()
 
 
 def _synthesize_records_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1120,18 +1100,12 @@ WITH logl AS (
 """
 
 
-_COL_LOG_CACHE: SessionCache = SessionCache()
-
-
+@session_cached
 def _col_log_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesized access-log lines, localCheckpointed once per
     (session, sf): three q_filter_pattern_column* keys filter the same
     frame — sharing it keeps the bench measuring the predicates, not
     repeated fixture synthesis (VERDICT r7 ask #8)."""
-    key = _COL_LOG_CACHE.scoped_key(spark, sf_dir)
-    cached = _COL_LOG_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = load_table(spark, sf_dir, "events")
     status = (
         F.when(F.col("event_id") % 7 == 0, "404")
@@ -1158,7 +1132,6 @@ def _col_log_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100).cast("long").cast("string"),
         ).alias("log_line"),
     ).localCheckpoint()
-    _COL_LOG_CACHE[key] = lines
     return lines
 
 

@@ -46,7 +46,7 @@ from ex_aws_firehose_spark.functions.vector import (
     duck_dot,
     norm,
 )
-from ex_aws_firehose_spark.caching import SessionCache
+from ex_aws_firehose_spark.caching import session_cached, tracked_mkdtemp
 from ex_aws_firehose_spark.registry import query
 from ex_aws_firehose_spark.tables import load_table, spread
 
@@ -137,22 +137,6 @@ def _minhash_oracle() -> str:
     )
 
 
-# Candidate pairs persisted per (session, sf_dir): q_dedup_clusters
-# consumes the same pair graph, so the LSH pipeline runs once — the
-# in-session analog of materializing the candidate table once and
-# running every downstream dedup consumer off it.
-_MINHASH_PAIRS_CACHE: SessionCache = SessionCache()
-# The 12-permutation signature table itself is ALSO a shared artifact:
-# q_dedup_minhash, q_dedup_incremental and q_dedup_lsh_tuning each used
-# to re-run the tokenize→shingle→md5→12-fold map over the full corpus
-# (the most compute-dense per-row map in the dedup family, ~1-2 s per
-# re-run at sf0.1 on 32 cores). One persisted build per (session,
-# sf_dir) — the in-session analog of staging the signature table to
-# parquet at ingest, which is exactly what the incremental key's
-# docstring already assumes (guide §1.2: don't recompute).
-_MINHASH_SIG_CACHE: SessionCache = SessionCache()
-
-
 def _minhash_sig_cols(d: DataFrame) -> DataFrame:
     """Per-row signature folds for a (doc_id, text) frame: (doc_id,
     m0..m11). Pure map, zero shuffles; docs shorter than the shingle
@@ -173,20 +157,22 @@ def _minhash_sig_cols(d: DataFrame) -> DataFrame:
     )
 
 
+# The 12-permutation signature table itself is a shared artifact:
+# q_dedup_minhash, q_dedup_incremental and q_dedup_lsh_tuning each used
+# to re-run the tokenize→shingle→md5→12-fold map over the full corpus
+# (the most compute-dense per-row map in the dedup family, ~1-2 s per
+# re-run at sf0.1 on 32 cores). One persisted build per (session,
+# sf_dir) — the in-session analog of staging the signature table to
+# parquet at ingest, which is exactly what the incremental key's
+# docstring already assumes (guide §1.2: don't recompute).
+@session_cached
 def minhash_sig_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus signature table (doc_id, m0..m11), built once per
     (session, sf_dir) and persisted. Consumers re-band it per their own
     (bands × rows) config — banding is a cheap explode over 12 already-
     computed columns, so sharing the SIGNATURES (not the bands) keeps
     every consumer free to choose its banding."""
-    key = _MINHASH_SIG_CACHE.scoped_key(spark, sf_dir)
-    cached = _MINHASH_SIG_CACHE.get(key)
-    if cached is None:
-        cached = _minhash_sig_cols(
-            load_table(spark, sf_dir, "documents")
-        ).persist()
-        _MINHASH_SIG_CACHE[key] = cached
-    return cached
+    return _minhash_sig_cols(load_table(spark, sf_dir, "documents")).persist()
 
 
 def _band_explode(sig: DataFrame) -> DataFrame:
@@ -216,7 +202,12 @@ def minhash_bands(d: DataFrame) -> DataFrame:
     return _band_explode(_minhash_sig_cols(d))
 
 
+# Candidate pairs persisted per (session, sf_dir): q_dedup_clusters
+# consumes the same pair graph, so the LSH pipeline runs once — the
+# in-session analog of materializing the candidate table once and
+# running every downstream dedup consumer off it.
 @query("q_dedup_minhash", oracle=_minhash_oracle(), tags=("llm", "dedup"))
+@session_cached
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup candidates via MinHash + LSH banding: 3-token shingles →
     12 minhash permutations → 4 bands × 3 rows → candidate pair iff any
@@ -227,10 +218,6 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     key is high-cardinality so the join shuffles evenly; no crossJoin
     anywhere. Permutations use deterministic seeds over md5-prefix
     hashes so the DuckDB oracle reproduces signatures bit-for-bit."""
-    key = _MINHASH_PAIRS_CACHE.scoped_key(spark, sf_dir)
-    cached = _MINHASH_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
     # Signature is computed per-row with array folds (no explode, no
     # groupBy): hash each shingle once, then take the min of each
     # permutation over the array (minhash_sig_frame — persisted and
@@ -265,7 +252,6 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist()
     )
-    _MINHASH_PAIRS_CACHE[key] = pairs
     return pairs
 
 
@@ -424,19 +410,12 @@ def _simhash_oracle(
     """
 
 
-_SIMHASH_TOK_CACHE: SessionCache = SessionCache()
-_SIMHASH_SIG_CACHE: SessionCache = SessionCache()
-
-
+@session_cached
 def _simhash_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached (doc_id, hs, hsb) per-token hash arrays shared by ALL
     SimHash widths — the md5 work runs once per (session, sf) instead
     of once per key (q_dedup_simhash + _rotate + _64 previously
     recomputed it independently; VERDICT r6 flagged the ~2× refold)."""
-    key = _SIMHASH_TOK_CACHE.scoped_key(spark, sf_dir)
-    cached = _SIMHASH_TOK_CACHE.get(key)
-    if cached is not None:
-        return cached
     d = load_table(spark, sf_dir, "documents")
     hex_hash_b = lambda c: F.conv(  # noqa: E731 — md5 digits 9-16
         F.substring(F.md5(c), 9, 8), 16, 10
@@ -446,10 +425,10 @@ def _simhash_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(tokens("text"), hex_hash).alias("hs"),
         F.transform(tokens("text"), hex_hash_b).alias("hsb"),
     ).localCheckpoint()
-    _SIMHASH_TOK_CACHE[key] = hs
     return hs
 
 
+@session_cached
 def _simhash_sig(
     spark: SparkSession, sf_dir: str, nbits: int = SIMHASH_BITS
 ) -> DataFrame:
@@ -461,10 +440,6 @@ def _simhash_sig(
     stage is shuffle-free (a pure map) at any scale. Signatures wider
     than the 32-bit token hash vote on a second independent 32-bit
     hash (md5 digits 9-16) for the high bits."""
-    skey = _SIMHASH_SIG_CACHE.scoped_key(spark, sf_dir, str(nbits))
-    sig_cached = _SIMHASH_SIG_CACHE.get(skey)
-    if sig_cached is not None:
-        return sig_cached
     hs = _simhash_tokens(spark, sf_dir)
 
     def _bit_fold(i: int):
@@ -485,7 +460,6 @@ def _simhash_sig(
     sig = bits.select(
         "doc_id", F.expr(sig_expr).alias("simhash")
     ).localCheckpoint()
-    _SIMHASH_SIG_CACHE[skey] = sig
     return sig
 
 
@@ -701,9 +675,7 @@ def _jaccard_oracle() -> str:
     """
 
 
-_SHINGLE_FRAME_CACHE: SessionCache = SessionCache()
-
-
+@session_cached
 def shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exploded (doc_id, s) distinct-shingle frame, persisted per
     (session, sf_dir) — the "tokenize the corpus once" materialization
@@ -711,10 +683,6 @@ def shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of re-deriving the split→slice→zip_with pipeline. The
     in-session analog of staging the shingle table to parquet, which
     is what a 100 TB pipeline does before its dedup passes."""
-    key = _SHINGLE_FRAME_CACHE.scoped_key(spark, sf_dir)
-    cached = _SHINGLE_FRAME_CACHE.get(key)
-    if cached is not None:
-        return cached
     # NO spread here — A/B'd both ways this round: spreading the
     # tokenize→shingle explode to 64 partitions made every consumer
     # SLOWER (containment warm 4.5 → 2.2 s, jaccard 5.7 → 2.1 s,
@@ -727,14 +695,10 @@ def shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = d.select(
         "doc_id", F.explode(shingles(tokens("text"))).alias("s")
     ).persist()
-    _SHINGLE_FRAME_CACHE[key] = sh
     return sh
 
 
-_SHINGLE_PAIRS_CACHE: SessionCache = SessionCache()
-_SHINGLE_CARD_CACHE: SessionCache = SessionCache()
-
-
+@session_cached
 def shingle_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, shared): per-pair count of co-occurring distinct
     shingles (doc_a < doc_b), generated through the shared-shingle
@@ -750,10 +714,6 @@ def shingle_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-session analog of staging the pair table before a multi-metric
     dedup pass. The bench charges the build to the
     ``_build_shingle_pairs`` prelude row."""
-    key = _SHINGLE_PAIRS_CACHE.scoped_key(spark, sf_dir)
-    cached = _SHINGLE_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
     sh = shingle_frame(spark, sf_dir)
     a, b = sh.alias("a"), sh.alias("b")
     pairs = (
@@ -768,26 +728,21 @@ def shingle_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("shared"))
         .persist()
     )
-    _SHINGLE_PAIRS_CACHE[key] = pairs
     return pairs
 
 
+@session_cached
 def shingle_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n): distinct-shingle count per document (the shingle
     frame is distinct per doc by construction — shingles() applies
     array_distinct — so COUNT(*) ≡ COUNT(DISTINCT s)). Tiny frame,
     shared by every pair-metric consumer of shingle_pair_counts."""
-    key = _SHINGLE_CARD_CACHE.scoped_key(spark, sf_dir)
-    cached = _SHINGLE_CARD_CACHE.get(key)
-    if cached is not None:
-        return cached
     card = (
         shingle_frame(spark, sf_dir)
         .groupBy("doc_id")
         .agg(F.count("*").alias("n"))
         .persist()
     )
-    _SHINGLE_CARD_CACHE[key] = card
     return card
 
 
@@ -1135,9 +1090,8 @@ def q_curate_dedup_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 STAR_MAX_ROUNDS = 12
 
-_STAR_LABELS_CACHE: SessionCache = SessionCache()
 
-
+@session_cached
 def star_components(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     """Alternating large-star/small-star connected components (Kiveris
     et al., "Connected Components in MapReduce and Beyond") over the
@@ -1162,16 +1116,11 @@ def star_components(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     over a tiny edge frame) for the identical label set (guide §1.2;
     the co_edges precedent). The bench charges the one build to the
     ``_build_star_components`` prelude row."""
-    key = _STAR_LABELS_CACHE.scoped_key(spark, sf_dir)
-    cached = _STAR_LABELS_CACHE.get(key)
-    if cached is not None:
-        return cached
     pairs = q_dedup_minhash(spark, sf_dir)
     labels, rounds = star_components_from_edges(
         pairs.selectExpr("doc_a AS a", "doc_b AS b")
     )
     labels = labels.persist()
-    _STAR_LABELS_CACHE[key] = (labels, rounds)
     return labels, rounds
 
 
@@ -1349,9 +1298,9 @@ def _ivf_e_step(e: DataFrame, cb: DataFrame) -> DataFrame:
 # collect + driver-side createDataFrame costs MORE than the lazy
 # toRdd compile it removes; the lazy-checkpoint chain pipelines all
 # rounds into the one materializing job and stays the right shape.
-_IVF_TRAIN_CACHE: SessionCache = SessionCache()
 
 
+@session_cached
 def ivf_train(
     spark: SparkSession, sf_dir: str, where: str | None = None
 ) -> tuple[DataFrame, DataFrame]:
@@ -1362,10 +1311,6 @@ def ivf_train(
     embedding). Fixed iteration count — the driver loop makes no
     .collect() calls; each k-row codebook is localCheckpoint'd so plan
     lineage stays flat across rounds (the q_dedup_clusters pattern)."""
-    key = _IVF_TRAIN_CACHE.scoped_key(spark, sf_dir, repr(where))
-    cached = _IVF_TRAIN_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding"
     )
@@ -1382,13 +1327,12 @@ def ivf_train(
     # rows rely on that for cost attribution, and the final cb RDD is
     # computed (and cached) inside the same job via its broadcast.
     # (A collected-LocalRelation state variant was A/B'd and REJECTED
-    # round 15 — see the note above _IVF_TRAIN_CACHE.)
+    # round 15 — see the note above ivf_train.)
     cb = _ivf_m_step(assigned).localCheckpoint(eager=False)
     for _ in range(IVF_ITERS):
         assigned = _ivf_e_step(e, cb)
         cb = _ivf_m_step(assigned).localCheckpoint(eager=False)
     members = _ivf_e_step(e, cb).localCheckpoint()
-    _IVF_TRAIN_CACHE[key] = (cb, members)
     return cb, members
 
 
@@ -1511,9 +1455,9 @@ def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SPLIT_RATIO = 1.0  # split cells with occupancy > ratio × mean
 SPLIT_NPROBE = 12  # equal CANDIDATE budget: 12/15 fine cells ≈ 8/10 coarse
-_IVF_SPLIT_CACHE: SessionCache = SessionCache()
 
 
+@session_cached
 def ivf_cell_split(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -1536,10 +1480,6 @@ def ivf_cell_split(
     hot cells a broadcast semi/anti join, seed election two windowed
     argmins partitioned by cell. 100 TB shape: identical to ivf_train
     (k×dim quantized partial sums shuffle; vectors never do)."""
-    key = _IVF_SPLIT_CACHE.scoped_key(spark, sf_dir)
-    cached = _IVF_SPLIT_CACHE.get(key)
-    if cached is not None:
-        return cached
     cb, members = ivf_train(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     occ = members.groupBy("cell").agg(F.count("*").alias("n"))
@@ -1589,7 +1529,6 @@ def ivf_cell_split(
     )
     cb2 = _ivf_m_step(_ivf_e_step(e, cb_seed)).localCheckpoint()
     members2 = _ivf_e_step(e, cb2).localCheckpoint()
-    _IVF_SPLIT_CACHE[key] = (cb2, members2)
     return cb2, members2
 
 
@@ -1774,9 +1713,7 @@ def _pq_oracle() -> str:
     )
 
 
-_PQ_TRAIN_CACHE: SessionCache = SessionCache()
-
-
+@session_cached
 def pq_train(
     spark: SparkSession,
     sf_dir: str,
@@ -1790,10 +1727,6 @@ def pq_train(
     (vec_id, subspace, pos, sv), the codebook the final assignment was
     made against (subspace, code, pos, icv), and the final per-vector
     codes (vec_id, subspace, code, dist)."""
-    key = _PQ_TRAIN_CACHE.scoped_key(spark, sf_dir, str(m), str(k), repr(where))
-    cached = _PQ_TRAIN_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     if where is not None:
         e = e.filter(where)
@@ -1817,7 +1750,6 @@ def pq_train(
         .localCheckpoint(eager=False)
     )
     cent, asg = _pq_lloyd(comp, k)
-    _PQ_TRAIN_CACHE[key] = (comp, cent, asg)
     return comp, cent, asg
 
 
@@ -4228,8 +4160,6 @@ GRAPH_K3 = 4  # hub-layer degree (hub -> nearest hubs)
 GRAPH_BEAM = 12  # beam width per expansion round
 GRAPH_ROUNDS = 5  # unrolled beam-expansion rounds
 
-_GRAPH_ANN_CACHE: SessionCache = SessionCache()
-
 
 def _graph_route_l2(
     vecs: DataFrame,
@@ -4349,6 +4279,7 @@ def graph_ann_build(
     return _graph_ann_parts(spark, sf_dir, where)["edges"]
 
 
+@session_cached
 def _graph_ann_parts(
     spark: SparkSession, sf_dir: str, where: str | None = None
 ) -> dict:
@@ -4356,10 +4287,6 @@ def _graph_ann_parts(
     'ladder', 'l2_cells'} so incremental maintenance
     (``q_sim_graph_ann_add`` / ``q_sim_graph_ann_compact``) can reuse
     the FROZEN layer routing and cell assignments without a rebuild."""
-    key = _GRAPH_ANN_CACHE.scoped_key(spark, sf_dir, repr(where))
-    cached = _GRAPH_ANN_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") != 0)
@@ -4533,7 +4460,6 @@ def _graph_ann_parts(
         "ladder": ladder,
         "l2_cells": l2_cells,
     }
-    _GRAPH_ANN_CACHE[key] = parts
     return parts
 
 
@@ -4734,9 +4660,7 @@ def q_sim_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PLAIN_POOL_CACHE: SessionCache = SessionCache()
-
-
+@session_cached
 def _plain_beam_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The default-query beam pool over the full-base index, session-
     cached: three serving keys consume this identical pool
@@ -4746,10 +4670,6 @@ def _plain_beam_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_sim_graph_ann_persist deliberately does NOT use it: its pool
     must derive from the RELOADED edge table or the round-trip proof
     is vacuous."""
-    key = _PLAIN_POOL_CACHE.scoped_key(spark, sf_dir)
-    cached = _PLAIN_POOL_CACHE.get(key)
-    if cached is not None:
-        return cached
     edges = graph_ann_build(spark, sf_dir)
     e = (
         load_table(spark, sf_dir, "embeddings")
@@ -4757,7 +4677,6 @@ def _plain_beam_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding", norm("embedding").alias("nrm"))
     )
     pool = _graph_beam_serve(spark, sf_dir, edges, e, e)
-    _PLAIN_POOL_CACHE[key] = pool
     return pool
 
 
@@ -7307,9 +7226,7 @@ _TOP_PC_CTES = f"""base AS (
 """
 
 
-_TOP_PC_CACHE: SessionCache = SessionCache()
-
-
+@session_cached
 def _top_pc_frames(spark: SparkSession, sf_dir: str):
     """Shared top-PC machinery (see q_embed_top_pc): returns
     (qv, v, c) where qv = (vec_id, q int8-quantized array),
@@ -7318,10 +7235,6 @@ def _top_pc_frames(spark: SparkSession, sf_dir: str):
     diagonal seeds the OPQ eigenvalue allocation — all exact int64
     and session-cached so the residual and OPQ keys reuse one Gram
     pass + power iteration."""
-    key = _TOP_PC_CACHE.scoped_key(spark, sf_dir)
-    cached = _TOP_PC_CACHE.get(key)
-    if cached is not None:
-        return cached
 
     from collections.abc import Iterator
 
@@ -7427,7 +7340,6 @@ def _top_pc_frames(spark: SparkSession, sf_dir: str):
             .localCheckpoint()
         )
     qv = qv.localCheckpoint()
-    _TOP_PC_CACHE[key] = (qv, v, c)
     return qv, v, c
 
 
@@ -8303,18 +8215,11 @@ def _span_islands_cte(k: int = SPAN_K) -> str:
     """
 
 
-_SPAN_SH_CACHE: SessionCache = SessionCache()
-_SPAN_FRAME_CACHE: SessionCache = SessionCache()
-
-
+@session_cached
 def _span_positioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached positioned-shingle frame (doc_id, 1-based pos, 60-bit h)
     shared by the whole span-dedup family — localCheckpointed once per
     (session, sf) so the explode+hash runs once, not once per key."""
-    key = _SPAN_SH_CACHE.scoped_key(spark, sf_dir)
-    cached = _SPAN_SH_CACHE.get(key)
-    if cached is not None:
-        return cached
     d = load_table(spark, sf_dir, "documents")
     sh = (
         d.select("doc_id", F.posexplode(_positioned_shingle_col(SPAN_K)))
@@ -8325,18 +8230,14 @@ def _span_positioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    _SPAN_SH_CACHE[key] = sh
     return sh
 
 
+@session_cached
 def _span_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, span_start, span_tokens) maximal cross-doc duplicated
     spans — the Spark side of the shared CTE chain above. Cached per
     (session, sf): q_dedup_spans and q_dedup_span_stats share it."""
-    fkey = _SPAN_FRAME_CACHE.scoped_key(spark, sf_dir)
-    cached = _SPAN_FRAME_CACHE.get(fkey)
-    if cached is not None:
-        return cached
     k = SPAN_K
     sh = _span_positioned(spark, sf_dir)
     dup = (
@@ -8363,7 +8264,6 @@ def _span_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("pos").cast("long").alias("span_start"),
         (F.max("pos") - F.min("pos") + k).cast("long").alias("span_tokens"),
     )
-    _SPAN_FRAME_CACHE[fkey] = spans
     return spans
 
 
@@ -8514,9 +8414,7 @@ def _bpe_train_oracle(rounds: int = BPE_TRAIN_ROUNDS) -> str:
     return "WITH " + ",\n    ".join(ctes) + "\n    " + union
 
 
-_BPE_ROUNDS_CACHE: SessionCache = SessionCache()
-
-
+@session_cached
 def bpe_rounds(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[DataFrame], list[DataFrame]]:
@@ -8526,10 +8424,6 @@ def bpe_rounds(
     localCheckpointed, computed ONCE per (session, sf). Train and
     encode run the identical merge sequence by construction, and the
     K pair-count shuffles happen once, not once per key."""
-    key = _BPE_ROUNDS_CACHE.scoped_key(spark, sf_dir)
-    cached = _BPE_ROUNDS_CACHE.get(key)
-    if cached is not None:
-        return cached
     d = load_table(spark, sf_dir, "documents")
     cur = d.select(
         "doc_id", F.split(F.lower("text"), " ").alias("t")
@@ -8576,7 +8470,6 @@ def bpe_rounds(
         )
         states.append(cur)
         bests.append(best)
-    _BPE_ROUNDS_CACHE[key] = (states, bests)
     return states, bests
 
 
@@ -10242,9 +10135,6 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INDEX_PERSIST_CACHE: SessionCache = SessionCache()
-
-
 @query(
     "q_sim_index_persist",
     oracle=_adc_oracle(),
@@ -10267,35 +10157,29 @@ def q_sim_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens once, serving reads only these tables — which this key
     proves by construction (its serving plan's only other input is the
     query vector)."""
-    import os
-    import tempfile
-
     cent, codes, cb, members = load_persisted_index(spark, sf_dir)
     return _adc_serve(spark, sf_dir, cent, codes, cb, members, TOPK)
 
 
+@session_cached
 def persisted_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage (once per session, sf) the four index artifacts to parquet
     and return the root — shared by q_sim_index_persist and the
     streaming serving key."""
     import os
-    import tempfile
 
-    key = _INDEX_PERSIST_CACHE.scoped_key(spark, sf_dir)
-    if key not in _INDEX_PERSIST_CACHE:
-        comp, cent, codes = pq_train(spark, sf_dir, ADC_M, ADC_K)
-        cb, members = ivf_train(spark, sf_dir)
-        root = tempfile.mkdtemp(prefix="ann_index_")
-        cent.write.parquet(os.path.join(root, "pq_codebook"))
-        codes.write.parquet(os.path.join(root, "pq_codes"))
-        cb.write.parquet(os.path.join(root, "ivf_codebook"))
-        # inverted lists partitioned BY CELL at rest: a probe of
-        # ADC_NPROBE cells is a partition-pruned scan, never a full read
-        members.write.partitionBy("cell").parquet(
-            os.path.join(root, "ivf_members")
-        )
-        _INDEX_PERSIST_CACHE[key] = root
-    return _INDEX_PERSIST_CACHE[key]
+    comp, cent, codes = pq_train(spark, sf_dir, ADC_M, ADC_K)
+    cb, members = ivf_train(spark, sf_dir)
+    root = tracked_mkdtemp(prefix="ann_index_")
+    cent.write.parquet(os.path.join(root, "pq_codebook"))
+    codes.write.parquet(os.path.join(root, "pq_codes"))
+    cb.write.parquet(os.path.join(root, "ivf_codebook"))
+    # inverted lists partitioned BY CELL at rest: a probe of
+    # ADC_NPROBE cells is a partition-pruned scan, never a full read
+    members.write.partitionBy("cell").parquet(
+        os.path.join(root, "ivf_members")
+    )
+    return root
 
 
 def load_persisted_index(
@@ -11419,8 +11303,6 @@ def _wmh_oracle() -> str:
     JOIN wtot b ON b.doc_id = i.db
     WHERE i.num * 1000000 // (a.t + b.t - i.num) >= {WMH_THRESH_PPM}
     """
-
-
 
 
 def _wmh_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14471,15 +14353,12 @@ _UNIGRAM_EM_FINAL = """
 """
 
 
-_UNIGRAM_EM_CACHE: SessionCache = SessionCache()
-_UNIGRAM_PRUNE_CACHE: SessionCache = SessionCache()
-
-
 @query(
     "q_tokenizer_unigram_em",
     oracle=_UNIGRAM_EM_CTES + _UNIGRAM_EM_FINAL,
     tags=("llm", "tokenizer"),
 )
+@session_cached
 def q_tokenizer_unigram_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE unigram-LM EM re-estimation round (Kudo 2018, SentencePiece
     §3.2) on top of q_tokenizer_unigram_seed's candidate vocabulary:
@@ -14528,10 +14407,6 @@ def q_tokenizer_unigram_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     # returned frame is vocabulary-grain (≤ ~54 rows), checkpointed so
     # the chain materializes exactly once per session; the em key's
     # own bench row carries the build (it sorts first in the family).
-    _emk = _UNIGRAM_EM_CACHE.scoped_key(spark, sf_dir)
-    _emc = _UNIGRAM_EM_CACHE.get(_emk)
-    if _emc is not None:
-        return _emc
     d = load_table(spark, sf_dir, "documents")
     # localCheckpoint: the distinct-token table (Zipf-bounded, ~31 rows
     # at every fixture SF) feeds chars, the seed top-k, AND the Viterbi
@@ -14693,7 +14568,6 @@ def q_tokenizer_unigram_em(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    _UNIGRAM_EM_CACHE[_emk] = out
     return out
 
 
@@ -15306,6 +15180,7 @@ _UNIGRAM_PRUNE_CTES = _UNIGRAM_EM_CTES + f""",
     oracle=_UNIGRAM_PRUNE_CTES + " SELECT * FROM prunetab",
     tags=("llm", "tokenizer"),
 )
+@session_cached
 def q_tokenizer_unigram_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM vocabulary PRUNE — the step after the EM round that
     completes the SentencePiece trainer loop (seed → EM → prune, Kudo
@@ -15333,10 +15208,6 @@ def q_tokenizer_unigram_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     Viterbi, map-only), re-run through the same cached lineage."""
     # Session-cached like the EM frame above: encode re-derives the
     # prune table per call; the output is vocabulary-grain.
-    _prk = _UNIGRAM_PRUNE_CACHE.scoped_key(spark, sf_dir)
-    _prc = _UNIGRAM_PRUNE_CACHE.get(_prk)
-    if _prc is not None:
-        return _prc
     em = q_tokenizer_unigram_em(spark, sf_dir)
     chcost = em.filter(F.length("piece") == 1).select(
         F.col("piece").alias("ch"),
@@ -15399,7 +15270,6 @@ def q_tokenizer_unigram_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(True).alias("kept"),
     )
     out = rankedp.unionByName(chars).localCheckpoint()
-    _UNIGRAM_PRUNE_CACHE[_prk] = out
     return out
 
 
@@ -16928,10 +16798,10 @@ def q_sim_graph_ann_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_sim_index_persist's index-as-data contract)
 # ---------------------------------------------------------------------------
 
-_GRAPH_PERSIST_CACHE: SessionCache = SessionCache()
 GRAPH_PERSIST_BUCKETS = 16  # src-hash buckets of the edge table at rest
 
 
+@session_cached
 def graph_persisted_edges_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage (once per session, sf) the navigable graph's ONE index
     artifact — the symmetrized degree-bounded edge table — to parquet,
@@ -16941,22 +16811,18 @@ def graph_persisted_edges_dir(spark: SparkSession, sf_dir: str) -> str:
     buckets instead of scanning the table. Layer membership needs no
     artifact — it is the deterministic ``vec_id % mod`` samples."""
     import os
-    import tempfile
 
-    key = _GRAPH_PERSIST_CACHE.scoped_key(spark, sf_dir)
-    if key not in _GRAPH_PERSIST_CACHE:
-        edges = graph_ann_build(spark, sf_dir)
-        root = tempfile.mkdtemp(prefix="graph_index_")
-        (
-            edges.withColumn(
-                "bucket", F.pmod("src", F.lit(GRAPH_PERSIST_BUCKETS))
-            )
-            .repartition("bucket")
-            .write.partitionBy("bucket")
-            .parquet(os.path.join(root, "edges"))
+    edges = graph_ann_build(spark, sf_dir)
+    root = tracked_mkdtemp(prefix="graph_index_")
+    (
+        edges.withColumn(
+            "bucket", F.pmod("src", F.lit(GRAPH_PERSIST_BUCKETS))
         )
-        _GRAPH_PERSIST_CACHE[key] = root
-    return _GRAPH_PERSIST_CACHE[key]
+        .repartition("bucket")
+        .write.partitionBy("bucket")
+        .parquet(os.path.join(root, "edges"))
+    )
+    return root
 
 
 @query(

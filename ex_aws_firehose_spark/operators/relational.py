@@ -33,7 +33,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ex_aws_firehose_spark.caching import SessionCache
+from ex_aws_firehose_spark.caching import session_cached, tracked_mkdtemp
 from ex_aws_firehose_spark.registry import query
 from ex_aws_firehose_spark.tables import load_table, spread
 
@@ -1508,12 +1508,10 @@ def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.filter(bucket % 20 == 0).select("doc_id", "source")
 
 
-# Bucketed-table cache: (session id, sf_dir) -> True once the bucketed
-# copies of orders/lineitem exist in the session catalog.
-_BUCKETED_READY: SessionCache = SessionCache()
 _BUCKETS = 8
 
 
+@session_cached
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders and lineitem as bucketed tables (8 buckets on the
     join key) under a temp warehouse path, once per session+sf. Bucketed
@@ -1521,32 +1519,28 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     sides land pre-hashed on the join key, so every later equi-join on
     that key skips its Exchange entirely."""
     import hashlib
-    import tempfile
 
     suffix = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     o_name, l_name = f"orders_b_{suffix}", f"lineitem_b_{suffix}"
-    key = _BUCKETED_READY.scoped_key(spark, sf_dir)
-    if key not in _BUCKETED_READY:
-        root = tempfile.mkdtemp(prefix="bucketed_")
-        # Column-pruned at write time: a bucketed layout is built FOR the
-        # repeated join/agg on its key, so it stores the key + the columns
-        # those downstream plans read — not the full fact width (at 100 TB
-        # the unused-column write cost dominates; prune there too).
-        for name, table, bucket_col, cols in (
-            (o_name, "orders", "o_orderkey", ["o_orderkey", "o_orderpriority"]),
-            (l_name, "lineitem", "l_orderkey", ["l_orderkey", "l_extendedprice"]),
-        ):
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            (
-                load_table(spark, sf_dir, table)
-                .select(*cols)
-                .write.bucketBy(_BUCKETS, bucket_col)
-                .sortBy(bucket_col)
-                .option("path", f"{root}/{name}")
-                .mode("overwrite")
-                .saveAsTable(name)
-            )
-        _BUCKETED_READY[key] = True
+    root = tracked_mkdtemp(prefix="bucketed_")
+    # Column-pruned at write time: a bucketed layout is built FOR the
+    # repeated join/agg on its key, so it stores the key + the columns
+    # those downstream plans read — not the full fact width (at 100 TB
+    # the unused-column write cost dominates; prune there too).
+    for name, table, bucket_col, cols in (
+        (o_name, "orders", "o_orderkey", ["o_orderkey", "o_orderpriority"]),
+        (l_name, "lineitem", "l_orderkey", ["l_orderkey", "l_extendedprice"]),
+    ):
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        (
+            load_table(spark, sf_dir, table)
+            .select(*cols)
+            .write.bucketBy(_BUCKETS, bucket_col)
+            .sortBy(bucket_col)
+            .option("path", f"{root}/{name}")
+            .mode("overwrite")
+            .saveAsTable(name)
+        )
     return o_name, l_name
 
 

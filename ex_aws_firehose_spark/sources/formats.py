@@ -15,34 +15,13 @@ remains the analytics path.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ex_aws_firehose_spark.caching import SessionCache
+from ex_aws_firehose_spark.caching import session_cached, tracked_mkdtemp
 from ex_aws_firehose_spark.operators.relational import _cents
 from ex_aws_firehose_spark.registry import query
 from ex_aws_firehose_spark.tables import load_table
-
-_TMP_DIRS: list[str] = []
-
-
-def _tracked_mkdtemp(prefix: str) -> str:
-    """mkdtemp whose directory is removed at interpreter exit — the
-    side-effect caches below otherwise leak one dir per (session, sf)."""
-    path = tempfile.mkdtemp(prefix=prefix)
-    _TMP_DIRS.append(path)
-    return path
-
-
-@atexit.register
-def _cleanup_tmp_dirs() -> None:
-    for d in _TMP_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
 
 EVENTS_JSON_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -55,27 +34,22 @@ EVENTS_JSON_SCHEMA = (
 # tz-offset-carrying pattern applies on both write and read.)
 TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
-_JSONL_CACHE: SessionCache = SessionCache()
-
-
+@session_cached
 def write_events_jsonl_gz(spark: SparkSession, sf_dir: str) -> str:
     """events → gzip'd JSON-lines directory (one object per partition),
     the reference's delivered-object format. Cached per (session, sf)."""
-    key = _JSONL_CACHE.scoped_key(spark, sf_dir)
-    if key not in _JSONL_CACHE:
-        path = _tracked_mkdtemp(prefix="events_jsonl_") + "/data"
-        e = load_table(spark, sf_dir, "events")
-        (
-            e.select(
-                F.to_json(
-                    F.struct(*e.columns), {"timestampFormat": TS_FORMAT}
-                ).alias("value")
-            )
-            .write.option("compression", "gzip")
-            .text(path)
+    path = tracked_mkdtemp(prefix="events_jsonl_") + "/data"
+    e = load_table(spark, sf_dir, "events")
+    (
+        e.select(
+            F.to_json(
+                F.struct(*e.columns), {"timestampFormat": TS_FORMAT}
+            ).alias("value")
         )
-        _JSONL_CACHE[key] = path
-    return _JSONL_CACHE[key]
+        .write.option("compression", "gzip")
+        .text(path)
+    )
+    return path
 
 
 def read_events_jsonl_gz(spark: SparkSession, path: str) -> DataFrame:
@@ -116,9 +90,6 @@ def src_format_jsonl_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CSV_CACHE: SessionCache = SessionCache()
-_PARTITIONED_CACHE: SessionCache = SessionCache()
-
 ORDERS_CSV_SCHEMA = (
     "o_orderkey long, o_custkey long, o_orderstatus string, "
     "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string"
@@ -127,6 +98,18 @@ ORDERS_CSV_SCHEMA = (
 # o_orderdate is TIMESTAMP_NTZ (tz-naive parquet ms) — the CSV codec
 # keys its format off the NTZ option, not timestampFormat.
 TS_NTZ_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
+
+
+@session_cached
+def _stage_orders_csv(spark: SparkSession, sf_dir: str) -> str:
+    path = tracked_mkdtemp(prefix="orders_csv_") + "/data"
+    (
+        load_table(spark, sf_dir, "orders")
+        .write.option("header", True)
+        .option("timestampNTZFormat", TS_NTZ_FORMAT)
+        .csv(path)
+    )
+    return path
 
 
 @query(
@@ -151,21 +134,11 @@ def src_format_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     but schema-on-read with no pushdown — the scan reads every byte, so
     this format is an ingest boundary only, converted to parquet in the
     first pass."""
-    key = _CSV_CACHE.scoped_key(spark, sf_dir)
-    if key not in _CSV_CACHE:
-        path = _tracked_mkdtemp(prefix="orders_csv_") + "/data"
-        (
-            load_table(spark, sf_dir, "orders")
-            .write.option("header", True)
-            .option("timestampNTZFormat", TS_NTZ_FORMAT)
-            .csv(path)
-        )
-        _CSV_CACHE[key] = path
     o = (
         spark.read.schema(ORDERS_CSV_SCHEMA)
         .option("header", True)
         .option("timestampNTZFormat", TS_NTZ_FORMAT)
-        .csv(_CSV_CACHE[key])
+        .csv(_stage_orders_csv(spark, sf_dir))
     )
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     return o.groupBy("o_orderpriority").agg(
@@ -173,6 +146,23 @@ def src_format_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum(cents) / 100.0).alias("total_price"),
         F.min("o_orderdate").alias("first_order"),
     )
+
+
+@session_cached
+def _stage_orders_partitioned(spark: SparkSession, sf_dir: str) -> str:
+    path = tracked_mkdtemp(prefix="orders_part_") + "/data"
+    (
+        load_table(spark, sf_dir, "orders")
+        # NOT clustered by the partition column (round 15, measured
+        # and left): repartition("o_orderpriority") was A/B'd
+        # wall-clock-flat (2.34 vs 2.37 s staged-cold) and 5
+        # distinct values would collapse the write to 5 tasks — a
+        # skew hazard at scale that the q_join_dpp treatment (83
+        # month values) does not have.
+        .write.partitionBy("o_orderpriority")
+        .parquet(path)
+    )
+    return path
 
 
 @query(
@@ -195,22 +185,7 @@ def src_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-order I/O lever: partition by the dominant filter column
     (date, tenant), keep per-partition file counts bounded, and let
     pruning turn a full-table scan into a touched-partition scan."""
-    key = _PARTITIONED_CACHE.scoped_key(spark, sf_dir)
-    if key not in _PARTITIONED_CACHE:
-        path = _tracked_mkdtemp(prefix="orders_part_") + "/data"
-        (
-            load_table(spark, sf_dir, "orders")
-            # NOT clustered by the partition column (round 15, measured
-            # and left): repartition("o_orderpriority") was A/B'd
-            # wall-clock-flat (2.34 vs 2.37 s staged-cold) and 5
-            # distinct values would collapse the write to 5 tasks — a
-            # skew hazard at scale that the q_join_dpp treatment (83
-            # month values) does not have.
-            .write.partitionBy("o_orderpriority")
-            .parquet(path)
-        )
-        _PARTITIONED_CACHE[key] = path
-    o = spark.read.parquet(_PARTITIONED_CACHE[key])
+    o = spark.read.parquet(_stage_orders_partitioned(spark, sf_dir))
     pruned = o.filter(
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     )
@@ -221,9 +196,11 @@ def src_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORC_CACHE: SessionCache = SessionCache()
-_EVOLVED_CACHE: SessionCache = SessionCache()
-_SINK_PART_CACHE: SessionCache = SessionCache()
+@session_cached
+def _stage_events_orc(spark: SparkSession, sf_dir: str) -> str:
+    path = tracked_mkdtemp(prefix="events_orc_") + "/data"
+    load_table(spark, sf_dir, "events").write.orc(path)
+    return path
 
 
 @query(
@@ -247,12 +224,7 @@ def src_format_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushdown + column pruning work the same as parquet via the
     vectorized reader); at 100 TB it exists for interop with
     Hive-lineage warehouses, not as the preferred sink."""
-    key = _ORC_CACHE.scoped_key(spark, sf_dir)
-    if key not in _ORC_CACHE:
-        path = _tracked_mkdtemp(prefix="events_orc_") + "/data"
-        load_table(spark, sf_dir, "events").write.orc(path)
-        _ORC_CACHE[key] = path
-    e = spark.read.orc(_ORC_CACHE[key])
+    e = spark.read.orc(_stage_events_orc(spark, sf_dir))
     return e.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias(
@@ -260,6 +232,23 @@ def src_format_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.max("ts").alias("max_ts"),
     )
+
+
+@session_cached
+def _stage_orders_evolved(spark: SparkSession, sf_dir: str) -> str:
+    path = tracked_mkdtemp(prefix="orders_evo_") + "/data"
+    o = load_table(spark, sf_dir, "orders")
+    # generation 1: even orderkeys, original columns only
+    o.filter(F.col("o_orderkey") % 2 == 0).select(
+        "o_orderkey", "o_orderstatus"
+    ).write.mode("append").parquet(path)
+    # generation 2: odd orderkeys ship an additional column
+    o.filter(F.col("o_orderkey") % 2 == 1).select(
+        "o_orderkey",
+        "o_orderstatus",
+        F.length("o_orderpriority").alias("o_comment_len"),
+    ).write.mode("append").parquet(path)
+    return path
 
 
 @query(
@@ -286,23 +275,8 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB, mergeSchema's footer sampling is an extra planning cost,
     so production pins the merged schema in a catalog and reads
     schema-first; the NULL back-fill semantics are identical."""
-    key = _EVOLVED_CACHE.scoped_key(spark, sf_dir)
-    if key not in _EVOLVED_CACHE:
-        path = _tracked_mkdtemp(prefix="orders_evo_") + "/data"
-        o = load_table(spark, sf_dir, "orders")
-        # generation 1: even orderkeys, original columns only
-        o.filter(F.col("o_orderkey") % 2 == 0).select(
-            "o_orderkey", "o_orderstatus"
-        ).write.mode("append").parquet(path)
-        # generation 2: odd orderkeys ship an additional column
-        o.filter(F.col("o_orderkey") % 2 == 1).select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.length("o_orderpriority").alias("o_comment_len"),
-        ).write.mode("append").parquet(path)
-        _EVOLVED_CACHE[key] = path
     merged = spark.read.option("mergeSchema", True).parquet(
-        _EVOLVED_CACHE[key]
+        _stage_orders_evolved(spark, sf_dir)
     )
     return merged.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
@@ -311,6 +285,26 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("comment_chars"),
     )
+
+
+@session_cached
+def _stage_events_sink(spark: SparkSession, sf_dir: str) -> str:
+    path = tracked_mkdtemp(prefix="events_sink_") + "/data"
+    e = load_table(spark, sf_dir, "events")
+    # NOT clustered by event_type before the write (round 15,
+    # measured and left): A/B'd flat (1.89 vs 2.04 s staged-cold)
+    # and ~10 distinct types would collapse the write to 10 tasks.
+    e.write.partitionBy("event_type").parquet(path)
+    reprocessed = e.filter(F.col("event_type") == "click").withColumn(
+        "value", F.col("value") * 2
+    )
+    (
+        reprocessed.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_type")
+        .parquet(path)
+    )
+    return path
 
 
 @query(
@@ -336,25 +330,7 @@ def sink_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The read-back aggregate proves both halves: 'click' shows doubled
     cents, every other partition shows the original bytes."""
-    key = _SINK_PART_CACHE.scoped_key(spark, sf_dir)
-    if key not in _SINK_PART_CACHE:
-        path = _tracked_mkdtemp(prefix="events_sink_") + "/data"
-        e = load_table(spark, sf_dir, "events")
-        # NOT clustered by event_type before the write (round 15,
-        # measured and left): A/B'd flat (1.89 vs 2.04 s staged-cold)
-        # and ~10 distinct types would collapse the write to 10 tasks.
-        e.write.partitionBy("event_type").parquet(path)
-        reprocessed = e.filter(F.col("event_type") == "click").withColumn(
-            "value", F.col("value") * 2
-        )
-        (
-            reprocessed.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("event_type")
-            .parquet(path)
-        )
-        _SINK_PART_CACHE[key] = path
-    back = spark.read.parquet(_SINK_PART_CACHE[key])
+    back = spark.read.parquet(_stage_events_sink(spark, sf_dir))
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias(
@@ -363,8 +339,25 @@ def sink_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BINARYFILE_CACHE: SessionCache = SessionCache()
 N_BINARY_FILES = 100
+
+
+@session_cached
+def _stage_blobs(spark: SparkSession, sf_dir: str) -> str:
+    import os
+
+    root = tracked_mkdtemp(prefix="blobs_") + "/data"
+    os.makedirs(root, exist_ok=True)
+    rows = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < N_BINARY_FILES)
+        .select("doc_id", "text")
+        .collect()
+    )
+    for r in rows:
+        with open(os.path.join(root, f"{r['doc_id']:08d}.bin"), "wb") as f:
+            f.write(r["text"].encode("utf-8"))
+    return root
 
 
 @query(
@@ -388,23 +381,7 @@ def src_format_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost scales with file count); the first pass repacks blobs into
     few-GB parquet files with the binary column + metadata, which every
     q_multimodal_* key then operates on."""
-    import os
-
-    key = _BINARYFILE_CACHE.scoped_key(spark, sf_dir)
-    if key not in _BINARYFILE_CACHE:
-        root = _tracked_mkdtemp(prefix="blobs_") + "/data"
-        os.makedirs(root, exist_ok=True)
-        rows = (
-            load_table(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < N_BINARY_FILES)
-            .select("doc_id", "text")
-            .collect()
-        )
-        for r in rows:
-            with open(os.path.join(root, f"{r['doc_id']:08d}.bin"), "wb") as f:
-                f.write(r["text"].encode("utf-8"))
-        _BINARYFILE_CACHE[key] = root
-    blobs = spark.read.format("binaryFile").load(_BINARYFILE_CACHE[key])
+    blobs = spark.read.format("binaryFile").load(_stage_blobs(spark, sf_dir))
     return blobs.select(
         F.regexp_extract(
             F.col("path"), r"(\d{8})\.bin$", 1
@@ -414,7 +391,22 @@ def src_format_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_XML_CACHE: SessionCache = SessionCache()
+@session_cached
+def _stage_events_xml(spark: SparkSession, sf_dir: str) -> str:
+    path = tracked_mkdtemp(prefix="events_xml_") + "/data"
+    (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_id") < 200)
+        .select(
+            "event_id",
+            "event_type",
+            _cents("value").alias("value_cents"),
+        )
+        .write.option("rowTag", "event")
+        .format("xml")
+        .save(path)
+    )
+    return path
 
 
 @query(
@@ -438,33 +430,39 @@ def src_format_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     an ingest boundary only; first pass converts to parquet. rowTag
     splitting is line-agnostic, so files stay splittable for parallel
     parse."""
-    key = _XML_CACHE.scoped_key(spark, sf_dir)
-    if key not in _XML_CACHE:
-        path = _tracked_mkdtemp(prefix="events_xml_") + "/data"
-        (
-            load_table(spark, sf_dir, "events")
-            .filter(F.col("event_id") < 200)
-            .select(
-                "event_id",
-                "event_type",
-                _cents("value").alias("value_cents"),
-            )
-            .write.option("rowTag", "event")
-            .format("xml")
-            .save(path)
-        )
-        _XML_CACHE[key] = path
     return (
         spark.read.format("xml")
         .option("rowTag", "event")
         .schema("event_id long, event_type string, value_cents long")
-        .load(_XML_CACHE[key])
+        .load(_stage_events_xml(spark, sf_dir))
     )
 
 
-_COMPACT_CACHE: SessionCache = SessionCache()
 COMPACT_FRAGMENTS = 64
 COMPACT_TARGET_FILES = 4
+
+
+def _count_parquet(path: str) -> int:
+    import os
+
+    return sum(
+        1
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(".")
+    )
+
+
+@session_cached
+def _stage_compaction(spark: SparkSession, sf_dir: str):
+    """(fragmented dir, its file count, compacted dir, its file count)."""
+    frag = tracked_mkdtemp(prefix="orders_frag_") + "/data"
+    o = load_table(spark, sf_dir, "orders")
+    o.repartition(COMPACT_FRAGMENTS).write.parquet(frag)
+    compacted = tracked_mkdtemp(prefix="orders_compact_") + "/data"
+    spark.read.parquet(frag).repartition(
+        COMPACT_TARGET_FILES
+    ).write.parquet(compacted)
+    return frag, _count_parquet(frag), compacted, _count_parquet(compacted)
 
 
 @query(
@@ -498,31 +496,7 @@ def q_maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     never coalesce(1)). Run it continuously behind streaming sinks;
     pair with partition-grain dynamic overwrite (sink_partitioned_
     write) for idempotence."""
-    import os
-
-    def _count_parquet(path: str) -> int:
-        return sum(
-            1
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith(".")
-        )
-
-    key = _COMPACT_CACHE.scoped_key(spark, sf_dir)
-    if key not in _COMPACT_CACHE:
-        frag = _tracked_mkdtemp(prefix="orders_frag_") + "/data"
-        o = load_table(spark, sf_dir, "orders")
-        o.repartition(COMPACT_FRAGMENTS).write.parquet(frag)
-        compacted = _tracked_mkdtemp(prefix="orders_compact_") + "/data"
-        spark.read.parquet(frag).repartition(
-            COMPACT_TARGET_FILES
-        ).write.parquet(compacted)
-        _COMPACT_CACHE[key] = (
-            frag,
-            _count_parquet(frag),
-            compacted,
-            _count_parquet(compacted),
-        )
-    frag, n_before, compacted, n_after = _COMPACT_CACHE[key]
+    frag, n_before, compacted, n_after = _stage_compaction(spark, sf_dir)
     before = spark.read.parquet(frag).agg(
         F.count("*").alias("rows_before"),
         F.sum(_cents("o_totalprice")).alias("cents_before"),
@@ -540,13 +514,33 @@ def q_maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TEXT_CACHE: SessionCache = SessionCache()
-_FIXEDW_CACHE: SessionCache = SessionCache()
-
 # Fixed-width column layout (byte offsets, 1-based): the mainframe/
 # COBOL copybook shape. Widths chosen to hold the extreme values of
 # each field with room (epoch micros ≤ 20 digits, cents ≤ 14).
 _FW_TS, _FW_TYPE, _FW_USER, _FW_ID, _FW_CENTS = 20, 10, 12, 12, 14
+
+
+@session_cached
+def _stage_events_fixed_width(spark: SparkSession, sf_dir: str) -> str:
+    path = tracked_mkdtemp(prefix="events_fixedw_") + "/data"
+    pad = lambda c, w: F.lpad(c.cast("string"), w, " ")  # noqa: E731
+    (
+        load_table(spark, sf_dir, "events")
+        .select(
+            F.concat(
+                pad(F.unix_micros("ts"), _FW_TS),
+                F.rpad(F.col("event_type"), _FW_TYPE, " "),
+                pad(F.col("user_id"), _FW_USER),
+                pad(F.col("event_id"), _FW_ID),
+                pad(
+                    F.round(F.col("value") * 100, 0).cast("long"),
+                    _FW_CENTS,
+                ),
+            ).alias("value")
+        )
+        .write.text(path)
+    )
+    return path
 
 
 @query(
@@ -576,28 +570,7 @@ def src_format_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen (cheaper than CSV's quote/escape state
     machine).  Like all ingest-boundary formats: first pass converts
     to parquet; no pushdown exists in a text scan."""
-    key = _FIXEDW_CACHE.scoped_key(spark, sf_dir)
-    if key not in _FIXEDW_CACHE:
-        path = _tracked_mkdtemp(prefix="events_fixedw_") + "/data"
-        pad = lambda c, w: F.lpad(c.cast("string"), w, " ")  # noqa: E731
-        (
-            load_table(spark, sf_dir, "events")
-            .select(
-                F.concat(
-                    pad(F.unix_micros("ts"), _FW_TS),
-                    F.rpad(F.col("event_type"), _FW_TYPE, " "),
-                    pad(F.col("user_id"), _FW_USER),
-                    pad(F.col("event_id"), _FW_ID),
-                    pad(
-                        F.round(F.col("value") * 100, 0).cast("long"),
-                        _FW_CENTS,
-                    ),
-                ).alias("value")
-            )
-            .write.text(path)
-        )
-        _FIXEDW_CACHE[key] = path
-    lines = spark.read.text(_FIXEDW_CACHE[key])
+    lines = spark.read.text(_stage_events_fixed_width(spark, sf_dir))
     o_type = _FW_TS + 1
     o_user = o_type + _FW_TYPE
     o_cents = o_user + _FW_USER + _FW_ID
@@ -615,6 +588,29 @@ def src_format_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").alias("value_cents"),
         F.sum("user_id").alias("sum_users"),
     )
+
+
+@session_cached
+def _stage_events_text(spark: SparkSession, sf_dir: str) -> str:
+    path = tracked_mkdtemp(prefix="events_text_") + "/data"
+    (
+        load_table(spark, sf_dir, "events")
+        .select(
+            F.concat_ws(
+                " ",
+                F.concat(F.lit("ts_us="), F.unix_micros("ts")),
+                F.concat(F.lit("type="), F.col("event_type")),
+                F.concat(F.lit("user="), F.col("user_id")),
+                F.concat(F.lit("id="), F.col("event_id")),
+                F.concat(
+                    F.lit("cents="),
+                    F.round(F.col("value") * 100, 0).cast("long"),
+                ),
+            ).alias("value")
+        )
+        .write.text(path)
+    )
+    return path
 
 
 @query(
@@ -643,28 +639,7 @@ def src_format_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass converts to parquet. Malformed lines regexp-extract to '' and
     cast to NULL rather than failing the job (the permissive-mode
     contract a log-ingest path needs)."""
-    key = _TEXT_CACHE.scoped_key(spark, sf_dir)
-    if key not in _TEXT_CACHE:
-        path = _tracked_mkdtemp(prefix="events_text_") + "/data"
-        (
-            load_table(spark, sf_dir, "events")
-            .select(
-                F.concat_ws(
-                    " ",
-                    F.concat(F.lit("ts_us="), F.unix_micros("ts")),
-                    F.concat(F.lit("type="), F.col("event_type")),
-                    F.concat(F.lit("user="), F.col("user_id")),
-                    F.concat(F.lit("id="), F.col("event_id")),
-                    F.concat(
-                        F.lit("cents="),
-                        F.round(F.col("value") * 100, 0).cast("long"),
-                    ),
-                ).alias("value")
-            )
-            .write.text(path)
-        )
-        _TEXT_CACHE[key] = path
-    lines = spark.read.text(_TEXT_CACHE[key])
+    lines = spark.read.text(_stage_events_text(spark, sf_dir))
     ex = lambda pat: F.regexp_extract("value", pat, 1)  # noqa: E731
     parsed = lines.select(
         F.timestamp_micros(
@@ -759,7 +734,25 @@ def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DPP_CACHE: SessionCache = SessionCache()
+@session_cached
+def _stage_lineitem_by_month(spark: SparkSession, sf_dir: str) -> str:
+    path = tracked_mkdtemp(prefix="lineitem_bymonth_") + "/data"
+    (
+        load_table(spark, sf_dir, "lineitem")
+        .withColumn(
+            "ship_month", F.date_format("l_shipdate", "yyyy-MM")
+        )
+        # Round 15 (guide §6 — output file sizing): cluster by the
+        # partition column before the partitioned write. Without
+        # it every input task writes one file into EVERY month dir
+        # (tasks × ~84 months tiny files); with it each month is
+        # one file — fewer files to create at write time and fewer
+        # to open on the DPP-pruned read. Same rows, same result.
+        .repartition("ship_month")
+        .write.partitionBy("ship_month")
+        .parquet(path)
+    )
+    return path
 
 
 @query(
@@ -799,26 +792,7 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition scan. The dim subquery reuses the join's own broadcast
     (no extra fact-side work), and the layout write is the same
     one-time repartitionByRange investment as q_layout_zorder."""
-    key = _DPP_CACHE.scoped_key(spark, sf_dir)
-    if key not in _DPP_CACHE:
-        path = _tracked_mkdtemp(prefix="lineitem_bymonth_") + "/data"
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .withColumn(
-                "ship_month", F.date_format("l_shipdate", "yyyy-MM")
-            )
-            # Round 15 (guide §6 — output file sizing): cluster by the
-            # partition column before the partitioned write. Without
-            # it every input task writes one file into EVERY month dir
-            # (tasks × ~84 months tiny files); with it each month is
-            # one file — fewer files to create at write time and fewer
-            # to open on the DPP-pruned read. Same rows, same result.
-            .repartition("ship_month")
-            .write.partitionBy("ship_month")
-            .parquet(path)
-        )
-        _DPP_CACHE[key] = path
-    fact = spark.read.parquet(_DPP_CACHE[key])
+    fact = spark.read.parquet(_stage_lineitem_by_month(spark, sf_dir))
     dim = (
         load_table(spark, sf_dir, "orders")
         .filter(F.year("o_orderdate") == 1996)
@@ -837,7 +811,24 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MULTILINE_CACHE: SessionCache = SessionCache()
+@session_cached
+def _stage_events_multiline_json(spark: SparkSession, sf_dir: str) -> str:
+    path = tracked_mkdtemp(prefix="events_mljson_") + "/data"
+    e = load_table(spark, sf_dir, "events")
+    (
+        e.groupBy((F.col("user_id") % 8).alias("pid"))
+        .agg(
+            F.to_json(
+                F.collect_list(F.struct(*e.columns)),
+                {"timestampFormat": TS_FORMAT},
+            ).alias("value")
+        )
+        # one array per FILE: multiLine=true parses a whole file as
+        # ONE JSON document, so co-located arrays would be dropped
+        .write.partitionBy("pid")
+        .text(path)
+    )
+    return path
 
 
 @query(
@@ -865,29 +856,11 @@ def src_format_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary only; the first pass converts to parquet, and upstream
     producers should cap file sizes. Schema-first read skips the
     inference pass (a full extra scan at scale)."""
-    key = _MULTILINE_CACHE.scoped_key(spark, sf_dir)
-    if key not in _MULTILINE_CACHE:
-        path = _tracked_mkdtemp(prefix="events_mljson_") + "/data"
-        e = load_table(spark, sf_dir, "events")
-        (
-            e.groupBy((F.col("user_id") % 8).alias("pid"))
-            .agg(
-                F.to_json(
-                    F.collect_list(F.struct(*e.columns)),
-                    {"timestampFormat": TS_FORMAT},
-                ).alias("value")
-            )
-            # one array per FILE: multiLine=true parses a whole file as
-            # ONE JSON document, so co-located arrays would be dropped
-            .write.partitionBy("pid")
-            .text(path)
-        )
-        _MULTILINE_CACHE[key] = path
     ev = (
         spark.read.schema(EVENTS_JSON_SCHEMA)
         .option("multiLine", True)
         .option("timestampFormat", TS_FORMAT)
-        .json(_MULTILINE_CACHE[key])
+        .json(_stage_events_multiline_json(spark, sf_dir))
     )
     return ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -901,7 +874,6 @@ def src_format_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Python DataSource API — no spark-avro jar in this environment)
 # ---------------------------------------------------------------------------
 
-_AVRO_CACHE: SessionCache = SessionCache()
 AVRO_SHARDS = 4
 
 _AVRO_EVENT_SCHEMA = {
@@ -915,6 +887,59 @@ _AVRO_EVENT_SCHEMA = {
         {"name": "value_cents", "type": "long"},
     ],
 }
+
+
+@session_cached
+def _stage_events_avro(spark: SparkSession, sf_dir: str) -> str:
+    import os
+
+    import pandas as pd
+
+    from ex_aws_firehose_spark.sources.avro import write_avro_ocf
+
+    root = tracked_mkdtemp(prefix="events_avro_") + "/data"
+    os.makedirs(root, exist_ok=True)
+    # Staging runs DISTRIBUTED (one task per shard via a grouped
+    # pandas stage) instead of fetchall()-ing every event row to
+    # the driver and encoding serially there — same bytes (same
+    # rows, same event_id order, same encoder), but the Python
+    # encode parallelizes per shard and the driver never holds the
+    # table (guide §5). Executors share the local FS here; at scale
+    # the shard writer lands on shared storage the same way.
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id",
+        F.unix_micros("ts").alias("ts_us"),
+        "event_type",
+        "user_id",
+        F.round(F.col("value") * 100).cast("long").alias("value_cents"),
+        (F.col("event_id") % AVRO_SHARDS).alias("shard"),
+    )
+
+    def _write_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        shard = int(pdf["shard"].iloc[0])
+        pdf = pdf.sort_values("event_id")
+        # .tolist() yields plain Python ints — the varint encoder's
+        # shift arithmetic must not run on numpy fixed-width types.
+        rows = list(
+            zip(
+                pdf["event_id"].tolist(),
+                pdf["ts_us"].tolist(),
+                pdf["event_type"].tolist(),
+                pdf["user_id"].tolist(),
+                pdf["value_cents"].tolist(),
+            )
+        )
+        write_avro_ocf(
+            os.path.join(root, f"part-{shard}.avro"),
+            _AVRO_EVENT_SCHEMA,
+            rows,
+        )
+        return pd.DataFrame({"shard": [shard], "n": [len(rows)]})
+
+    ev.groupBy("shard").applyInPandas(
+        _write_shard, "shard long, n long"
+    ).collect()
+    return root
 
 
 @query(
@@ -949,64 +974,13 @@ def src_format_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     A few giant container files parallelize across the whole cluster;
     rows cross the Python boundary once, as Arrow columns, at the
     ingest edge and should land in parquet in the same hop."""
-    import os
+    from ex_aws_firehose_spark.sources.avro import register_avro_datasource
 
-    from ex_aws_firehose_spark.sources.avro import (
-        register_avro_datasource,
-        write_avro_ocf,
-    )
-
-    key = _AVRO_CACHE.scoped_key(spark, sf_dir)
-    if key not in _AVRO_CACHE:
-        import pandas as pd
-
-        root = _tracked_mkdtemp(prefix="events_avro_") + "/data"
-        os.makedirs(root, exist_ok=True)
-        # Staging runs DISTRIBUTED (one task per shard via a grouped
-        # pandas stage) instead of fetchall()-ing every event row to
-        # the driver and encoding serially there — same bytes (same
-        # rows, same event_id order, same encoder), but the Python
-        # encode parallelizes per shard and the driver never holds the
-        # table (guide §5). Executors share the local FS here; at scale
-        # the shard writer lands on shared storage the same way.
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id",
-            F.unix_micros("ts").alias("ts_us"),
-            "event_type",
-            "user_id",
-            F.round(F.col("value") * 100).cast("long").alias("value_cents"),
-            (F.col("event_id") % AVRO_SHARDS).alias("shard"),
-        )
-
-        def _write_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            shard = int(pdf["shard"].iloc[0])
-            pdf = pdf.sort_values("event_id")
-            # .tolist() yields plain Python ints — the varint encoder's
-            # shift arithmetic must not run on numpy fixed-width types.
-            rows = list(
-                zip(
-                    pdf["event_id"].tolist(),
-                    pdf["ts_us"].tolist(),
-                    pdf["event_type"].tolist(),
-                    pdf["user_id"].tolist(),
-                    pdf["value_cents"].tolist(),
-                )
-            )
-            write_avro_ocf(
-                os.path.join(root, f"part-{shard}.avro"),
-                _AVRO_EVENT_SCHEMA,
-                rows,
-            )
-            return pd.DataFrame({"shard": [shard], "n": [len(rows)]})
-
-        ev.groupBy("shard").applyInPandas(
-            _write_shard, "shard long, n long"
-        ).collect()
-        _AVRO_CACHE[key] = root
+    root = _stage_events_avro(spark, sf_dir)
     register_avro_datasource(spark)
     return spark.read.format("avro_ocf").option(
         "split_size", 65536
-    ).load(_AVRO_CACHE[key]).select(
+    ).load(root).select(
         "event_id",
         F.timestamp_micros(F.col("ts_us")).alias("ts"),
         "event_type",
@@ -1015,7 +989,22 @@ def src_format_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORPHAN_CACHE: SessionCache = SessionCache()
+@session_cached
+def _stage_orphan_table(spark: SparkSession, sf_dir: str) -> str:
+    root = tracked_mkdtemp(prefix="orphan_tbl_") + "/data"
+    (
+        load_table(spark, sf_dir, "orders")
+        .select(
+            (F.col("o_orderkey") % 10).alias("grp"),
+            F.round(F.col("o_totalprice") * 100, 0)
+            .cast("long")
+            .alias("cents"),
+        )
+        .repartition("grp")
+        .write.partitionBy("grp")
+        .parquet(root)
+    )
+    return root
 
 
 @query(
@@ -1055,23 +1044,7 @@ def q_maintenance_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload, one scan + broadcast status join on the partition key.
     The staged layout pins one file per group (repartition by the
     partition key before partitionBy), so counts are deterministic."""
-    key = _ORPHAN_CACHE.scoped_key(spark, sf_dir)
-    if key not in _ORPHAN_CACHE:
-        root = _tracked_mkdtemp(prefix="orphan_tbl_") + "/data"
-        (
-            load_table(spark, sf_dir, "orders")
-            .select(
-                (F.col("o_orderkey") % 10).alias("grp"),
-                F.round(F.col("o_totalprice") * 100, 0)
-                .cast("long")
-                .alias("cents"),
-            )
-            .repartition("grp")
-            .write.partitionBy("grp")
-            .parquet(root)
-        )
-        _ORPHAN_CACHE[key] = root
-    root = _ORPHAN_CACHE[key]
+    root = _stage_orphan_table(spark, sf_dir)
     listing = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.parquet")
@@ -1117,10 +1090,10 @@ def q_maintenance_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Manifest-pruned read (Iceberg/Delta file skipping from first principles)
 # ---------------------------------------------------------------------------
 
-_MANIFEST_CACHE: SessionCache = SessionCache()
 _MP_LO, _MP_HI = "1997-01-01 00:00:00", "1997-04-01 00:00:00"
 
 
+@session_cached
 def _stage_manifest_table(spark: SparkSession, sf_dir: str):
     """Stage orders clustered one-file-per-month + a stats manifest.
 
@@ -1129,15 +1102,11 @@ def _stage_manifest_table(spark: SparkSession, sf_dir: str):
     single data page), exactly what an Iceberg manifest file carries
     per data file. Driver-side loop is file-count grain (≈80 files),
     the same planning cost Iceberg pays on its coordinator."""
-    key = _MANIFEST_CACHE.scoped_key(spark, sf_dir)
-    cached = _MANIFEST_CACHE.get(key)
-    if cached is not None:
-        return cached
     import os
 
     import pyarrow.parquet as pq
 
-    root = _tracked_mkdtemp(prefix="orders_manifest_") + "/data"
+    root = tracked_mkdtemp(prefix="orders_manifest_") + "/data"
     (
         load_table(spark, sf_dir, "orders")
         .select(
@@ -1172,7 +1141,7 @@ def _stage_manifest_table(spark: SparkSession, sf_dir: str):
                 (fpath, min(mins).isoformat(sep=" "),
                  max(maxs).isoformat(sep=" "), nrows)
             )
-    mdir = _tracked_mkdtemp(prefix="orders_manifest_meta_")
+    mdir = tracked_mkdtemp(prefix="orders_manifest_meta_")
     os.makedirs(mdir + "/manifest", exist_ok=True)
     # the manifest is driver-side METADATA — write it with pyarrow
     # directly (a createDataFrame-backed write pays a ~5 s/job
@@ -1191,8 +1160,7 @@ def _stage_manifest_table(spark: SparkSession, sf_dir: str):
         ),
         mdir + "/manifest/part-0.parquet",
     )
-    _MANIFEST_CACHE[key] = (root, mdir + "/manifest", len(manifest))
-    return _MANIFEST_CACHE[key]
+    return root, mdir + "/manifest", len(manifest)
 
 
 def manifest_pruned_paths(
@@ -1290,8 +1258,6 @@ BLOOM_BITS = 32768
 BLOOM_K = 3
 BLOOM_PROBE_CUSTKEY = 42
 
-_BLOOM_CACHE: SessionCache = SessionCache()
-
 
 def _bloom_positions_col(custkey) -> "F.Column":
     """BLOOM_K md5-derived bit positions for a customer key — the
@@ -1317,6 +1283,7 @@ def _bloom_positions_sql(expr: str) -> list[str]:
     return out
 
 
+@session_cached
 def _bloom_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-file bloom 'manifest': the DISTINCT (month, bit position)
     set of every file's o_custkey values — built in ONE scan at
@@ -1324,10 +1291,6 @@ def _bloom_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes its bloom/value-set metadata. Kept as a position set here;
     a production manifest packs the positions into BLOOM_BITS/64 int64
     words per file — the membership DECISION below is identical."""
-    key = _BLOOM_CACHE.scoped_key(spark, sf_dir)
-    cached = _BLOOM_CACHE.get(key)
-    if cached is not None:
-        return cached
     root, _manifest, _n = _stage_manifest_table(spark, sf_dir)
     bloom = (
         spark.read.parquet(root)
@@ -1338,7 +1301,6 @@ def _bloom_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    _BLOOM_CACHE[key] = bloom
     return bloom
 
 
@@ -1448,7 +1410,6 @@ def q_read_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ZORDER_BITS = 6  # 64 buckets per dimension
 ZORDER_FILE_SHIFT = 4  # z >> 4 → 256 z-contiguous files (4×4 buckets each)
-_ZORDER_CACHE: SessionCache = SessionCache()
 _Z_CK_LO, _Z_CK_HI = 1000, 2000  # custkey probe range (2-D predicate)
 
 
@@ -1471,16 +1432,13 @@ def _z_interleave_sql(db: str, cb: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
+@session_cached
 def _stage_zorder_table(spark: SparkSession, sf_dir: str):
     """Stage orders Z-ORDERED on (o_orderdate, o_custkey): quantize
     both dims to 2^ZORDER_BITS buckets over their exact [min,max],
     interleave the bits (Morton code), and write one file per
     z >> ZORDER_FILE_SHIFT — 64 z-contiguous files, each covering a
     small rectangle of the (date, custkey) plane."""
-    key = _ZORDER_CACHE.scoped_key(spark, sf_dir)
-    cached = _ZORDER_CACHE.get(key)
-    if cached is not None:
-        return cached
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -1518,9 +1476,8 @@ def _stage_zorder_table(spark: SparkSession, sf_dir: str):
             _z_interleave_spark(F.col("db"), F.col("cb")), ZORDER_FILE_SHIFT
         ).alias("z_file"),
     )
-    root = _tracked_mkdtemp(prefix="orders_zorder_") + "/data"
+    root = tracked_mkdtemp(prefix="orders_zorder_") + "/data"
     staged.repartition("z_file").write.partitionBy("z_file").parquet(root)
-    _ZORDER_CACHE[key] = root
     return root
 
 
@@ -1704,9 +1661,9 @@ def q_layout_zorder_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 IDX_PROBE_CUSTKEY = 77
-_SECIDX_CACHE: SessionCache = SessionCache()
 
 
+@session_cached
 def _secondary_index(spark: SparkSession, sf_dir: str) -> str:
     """Inverted secondary index on o_custkey: the DISTINCT (custkey,
     month-file) pairs of the staged table, written once as an index
@@ -1714,12 +1671,8 @@ def _secondary_index(spark: SparkSession, sf_dir: str) -> str:
     bloom (probabilistic, fixed-size) this is the exact structure —
     bigger (|distinct pairs| rows) but zero false positives; the two
     keys together price the classic index-vs-sketch trade."""
-    key = _SECIDX_CACHE.scoped_key(spark, sf_dir)
-    cached = _SECIDX_CACHE.get(key)
-    if cached is not None:
-        return cached
     root, _manifest, _n = _stage_manifest_table(spark, sf_dir)
-    idx_dir = _tracked_mkdtemp(prefix="orders_secidx_") + "/index"
+    idx_dir = tracked_mkdtemp(prefix="orders_secidx_") + "/index"
     (
         spark.read.parquet(root)
         .select("o_custkey", F.col("month").cast("string").alias("month"))
@@ -1727,7 +1680,6 @@ def _secondary_index(spark: SparkSession, sf_dir: str) -> str:
         .repartition(4, "o_custkey")
         .write.parquet(idx_dir)
     )
-    _SECIDX_CACHE[key] = idx_dir
     return idx_dir
 
 
@@ -1808,23 +1760,19 @@ def q_read_secondary_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Snapshot-isolation read over a manifest-committed table
 # ---------------------------------------------------------------------------
 
-_SNAPSHOT_CACHE: SessionCache = SessionCache()
 SNAP_GROUPS = 5  # staged commits (one per o_orderkey % SNAP_GROUPS slice)
 SNAP_PIN = 3  # the snapshot reads only the first SNAP_PIN commits
 
 
+@session_cached
 def _stage_committed_table(spark: SparkSession, sf_dir: str):
     """Stage a manifest-committed orders table as SNAP_GROUPS ordered
     commits: data file first, then a manifest entry carrying a
     monotonically increasing commit_id — the append-only commit log
     every table format keeps."""
-    key = _SNAPSHOT_CACHE.scoped_key(spark, sf_dir)
-    cached = _SNAPSHOT_CACHE.get(key)
-    if cached is not None:
-        return cached
     import os
 
-    base = _tracked_mkdtemp(prefix="orders_snap_")
+    base = tracked_mkdtemp(prefix="orders_snap_")
     data, man = os.path.join(base, "data"), os.path.join(base, "manifest")
     # localCheckpoint: each commit's coalesce(1) write would otherwise
     # re-run the full scan lineage — 5 commits cost 5 table scans
@@ -1853,8 +1801,7 @@ def _stage_committed_table(spark: SparkSession, sf_dir: str):
             ),
             os.path.join(man, f"commit-{commit_id}.parquet"),
         )
-    _SNAPSHOT_CACHE[key] = (data, man)
-    return _SNAPSHOT_CACHE[key]
+    return data, man
 
 
 @query(
@@ -1948,18 +1895,13 @@ SNAP_REF_LOG = [
     (4, "main", "branch", 4),
 ]
 
-_REFS_CACHE: SessionCache = SessionCache()
 
-
+@session_cached
 def _stage_ref_log(spark: SparkSession, sf_dir: str) -> str:
     """Write the ref log beside the committed table's manifest — the
     same driver-side metadata write the commit log uses."""
     import os
 
-    key = _REFS_CACHE.scoped_key(spark, sf_dir)
-    cached = _REFS_CACHE.get(key)
-    if cached is not None:
-        return cached
     data, man = _stage_committed_table(spark, sf_dir)
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -1978,7 +1920,6 @@ def _stage_ref_log(spark: SparkSession, sf_dir: str) -> str:
         ),
         os.path.join(refs_dir, "reflog.parquet"),
     )
-    _REFS_CACHE[key] = refs_dir
     return refs_dir
 
 
@@ -2502,7 +2443,7 @@ def q_table_cherry_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch_files = {
         c: p for c, p in commit_paths.items() if c <= CHERRY_BASE
     }
-    pick_dir = _tracked_mkdtemp(prefix="cherry_pick_")
+    pick_dir = tracked_mkdtemp(prefix="cherry_pick_")
     next_commit = SNAP_GROUPS
     out = None
     for c in CHERRY_PICKS:
@@ -2562,8 +2503,6 @@ def q_table_cherry_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
 MAN_COMPACT_CUT = SNAP_PIN  # commits < CUT merge into one base manifest
 REF_COMPACT_SEQ = 2  # ref entries with seq <= this collapse to resolutions
 
-_MAN_COMPACT_CACHE: SessionCache = SessionCache()
-
 
 def _current_log_dirs(base: str) -> tuple:
     """Resolve the live (manifest, refs) dir names through the CURRENT
@@ -2585,6 +2524,7 @@ def _current_log_dirs(base: str) -> tuple:
     return os.path.join(base, "manifest"), os.path.join(base, "refs")
 
 
+@session_cached
 def _compact_logs(spark: SparkSession, sf_dir: str) -> dict:
     """Iceberg ``rewrite_manifests`` over the committed table's commit
     log AND ref log: merge the commit entries below ``MAN_COMPACT_CUT``
@@ -2596,10 +2536,6 @@ def _compact_logs(spark: SparkSession, sf_dir: str) -> dict:
     atomically by swapping the CURRENT pointer. Data files are never
     touched; the rewritten logs are snapshot-equivalent by
     construction and pinned so by the pre/post law test."""
-    key = _MAN_COMPACT_CACHE.scoped_key(spark, sf_dir)
-    cached = _MAN_COMPACT_CACHE.get(key)
-    if cached is not None:
-        return cached
     import json as _json
     import os
 
@@ -2681,7 +2617,6 @@ def _compact_logs(spark: SparkSession, sf_dir: str) -> dict:
         _json.dump({"manifest": "manifest-rewrite", "refs": "refs-rewrite"}, f)
     os.replace(tmp, os.path.join(base, "CURRENT"))
     out = {"base": base, "data": data, "stats": stats}
-    _MAN_COMPACT_CACHE[key] = out
     return out
 
 
@@ -2778,11 +2713,11 @@ def q_maintenance_rewrite_manifests(
 # Partition-spec evolution (Iceberg spec-id semantics from first principles)
 # ---------------------------------------------------------------------------
 
-_PE_CACHE: SessionCache = SessionCache()
 _PE_CUTOFF = "2024-01-16"
 _PE_LO, _PE_HI = "2024-01-12", "2024-01-22"
 
 
+@session_cached
 def _stage_partition_evolution(spark: SparkSession, sf_dir: str):
     """Stage events under TWO partition specs, Iceberg-style: history
     written under spec 0 (week-grain dirs, rows before _PE_CUTOFF),
@@ -2791,16 +2726,12 @@ def _stage_partition_evolution(spark: SparkSession, sf_dir: str):
     SPEC. Returns (paths-by-spec manifest rows, files_total)."""
     import os
 
-    key = _PE_CACHE.scoped_key(spark, sf_dir)
-    cached = _PE_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = load_table(spark, sf_dir, "events").select(
         "ts",
         "event_id",
         _cents("value").alias("cents"),
     )
-    root = _tracked_mkdtemp(prefix="events_specevo_")
+    root = tracked_mkdtemp(prefix="events_specevo_")
     old = e.filter(F.col("ts") < F.lit(_PE_CUTOFF).cast("timestamp"))
     new = e.filter(F.col("ts") >= F.lit(_PE_CUTOFF).cast("timestamp"))
     (
@@ -2823,8 +2754,7 @@ def _stage_partition_evolution(spark: SparkSession, sf_dir: str):
         for d in sorted(os.listdir(sdir)):
             if d.startswith("pk="):
                 manifest.append((spec_id, d[3:], grain_days, f"{sdir}/{d}"))
-    _PE_CACHE[key] = (manifest, len(manifest))
-    return _PE_CACHE[key]
+    return manifest, len(manifest)
 
 
 @query(
@@ -2918,10 +2848,10 @@ def q_read_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Iceberg-v2 position deletes: merge-on-read via _metadata row_index
 # ---------------------------------------------------------------------------
 
-_PD_CACHE: SessionCache = SessionCache()
 _PD_MOD = 37
 
 
+@session_cached
 def _stage_position_deletes(spark: SparkSession, sf_dir: str):
     """Write an Iceberg-v2-style POSITION DELETE file against the
     month-staged orders table: scan the real data files once, record
@@ -2929,12 +2859,8 @@ def _stage_position_deletes(spark: SparkSession, sf_dir: str):
     predicate (o_orderkey % _PD_MOD == 0) — exactly what an Iceberg
     delete writer persists. Returns (data_root, delete_dir,
     n_deleted)."""
-    key = _PD_CACHE.scoped_key(spark, sf_dir)
-    cached = _PD_CACHE.get(key)
-    if cached is not None:
-        return cached
     root, _manifest, _n = _stage_manifest_table(spark, sf_dir)
-    ddir = _tracked_mkdtemp(prefix="orders_posdel_") + "/deletes"
+    ddir = tracked_mkdtemp(prefix="orders_posdel_") + "/deletes"
     dels = (
         spark.read.parquet(root)
         .filter(F.col("o_orderkey") % _PD_MOD == 0)
@@ -2945,8 +2871,7 @@ def _stage_position_deletes(spark: SparkSession, sf_dir: str):
     )
     dels.write.parquet(ddir)
     n_deleted = spark.read.parquet(ddir).count()
-    _PD_CACHE[key] = (root, ddir, n_deleted)
-    return _PD_CACHE[key]
+    return root, ddir, n_deleted
 
 
 @query(
@@ -3019,22 +2944,18 @@ def q_read_position_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Iceberg-v2 equality deletes (the key-predicate complement to positions)
 # ---------------------------------------------------------------------------
 
-_ED_CACHE: SessionCache = SessionCache()
 _ED_MOD = 101
 
 
+@session_cached
 def _stage_equality_deletes(spark: SparkSession, sf_dir: str):
     """Write an Iceberg-v2 EQUALITY delete file against the
     month-staged orders table: a parquet of o_custkey VALUES (no
     positions — the delete applies wherever the key appears, which is
     what makes equality deletes cheap to write for CDC upserts).
     Returns (data_root, delete_dir, n_del_keys, n_del_rows)."""
-    key = _ED_CACHE.scoped_key(spark, sf_dir)
-    cached = _ED_CACHE.get(key)
-    if cached is not None:
-        return cached
     root, _manifest, _n = _stage_manifest_table(spark, sf_dir)
-    ddir = _tracked_mkdtemp(prefix="orders_eqdel_") + "/deletes"
+    ddir = tracked_mkdtemp(prefix="orders_eqdel_") + "/deletes"
     base = spark.read.parquet(root)
     (
         base.filter(F.col("o_custkey") % _ED_MOD == 0)
@@ -3044,8 +2965,7 @@ def _stage_equality_deletes(spark: SparkSession, sf_dir: str):
     )
     n_del_keys = spark.read.parquet(ddir).count()
     n_del_rows = base.filter(F.col("o_custkey") % _ED_MOD == 0).count()
-    _ED_CACHE[key] = (root, ddir, n_del_keys, n_del_rows)
-    return _ED_CACHE[key]
+    return root, ddir, n_del_keys, n_del_rows
 
 
 @query(
@@ -3174,11 +3094,11 @@ def q_read_incremental_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MERGE INTO as ONE atomic manifest commit (updates + deletes + inserts)
 # ---------------------------------------------------------------------------
 
-_MERGE_CACHE: SessionCache = SessionCache()
 _MERGE_MOD = 7  # source batch: ~1/7 updated, ~1/7 deleted, ~1/7 inserted
 _MERGE_BUMP = 1000  # cents added by the update branch
 
 
+@session_cached
 def _stage_merge_commit(spark: SparkSession, sf_dir: str):
     """Apply a MERGE INTO source batch against the manifest-committed
     orders table as ONE atomic commit, Iceberg-MoR style: the commit
@@ -3202,12 +3122,8 @@ def _stage_merge_commit(spark: SparkSession, sf_dir: str):
     manifest/."""
     import os
 
-    key = _MERGE_CACHE.scoped_key(spark, sf_dir)
-    cached = _MERGE_CACHE.get(key)
-    if cached is not None:
-        return cached
     data, man = _stage_committed_table(spark, sf_dir)
-    mdir = _tracked_mkdtemp(prefix="orders_merge_")
+    mdir = tracked_mkdtemp(prefix="orders_merge_")
     base = merge_read(spark, data, man, None).localCheckpoint()
     mod = F.col("o_orderkey") % _MERGE_MOD
     upserts = (
@@ -3243,10 +3159,7 @@ def _stage_merge_commit(spark: SparkSession, sf_dir: str):
         ),
         mdir + "/manifest/commit.parquet",
     )
-    _MERGE_CACHE[key] = (
-        data, man, mdir, n_updated, n_deleted, n_inserted,
-    )
-    return _MERGE_CACHE[key]
+    return data, man, mdir, n_updated, n_deleted, n_inserted
 
 
 def merge_read(
@@ -3368,9 +3281,8 @@ def q_table_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Delete compaction: equality deletes -> position deletes (v2 maintenance)
 # ---------------------------------------------------------------------------
 
-_DC_CACHE: SessionCache = SessionCache()
 
-
+@session_cached
 def _stage_delete_compaction(spark: SparkSession, sf_dir: str):
     """Run the equality→position delete compaction that real v2
     compactors perform as equality deletes age: scan the data ONCE,
@@ -3382,14 +3294,10 @@ def _stage_delete_compaction(spark: SparkSession, sf_dir: str):
     n_eq_keys_in, n_pos_rows_out, n_files_touched, n_files_total)."""
     import os
 
-    key = _DC_CACHE.scoped_key(spark, sf_dir)
-    cached = _DC_CACHE.get(key)
-    if cached is not None:
-        return cached
     root, eq_dir, n_eq_keys, _n_del_rows = _stage_equality_deletes(
         spark, sf_dir
     )
-    pdir = _tracked_mkdtemp(prefix="orders_delcompact_") + "/pos_deletes"
+    pdir = tracked_mkdtemp(prefix="orders_delcompact_") + "/pos_deletes"
     base = spark.read.parquet(root).select(
         "o_custkey",
         F.col("_metadata.file_path").alias("file_path"),
@@ -3412,10 +3320,7 @@ def _stage_delete_compaction(spark: SparkSession, sf_dir: str):
         for f in os.listdir(os.path.join(root, d))
         if f.endswith(".parquet") and not f.startswith(".")
     )
-    _DC_CACHE[key] = (
-        root, pdir, n_eq_keys, n_pos_rows, n_files_touched, n_files_total,
-    )
-    return _DC_CACHE[key]
+    return root, pdir, n_eq_keys, n_pos_rows, n_files_touched, n_files_total
 
 
 @query(
@@ -3512,15 +3417,15 @@ def q_maintenance_delete_compaction(
 # directory as part of its GC semantics, and the staging is
 # session-cached — so after that key has run once in a session, the f0/
 # f1 pre-compaction DATA files are gone while the manifests still list
-# them for historical snapshots. Any future key sharing _EXPIRE_CACHE
+# them for historical snapshots. Any future key sharing _stage_expire_table
 # must read through the MANIFESTS of retained snapshots only (or
 # re-stage into its own cache) — never the expired snapshots' data
 # paths, whose presence depends on execution order within the session.
-_EXPIRE_CACHE: SessionCache = SessionCache()
 EXP_SLICES = 4  # o_orderkey % EXP_SLICES partitions the base table
 EXP_RETAIN = 2  # retention policy: keep the newest 2 snapshots
 
 
+@session_cached
 def _stage_expire_table(spark: SparkSession, sf_dir: str):
     """Stage a committed table whose history makes GC non-trivial:
     appends f0, f1 → a COMPACTION rewriting both into C → appends f2,
@@ -3532,14 +3437,10 @@ def _stage_expire_table(spark: SparkSession, sf_dir: str):
     snapshots: s0={f0} s1={f0,f1} s2={C} s3={C,f2} s4={C,f2,f3}."""
     import os
 
-    key = _EXPIRE_CACHE.scoped_key(spark, sf_dir)
-    cached = _EXPIRE_CACHE.get(key)
-    if cached is not None:
-        return cached
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    base = _tracked_mkdtemp(prefix="orders_expire_")
+    base = tracked_mkdtemp(prefix="orders_expire_")
     data = os.path.join(base, "data")
     o = (
         load_table(spark, sf_dir, "orders")
@@ -3592,7 +3493,6 @@ def _stage_expire_table(spark: SparkSession, sf_dir: str):
         ),
         os.path.join(base, "snapshots.parquet"),
     )
-    _EXPIRE_CACHE[key] = base
     return base
 
 
@@ -3722,10 +3622,10 @@ def q_maintenance_expire_snapshots(
 # audits (the Netflix/Iceberg WAP pattern from first principles)
 # ---------------------------------------------------------------------------
 
-_WAP_CACHE: SessionCache = SessionCache()
 WAP_SLICES = 4  # o_orderkey % WAP_SLICES
 
 
+@session_cached
 def _stage_wap_table(spark: SparkSession, sf_dir: str):
     """Stage the WAP fixture: a published base (slices 0,1), a CLEAN
     incoming batch (slice 2), and a CORRUPT batch (slice 1 again — its
@@ -3734,11 +3634,7 @@ def _stage_wap_table(spark: SparkSession, sf_dir: str):
     manifest; nothing is on the main branch but the base."""
     import os
 
-    key = _WAP_CACHE.scoped_key(spark, sf_dir)
-    cached = _WAP_CACHE.get(key)
-    if cached is not None:
-        return cached
-    base = _tracked_mkdtemp(prefix="orders_wap_")
+    base = tracked_mkdtemp(prefix="orders_wap_")
     o = (
         load_table(spark, sf_dir, "orders")
         .select(
@@ -3760,8 +3656,7 @@ def _stage_wap_table(spark: SparkSession, sf_dir: str):
             "o_orderkey", "cents"
         ).coalesce(1).write.parquet(path)
         paths[fid] = path
-    _WAP_CACHE[key] = (base, paths)
-    return _WAP_CACHE[key]
+    return base, paths
 
 
 @query(
@@ -4056,10 +3951,10 @@ def q_read_changelog_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # disjoint one, abort the overlapping one
 # ---------------------------------------------------------------------------
 
-_CONFLICT_CACHE: SessionCache = SessionCache()
 CC_SLICES = 4  # o_orderkey % CC_SLICES partitions the table into files
 
 
+@session_cached
 def _stage_conflict_scenario(spark: SparkSession, sf_dir: str):
     """Stage the full two-writer optimistic-concurrency scenario ONCE
     per (session, sf) and cache the resulting artifacts — the staging
@@ -4082,16 +3977,12 @@ def _stage_conflict_scenario(spark: SparkSession, sf_dir: str):
       manifest never lists (q_maintenance_orphan_audit's GC class).
 
     Returns (data_dir, manifest_dir, per-writer decision rows)."""
-    key = _CONFLICT_CACHE.scoped_key(spark, sf_dir)
-    cached = _CONFLICT_CACHE.get(key)
-    if cached is not None:
-        return cached
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    base = _tracked_mkdtemp(prefix="orders_occ_")
+    base = tracked_mkdtemp(prefix="orders_occ_")
     data, man = os.path.join(base, "data"), os.path.join(base, "manifest")
     os.makedirs(man, exist_ok=True)
     o = (
@@ -4218,8 +4109,7 @@ def _stage_conflict_scenario(spark: SparkSession, sf_dir: str):
     decisions.append(("B2", base_commit, outcome, -1, n_sx, n_cf, n_b2))
 
     head = live_files(read_log(), 5)
-    _CONFLICT_CACHE[key] = (data, head, decisions)
-    return _CONFLICT_CACHE[key]
+    return data, head, decisions
 
 
 @query(
@@ -4331,8 +4221,6 @@ def q_table_commit_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
 INC_Z_SHIFT = 6  # z >> 6 → up to 64 z-contiguous files per rewrite pass
 INC_OVERLAP_MIN = 4  # files overlapping >= this many others get rewritten
 
-_INC_LAYOUT_CACHE: SessionCache = SessionCache()
-
 
 def _inc_z_cols(n: int):
     """Clamped bucket + Morton columns under the TABLE-LEVEL clustering
@@ -4349,6 +4237,7 @@ def _inc_z_cols(n: int):
     return db, cb
 
 
+@session_cached
 def _stage_incr_layout(spark: SparkSession, sf_dir: str) -> str:
     """Stage the incremental-clustering fixture: a z-clustered BASE
     (orders with o_orderkey % 4 != 0, one file per z >> INC_Z_SHIFT)
@@ -4358,11 +4247,7 @@ def _stage_incr_layout(spark: SparkSession, sf_dir: str) -> str:
     carries its z value under the table-level spec."""
     import os
 
-    key = _INC_LAYOUT_CACHE.scoped_key(spark, sf_dir)
-    cached = _INC_LAYOUT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    root = _tracked_mkdtemp(prefix="orders_incr_layout_")
+    root = tracked_mkdtemp(prefix="orders_incr_layout_")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -4405,7 +4290,6 @@ def _stage_incr_layout(spark: SparkSession, sf_dir: str) -> str:
     ).repartition("af").write.partitionBy("af").parquet(
         os.path.join(root, "appends")
     )
-    _INC_LAYOUT_CACHE[key] = root
     return root
 
 

@@ -35,8 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ex_aws_firehose_spark.caching import SessionCache
-from ex_aws_firehose_spark.sources.formats import _tracked_mkdtemp
+from ex_aws_firehose_spark.caching import session_cached, tracked_mkdtemp
 from ex_aws_firehose_spark.operators.firehose import (
     decode_chain,
     route,
@@ -172,26 +171,21 @@ def run_stream(
     return n_batches
 
 
-# Cache of completed tri-sink runs: the §2.1 sink queries all read from
+# Completed tri-sink runs are cached: the §2.1 sink queries all read from
 # the same run's output directories.
-_TRI_SINK_CACHE: SessionCache = SessionCache()
-
-
+@session_cached
 def tri_sink_output(spark: SparkSession, sf_dir: str) -> SinkPaths:
-    key = _TRI_SINK_CACHE.scoped_key(spark, sf_dir)
-    if key not in _TRI_SINK_CACHE:
-        root = _tracked_mkdtemp(prefix="firehose_stream_")
-        paths = prepare_source_files(spark, sf_dir, root)
-        run_stream(spark, paths)
-        # A result partition no batch produced would leave its subdir
-        # absent (partitioned writes create no empty partitions, unlike
-        # the old write-per-sink); readers expect a readable directory.
-        for d in (paths.primary, paths.errors):
-            if not os.path.isdir(d):
-                spark.createDataFrame(
-                    [],
-                    "idx long, record_id string, payload string,"
-                    " kind string, batch_id int",
-                ).write.parquet(d)
-        _TRI_SINK_CACHE[key] = paths
-    return _TRI_SINK_CACHE[key]
+    root = tracked_mkdtemp(prefix="firehose_stream_")
+    paths = prepare_source_files(spark, sf_dir, root)
+    run_stream(spark, paths)
+    # A result partition no batch produced would leave its subdir
+    # absent (partitioned writes create no empty partitions, unlike
+    # the old write-per-sink); readers expect a readable directory.
+    for d in (paths.primary, paths.errors):
+        if not os.path.isdir(d):
+            spark.createDataFrame(
+                [],
+                "idx long, record_id string, payload string,"
+                " kind string, batch_id int",
+            ).write.parquet(d)
+    return paths

@@ -19,11 +19,11 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ex_aws_firehose_spark.caching import session_cached, tracked_mkdtemp
 from ex_aws_firehose_spark.functions.filter_pattern import compile_pattern
 from ex_aws_firehose_spark.operators.firehose import ORACLE_CTE
 from ex_aws_firehose_spark.operators.llm import _minhash_cte
 from ex_aws_firehose_spark.registry import query
-from ex_aws_firehose_spark.sources.formats import _tracked_mkdtemp
 from ex_aws_firehose_spark.streaming.pipeline import (
     run_stream,
     stream_shuffle,
@@ -50,12 +50,6 @@ EVENTS_TS_SCHEMA = (
 )
 
 
-_EVENTS_DIR_CACHE: dict[str, str] = {}
-
-
-_REPLAY_DIR_CACHE = None  # lazily-created SessionCache
-
-
 def _pin_new_mtimes(src: str, seen: set, stamp: float) -> set:
     """Stamp the parquet part files that appeared since ``seen`` with
     an explicit mtime (ADVICE r12): sequential coalesce(1) appends are
@@ -79,32 +73,25 @@ def _pin_new_mtimes(src: str, seen: set, stamp: float) -> set:
 _BATCH_EPOCH = 1_700_000_000  # fixed base for staged-batch mtimes
 
 
+@session_cached
 def _events_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     """events staged ONCE per (session, sf) as two arrival-ordered
     micro-batch files — the full table, then a replayed 10% slice
     (event_id % 10 == 0, the reference's at-least-once retry profile).
     Shared by q_stream_dedup and q_stream_dedup_watermarked (r9 ask
     #6 continuation: the drains differ, the staged source need not)."""
-    global _REPLAY_DIR_CACHE
-    if _REPLAY_DIR_CACHE is None:
-        from ex_aws_firehose_spark.caching import SessionCache
+    import os
 
-        _REPLAY_DIR_CACHE = SessionCache()
-    key = _REPLAY_DIR_CACHE.scoped_key(spark, sf_dir)
-    if key not in _REPLAY_DIR_CACHE:
-        import os
-
-        src = os.path.join(_tracked_mkdtemp(prefix="events_replay_"), "src")
-        e = load_table(spark, sf_dir, "events")
-        seen = set()
-        e.coalesce(1).write.mode("append").parquet(src)
-        seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH)
-        e.filter(F.col("event_id") % 10 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        _pin_new_mtimes(src, seen, _BATCH_EPOCH + 10)
-        _REPLAY_DIR_CACHE[key] = src
-    return _REPLAY_DIR_CACHE[key]
+    src = os.path.join(tracked_mkdtemp(prefix="events_replay_"), "src")
+    e = load_table(spark, sf_dir, "events")
+    seen = set()
+    e.coalesce(1).write.mode("append").parquet(src)
+    seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH)
+    e.filter(F.col("event_id") % 10 == 0).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    _pin_new_mtimes(src, seen, _BATCH_EPOCH + 10)
+    return src
 
 
 def _latest_state_version(state_dir: str, key: str) -> int:
@@ -128,44 +115,43 @@ def _latest_state_version(state_dir: str, key: str) -> int:
     return max(int(d[1:]) for d in versions)
 
 
+@session_cached
+def _events_copy_dir(spark: SparkSession, sf_dir: str) -> str:
+    """events.parquet copied into a temp dir of its own, once per
+    (session, sf): file sources need a *directory*."""
+    import os
+    import shutil
+
+    d = tracked_mkdtemp(prefix="events_stream_")
+    shutil.copy(f"{sf_dir}/events.parquet", os.path.join(d, "events.parquet"))
+    return d
+
+
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events as a file-source stream. File sources need a *directory*,
-    so the single events.parquet is staged into a temp dir once per
-    sf_dir. The on-disk ``ts`` physical type varies by testdata
+    """events as a file-source stream over :func:`_events_copy_dir`.
+    The on-disk ``ts`` physical type varies by testdata
     generation (ns → long under nanosAsLong, or µs timestamp);
     detect it from the parquet footer and normalize to the same
     tz-aware TimestampType ``tables.load_table`` produces."""
     import os
-    import shutil
 
     import pyarrow.parquet as pq
     import pyarrow.types as patypes
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if sf_dir not in _EVENTS_DIR_CACHE:
-        d = _tracked_mkdtemp(prefix="events_stream_")
-        shutil.copy(f"{sf_dir}/events.parquet", os.path.join(d, "events.parquet"))
-        _EVENTS_DIR_CACHE[sf_dir] = d
-    staged = os.path.join(_EVENTS_DIR_CACHE[sf_dir], "events.parquet")
-    ts_type = pq.read_schema(staged).field("ts").type
+    d = _events_copy_dir(spark, sf_dir)
+    ts_type = pq.read_schema(os.path.join(d, "events.parquet")).field("ts").type
     if patypes.is_timestamp(ts_type):
         # µs (or ms) parquet timestamp: read directly as TimestampType —
         # under the pinned UTC session zone the NTZ wall clocks become
         # the same UTC instants load_table's cast produces.
-        return spark.readStream.schema(EVENTS_TS_SCHEMA).parquet(
-            _EVENTS_DIR_CACHE[sf_dir]
-        )
-    raw = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(
-        _EVENTS_DIR_CACHE[sf_dir]
-    )
+        return spark.readStream.schema(EVENTS_TS_SCHEMA).parquet(d)
+    raw = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(d)
     return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
-
-_PARITY_DIR_CACHE = None  # set lazily to a SessionCache
-
-
+@session_cached
 def _parity_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """events staged once per (session, sf) as two parity-split parquet
     files (even event_ids, then odd — write order pins mtime order, so
@@ -174,28 +160,20 @@ def _parity_events_dir(spark: SparkSession, sf_dir: str) -> str:
     (session windows, stateful count, upsert, append windows): one
     staging write instead of one per key. Read-only to consumers; each
     query keeps its own checkpoint, so sharing the source dir is safe."""
-    global _PARITY_DIR_CACHE
-    if _PARITY_DIR_CACHE is None:
-        from ex_aws_firehose_spark.caching import SessionCache
+    import os
 
-        _PARITY_DIR_CACHE = SessionCache()
-    key = _PARITY_DIR_CACHE.scoped_key(spark, sf_dir)
-    if key not in _PARITY_DIR_CACHE:
-        import os
-
-        src = os.path.join(_tracked_mkdtemp(prefix="events_parity_"), "src")
-        e = load_table(spark, sf_dir, "events")
-        seen = set()
-        e.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH)
-        e.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        _pin_new_mtimes(src, seen, _BATCH_EPOCH + 10)
-        _PARITY_DIR_CACHE[key] = src
-    return _PARITY_DIR_CACHE[key]
+    src = os.path.join(tracked_mkdtemp(prefix="events_parity_"), "src")
+    e = load_table(spark, sf_dir, "events")
+    seen = set()
+    e.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH)
+    e.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    _pin_new_mtimes(src, seen, _BATCH_EPOCH + 10)
+    return src
 
 
 def _run_to_memory(
@@ -454,7 +432,7 @@ def q_stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink state, so the flag is deterministic given the batch order."""
     import os
 
-    root = _tracked_mkdtemp(prefix="late_stream_")
+    root = tracked_mkdtemp(prefix="late_stream_")
     src, out = os.path.join(root, "src"), os.path.join(root, "out")
     e = load_table(spark, sf_dir, "events")
     # batch 1: on-time traffic; batch 2: the replayed (late) slice.
@@ -519,7 +497,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicatesWithinWatermark."""
     import os
 
-    root = _tracked_mkdtemp(prefix="dedup_stream_")
+    root = tracked_mkdtemp(prefix="dedup_stream_")
     out = os.path.join(root, "out")
     src = _events_replay_dir(spark, sf_dir)
 
@@ -862,7 +840,7 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Two source files -> two micro-batches with interleaved keys
     # (shared staged source; state/checkpoint dirs stay per-query).
     src = _parity_events_dir(spark, sf_dir)
-    root = _tracked_mkdtemp(prefix="upsert_stream_")
+    root = tracked_mkdtemp(prefix="upsert_stream_")
 
     state: dict[str, str | None] = {"dir": None}
 
@@ -944,7 +922,7 @@ def q_stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     incrementally (a crash mid-backfill resumes, not restarts)."""
     import os
 
-    root = _tracked_mkdtemp(prefix="availnow_stream_")
+    root = tracked_mkdtemp(prefix="availnow_stream_")
     src, out = os.path.join(root, "src"), os.path.join(root, "out")
     e = load_table(spark, sf_dir, "events")
     seen = set()
@@ -1016,7 +994,7 @@ def q_stream_replay_heal(spark: SparkSession, sf_dir: str) -> DataFrame:
     this key exercises is exactly the one those logs close."""
     import os
 
-    root = _tracked_mkdtemp(prefix="replayheal_stream_")
+    root = tracked_mkdtemp(prefix="replayheal_stream_")
     src, out = os.path.join(root, "src"), os.path.join(root, "out")
     e = load_table(spark, sf_dir, "events")
     seen = set()
@@ -1070,9 +1048,7 @@ def q_stream_replay_heal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DOCS_BATCH_CACHE = None  # set lazily to a SessionCache
-
-
+@session_cached
 def _docs_range_batches_dir(spark: SparkSession, sf_dir: str) -> str:
     """documents staged ONCE per (session, sf) as three arrival-ordered
     doc_id-range parquet files (cuts at n//3 and 2*(n//3); strictly
@@ -1080,44 +1056,35 @@ def _docs_range_batches_dir(spark: SparkSession, sf_dir: str) -> str:
     doc-stream key (minhash dedup, span dedup, quality monitor) — one
     staging write per session instead of one per key; consumers prune
     to the columns they need via their readStream schema."""
-    global _DOCS_BATCH_CACHE
-    if _DOCS_BATCH_CACHE is None:
-        from ex_aws_firehose_spark.caching import SessionCache
+    import os
 
-        _DOCS_BATCH_CACHE = SessionCache()
-    key = _DOCS_BATCH_CACHE.scoped_key(spark, sf_dir)
-    if key not in _DOCS_BATCH_CACHE:
-        import os
-
-        root = _tracked_mkdtemp(prefix="docs_batches_")
-        src = os.path.join(root, "src")
-        d = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text", "source"
+    root = tracked_mkdtemp(prefix="docs_batches_")
+    src = os.path.join(root, "src")
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "source"
+    )
+    n = d.count()
+    cuts = (n // 3, 2 * (n // 3))
+    os.makedirs(src, exist_ok=True)
+    for i, cond in enumerate(
+        (
+            F.col("doc_id") < cuts[0],
+            (F.col("doc_id") >= cuts[0]) & (F.col("doc_id") < cuts[1]),
+            F.col("doc_id") >= cuts[1],
         )
-        n = d.count()
-        cuts = (n // 3, 2 * (n // 3))
-        os.makedirs(src, exist_ok=True)
-        for i, cond in enumerate(
-            (
-                F.col("doc_id") < cuts[0],
-                (F.col("doc_id") >= cuts[0]) & (F.col("doc_id") < cuts[1]),
-                F.col("doc_id") >= cuts[1],
-            )
-        ):
-            scratch = os.path.join(root, f"scratch-{i}")
-            d.filter(cond).coalesce(1).write.mode("overwrite").parquet(scratch)
-            part = next(
-                f
-                for f in os.listdir(scratch)
-                if f.endswith(".parquet") and not f.startswith(".")
-            )
-            staged = os.path.join(src, f"batch-{i}.parquet")
-            os.rename(os.path.join(scratch, part), staged)
-            t = 1_700_000_000 + i * 10
-            os.utime(staged, (t, t))
-        _DOCS_BATCH_CACHE[key] = src
-    return _DOCS_BATCH_CACHE[key]
-
+    ):
+        scratch = os.path.join(root, f"scratch-{i}")
+        d.filter(cond).coalesce(1).write.mode("overwrite").parquet(scratch)
+        part = next(
+            f
+            for f in os.listdir(scratch)
+            if f.endswith(".parquet") and not f.startswith(".")
+        )
+        staged = os.path.join(src, f"batch-{i}.parquet")
+        os.rename(os.path.join(scratch, part), staged)
+        t = 1_700_000_000 + i * 10
+        os.utime(staged, (t, t))
+    return src
 
 
 @query(
@@ -1161,7 +1128,7 @@ def q_stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ex_aws_firehose_spark.operators.llm import minhash_bands
 
-    root = _tracked_mkdtemp(prefix="dedup_stream_")
+    root = tracked_mkdtemp(prefix="dedup_stream_")
     src = _docs_range_batches_dir(spark, sf_dir)
     idx_dir = os.path.join(root, "band_index")
     out_dir = os.path.join(root, "verdicts")
@@ -1257,7 +1224,7 @@ def q_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     the knob that makes infinite-retention dedup finite."""
     import os
 
-    root = _tracked_mkdtemp(prefix="dedup_wm_stream_")
+    root = tracked_mkdtemp(prefix="dedup_wm_stream_")
     out = os.path.join(root, "out")
     src = _events_replay_dir(spark, sf_dir)
 
@@ -1381,7 +1348,7 @@ def q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     src = _parity_events_dir(spark, sf_dir)
-    root = _tracked_mkdtemp(prefix="incr_agg_stream_")
+    root = tracked_mkdtemp(prefix="incr_agg_stream_")
     state: dict[str, str | None] = {"dir": None}
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1424,7 +1391,7 @@ def q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream.writeStream.foreachBatch(merge_batch)
             .option(
                 "checkpointLocation",
-                _tracked_mkdtemp(prefix="incr_agg_ckpt_"),
+                tracked_mkdtemp(prefix="incr_agg_ckpt_"),
             )
             .start()
         )
@@ -1442,13 +1409,13 @@ _IVM_STREAM_BATCH = (
     f"CASE {{k}} % {IVM_STREAM_MOD} WHEN 6 THEN 1 WHEN 7 THEN 2 ELSE 0 END"
 )
 
-_IVM_TWO_SIDED_CACHE = None  # lazily-created SessionCache
 
 _IVM_SIDED_SCHEMA = (
     "side string, okey long, custkey long, cents long, seg string"
 )
 
 
+@session_cached
 def _ivm_two_sided_dir(spark: SparkSession, sf_dir: str) -> str:
     """orders + customer staged ONCE per (session, sf) as three
     arrival-ordered micro-batch files of a UNIFIED two-sided envelope:
@@ -1458,43 +1425,35 @@ def _ivm_two_sided_dir(spark: SparkSession, sf_dir: str) -> str:
     for). Staged mtimes are pinned explicitly (``_pin_new_mtimes``,
     ADVICE r12) so the file source drains the batches deterministically
     even on a coarse-mtime filesystem."""
-    global _IVM_TWO_SIDED_CACHE
-    if _IVM_TWO_SIDED_CACHE is None:
-        from ex_aws_firehose_spark.caching import SessionCache
+    import os
 
-        _IVM_TWO_SIDED_CACHE = SessionCache()
-    key = _IVM_TWO_SIDED_CACHE.scoped_key(spark, sf_dir)
-    if key not in _IVM_TWO_SIDED_CACHE:
-        import os
+    from ex_aws_firehose_spark.operators.relational import _cents
 
-        from ex_aws_firehose_spark.operators.relational import _cents
-
-        src = os.path.join(_tracked_mkdtemp(prefix="ivm_two_sided_"), "src")
-        o = load_table(spark, sf_dir, "orders").select(
-            F.lit("o").alias("side"),
-            F.col("o_orderkey").alias("okey"),
-            F.col("o_custkey").alias("custkey"),
-            _cents("o_totalprice").alias("cents"),
-            F.lit(None).cast("string").alias("seg"),
-            F.expr(_IVM_STREAM_BATCH.format(k="o_orderkey")).alias("b"),
-        )
-        c = load_table(spark, sf_dir, "customer").select(
-            F.lit("c").alias("side"),
-            F.lit(None).cast("long").alias("okey"),
-            F.col("c_custkey").alias("custkey"),
-            F.lit(None).cast("long").alias("cents"),
-            F.col("c_mktsegment").alias("seg"),
-            F.expr(_IVM_STREAM_BATCH.format(k="c_custkey")).alias("b"),
-        )
-        both = o.unionByName(c)
-        seen = set()
-        for b in range(3):
-            both.filter(F.col("b") == b).drop("b").coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH + b * 10)
-        _IVM_TWO_SIDED_CACHE[key] = src
-    return _IVM_TWO_SIDED_CACHE[key]
+    src = os.path.join(tracked_mkdtemp(prefix="ivm_two_sided_"), "src")
+    o = load_table(spark, sf_dir, "orders").select(
+        F.lit("o").alias("side"),
+        F.col("o_orderkey").alias("okey"),
+        F.col("o_custkey").alias("custkey"),
+        _cents("o_totalprice").alias("cents"),
+        F.lit(None).cast("string").alias("seg"),
+        F.expr(_IVM_STREAM_BATCH.format(k="o_orderkey")).alias("b"),
+    )
+    c = load_table(spark, sf_dir, "customer").select(
+        F.lit("c").alias("side"),
+        F.lit(None).cast("long").alias("okey"),
+        F.col("c_custkey").alias("custkey"),
+        F.lit(None).cast("long").alias("cents"),
+        F.col("c_mktsegment").alias("seg"),
+        F.expr(_IVM_STREAM_BATCH.format(k="c_custkey")).alias("b"),
+    )
+    both = o.unionByName(c)
+    seen = set()
+    for b in range(3):
+        both.filter(F.col("b") == b).drop("b").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH + b * 10)
+    return src
 
 
 def _ivm_join_batch(
@@ -1708,7 +1667,7 @@ def q_stream_ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (MERGE INTO on a transactional table in production)."""
     import os
 
-    root = _tracked_mkdtemp(prefix="ivm_join_stream_")
+    root = tracked_mkdtemp(prefix="ivm_join_stream_")
     _ivm_join_stream_run(spark, sf_dir, root)
     last = _latest_state_version_prefixed(root, "q_stream_ivm_join_delta")
 
@@ -1819,7 +1778,7 @@ def q_stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     src = _parity_events_dir(spark, sf_dir)
-    root = _tracked_mkdtemp(prefix="state_inspect_")
+    root = tracked_mkdtemp(prefix="state_inspect_")
     ckpt = os.path.join(root, "ckpt")
     stream = (
         spark.readStream.schema(EVENTS_TS_SCHEMA)
@@ -1912,9 +1871,8 @@ ORACLE_EVENTS_US = (
     "user_id, event_type, value, props FROM events)"
 )
 
-_TIME_SPLIT_DIR_CACHE = None  # lazy SessionCache
 
-
+@session_cached
 def _time_split_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """events staged as THREE time-ordered micro-batch files: first
     half by timestamp, second half, then a single watermark-driver row
@@ -1922,45 +1880,37 @@ def _time_split_events_dir(spark: SparkSession, sf_dir: str) -> str:
     watermark past every real user's last-event + gap so their timers
     fire. Sequential coalesce(1) writes pin mtime order, which is the
     file source's drain order."""
-    global _TIME_SPLIT_DIR_CACHE
-    if _TIME_SPLIT_DIR_CACHE is None:
-        from ex_aws_firehose_spark.caching import SessionCache
+    import os
 
-        _TIME_SPLIT_DIR_CACHE = SessionCache()
-    key = _TIME_SPLIT_DIR_CACHE.scoped_key(spark, sf_dir)
-    if key not in _TIME_SPLIT_DIR_CACHE:
-        import os
-
-        src = os.path.join(_tracked_mkdtemp(prefix="events_tsplit_"), "src")
-        e = load_table(spark, sf_dir, "events")
-        split = e.agg(
-            F.timestamp_micros(
-                (
-                    (F.unix_micros(F.min("ts")) + F.unix_micros(F.max("ts")))
-                    / 2
-                ).cast("long")
-            ).alias("s")
-        )
-        e1 = e.crossJoin(F.broadcast(split)).filter(F.col("ts") <= F.col("s"))
-        e2 = e.crossJoin(F.broadcast(split)).filter(F.col("ts") > F.col("s"))
-        cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-        seen = set()
-        e1.select(cols).coalesce(1).write.mode("append").parquet(src)
-        seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH)
-        e2.select(cols).coalesce(1).write.mode("append").parquet(src)
-        seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH + 10)
-        flush = e.agg(F.max("ts").alias("m")).select(
-            F.lit(-1).cast("long").alias("event_id"),
-            F.expr("m + INTERVAL 100 HOURS").alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            F.lit("flush").alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit("").alias("props"),
-        )
-        flush.coalesce(1).write.mode("append").parquet(src)
-        _pin_new_mtimes(src, seen, _BATCH_EPOCH + 20)
-        _TIME_SPLIT_DIR_CACHE[key] = src
-    return _TIME_SPLIT_DIR_CACHE[key]
+    src = os.path.join(tracked_mkdtemp(prefix="events_tsplit_"), "src")
+    e = load_table(spark, sf_dir, "events")
+    split = e.agg(
+        F.timestamp_micros(
+            (
+                (F.unix_micros(F.min("ts")) + F.unix_micros(F.max("ts")))
+                / 2
+            ).cast("long")
+        ).alias("s")
+    )
+    e1 = e.crossJoin(F.broadcast(split)).filter(F.col("ts") <= F.col("s"))
+    e2 = e.crossJoin(F.broadcast(split)).filter(F.col("ts") > F.col("s"))
+    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
+    seen = set()
+    e1.select(cols).coalesce(1).write.mode("append").parquet(src)
+    seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH)
+    e2.select(cols).coalesce(1).write.mode("append").parquet(src)
+    seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH + 10)
+    flush = e.agg(F.max("ts").alias("m")).select(
+        F.lit(-1).cast("long").alias("event_id"),
+        F.expr("m + INTERVAL 100 HOURS").alias("ts"),
+        F.lit(-1).cast("long").alias("user_id"),
+        F.lit("flush").alias("event_type"),
+        F.lit(0.0).alias("value"),
+        F.lit("").alias("props"),
+    )
+    flush.coalesce(1).write.mode("append").parquet(src)
+    _pin_new_mtimes(src, seen, _BATCH_EPOCH + 20)
+    return src
 
 
 @query(
@@ -2469,7 +2419,7 @@ def q_stream_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles are harmless set-members)."""
     import os
 
-    root = _tracked_mkdtemp(prefix="span_stream_")
+    root = tracked_mkdtemp(prefix="span_stream_")
     src = _docs_range_batches_dir(spark, sf_dir)
     idx_dir = os.path.join(root, "shingle_index")
     out_dir = os.path.join(root, "verdicts")
@@ -2563,7 +2513,7 @@ def q_stream_sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         KMV_SPACE,
     )
 
-    root = _tracked_mkdtemp(prefix="kmv_stream_")
+    root = tracked_mkdtemp(prefix="kmv_stream_")
     src = _time_split_events_dir(spark, sf_dir)
     state_dir = os.path.join(root, "state")
 
@@ -2710,50 +2660,41 @@ def q_stream_join_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 # API (sources/bus.py) — offsets, chunked polls, commit/replay
 # ---------------------------------------------------------------------------
 
-_BUS_TOPIC_CACHE = None  # set lazily to a SessionCache
 
-
+@session_cached
 def bus_topic_dir(spark: SparkSession, sf_dir: str) -> str:
     """Topic dir: events staged once per (session, sf) as BUS_SHARDS
     ordered parquet shard logs."""
-    global _BUS_TOPIC_CACHE
-    if _BUS_TOPIC_CACHE is None:
-        from ex_aws_firehose_spark.caching import SessionCache
+    import os
 
-        _BUS_TOPIC_CACHE = SessionCache()
-    key = _BUS_TOPIC_CACHE.scoped_key(spark, sf_dir)
-    if key not in _BUS_TOPIC_CACHE:
-        import os
+    import duckdb
 
-        import duckdb
+    from ex_aws_firehose_spark.sources.bus import BUS_SHARDS
 
-        from ex_aws_firehose_spark.sources.bus import BUS_SHARDS
-
-        root = os.path.join(_tracked_mkdtemp(prefix="bus_topic_"), "topic")
-        os.makedirs(root, exist_ok=True)
-        con = duckdb.connect()
-        try:
-            n = 0
-            for shard in range(BUS_SHARDS):
-                path = os.path.join(root, f"shard-{shard}.parquet")
-                con.execute(
-                    f"""
-                    COPY (
-                        SELECT event_id, user_id, event_type,
-                               CAST(ROUND(value * 100) AS BIGINT) AS cents
-                        FROM read_parquet('{sf_dir}/events.parquet')
-                        WHERE event_id % {BUS_SHARDS} = {shard}
-                        ORDER BY event_id
-                    ) TO '{path}' (FORMAT PARQUET)
-                    """
-                )
-                n += con.execute(
-                    f"SELECT count(*) FROM read_parquet('{path}')"
-                ).fetchone()[0]
-        finally:
-            con.close()
-        _BUS_TOPIC_CACHE[key] = root
-    return _BUS_TOPIC_CACHE[key]
+    root = os.path.join(tracked_mkdtemp(prefix="bus_topic_"), "topic")
+    os.makedirs(root, exist_ok=True)
+    con = duckdb.connect()
+    try:
+        n = 0
+        for shard in range(BUS_SHARDS):
+            path = os.path.join(root, f"shard-{shard}.parquet")
+            con.execute(
+                f"""
+                COPY (
+                    SELECT event_id, user_id, event_type,
+                           CAST(ROUND(value * 100) AS BIGINT) AS cents
+                    FROM read_parquet('{sf_dir}/events.parquet')
+                    WHERE event_id % {BUS_SHARDS} = {shard}
+                    ORDER BY event_id
+                ) TO '{path}' (FORMAT PARQUET)
+                """
+            )
+            n += con.execute(
+                f"SELECT count(*) FROM read_parquet('{path}')"
+            ).fetchone()[0]
+    finally:
+        con.close()
+    return root
 
 
 @query(
@@ -2875,7 +2816,7 @@ def q_stream_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     cent, codes, cb, members = load_persisted_index(spark, sf_dir)
-    root = _tracked_mkdtemp(prefix="ann_serve_")
+    root = tracked_mkdtemp(prefix="ann_serve_")
     qdir = os.path.join(root, "queries")
     out_dir = os.path.join(root, "results")
     e = load_table(spark, sf_dir, "embeddings")
@@ -2996,7 +2937,7 @@ def q_stream_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ex_aws_firehose_spark.operators.llm import gopher_ok_flags
 
     src = _docs_range_batches_dir(spark, sf_dir)
-    out_dir = _tracked_mkdtemp(prefix="quality_monitor_") + "/out"
+    out_dir = tracked_mkdtemp(prefix="quality_monitor_") + "/out"
 
     def monitor_batch(batch_df: DataFrame, batch_id: int) -> None:
         flags = batch_df.select(*gopher_ok_flags())
@@ -3028,7 +2969,7 @@ def q_stream_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     with stream_shuffle(spark):
         q = (
             stream.writeStream.foreachBatch(monitor_batch)
-            .option("checkpointLocation", _tracked_mkdtemp(prefix="qm_ckpt_"))
+            .option("checkpointLocation", tracked_mkdtemp(prefix="qm_ckpt_"))
             .trigger(availableNow=True)
             .start()
         )
@@ -3076,7 +3017,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     src = _parity_events_dir(spark, sf_dir)
-    root = _tracked_mkdtemp(prefix="cdc_apply_")
+    root = tracked_mkdtemp(prefix="cdc_apply_")
 
     state: dict[str, str | None] = {"dir": None}
 
@@ -3195,7 +3136,7 @@ def q_stream_throttle_carryover(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     src = _parity_events_dir(spark, sf_dir)
-    root = _tracked_mkdtemp(prefix="throttle_stream_")
+    root = tracked_mkdtemp(prefix="throttle_stream_")
     admitted_dir = os.path.join(root, "admitted")
     state: dict[str, str | None] = {"dir": None}
 
@@ -3311,7 +3252,7 @@ def sink_manifest_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     commits."""
     import os
 
-    root = _tracked_mkdtemp(prefix="manifest_sink_")
+    root = tracked_mkdtemp(prefix="manifest_sink_")
     src = os.path.join(root, "src")
     data = os.path.join(root, "data")
     man = os.path.join(root, "manifest")
@@ -3378,7 +3319,66 @@ def sink_manifest_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUS_REBALANCE_CACHE = None  # lazily-created SessionCache
+@session_cached
+def _stage_bus_rebalance(spark: SparkSession, sf_dir: str) -> str:
+    """Drain a 3-shard topic, add a fourth shard, drain again under the
+    same checkpoint; returns the sink dir of both runs."""
+    import os
+
+    import duckdb
+
+    from ex_aws_firehose_spark.sources.bus import (
+        BUS_SHARDS,
+        register_bus_datasource,
+    )
+
+    base = tracked_mkdtemp(prefix="bus_rebalance_key_")
+    root = os.path.join(base, "topic")
+    os.makedirs(root, exist_ok=True)
+    out = os.path.join(base, "out")
+    ckpt = os.path.join(base, "ckpt")
+    con = duckdb.connect()
+    try:
+
+        def write_shard(shard: int) -> None:
+            con.execute(
+                f"""
+                COPY (
+                    SELECT event_id, user_id, event_type,
+                           CAST(ROUND(value * 100) AS BIGINT) AS cents
+                    FROM read_parquet('{sf_dir}/events.parquet')
+                    WHERE event_id % {BUS_SHARDS} = {shard}
+                    ORDER BY event_id
+                ) TO '{root}/shard-{shard}.parquet'
+                """
+            )
+
+        for shard in range(BUS_SHARDS - 1):
+            write_shard(shard)
+        register_bus_datasource(spark)
+
+        def drain() -> None:
+            stream = (
+                spark.readStream.format("bus_topic")
+                .option("path", root)
+                .load()
+            )
+            q = (
+                stream.writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+
+        with stream_shuffle(spark):
+            drain()
+            write_shard(BUS_SHARDS - 1)  # the rebalance event
+            drain()
+    finally:
+        con.close()
+    return out
 
 
 @query(
@@ -3408,70 +3408,8 @@ def src_stream_bus_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver (new keys appear in latestOffset, absent keys default
     to 0 in partitions()); no executor coordination, no state
     migration — the file-backed topic retains, a broker would trim."""
-    import os
-
-    from ex_aws_firehose_spark.caching import SessionCache
-    from ex_aws_firehose_spark.sources.bus import (
-        BUS_SHARDS,
-        register_bus_datasource,
-    )
-
-    global _BUS_REBALANCE_CACHE
-    if _BUS_REBALANCE_CACHE is None:
-        _BUS_REBALANCE_CACHE = SessionCache()
-    key = _BUS_REBALANCE_CACHE.scoped_key(spark, sf_dir)
-    if key not in _BUS_REBALANCE_CACHE:
-        import duckdb
-
-        base = _tracked_mkdtemp(prefix="bus_rebalance_key_")
-        root = os.path.join(base, "topic")
-        os.makedirs(root, exist_ok=True)
-        out = os.path.join(base, "out")
-        ckpt = os.path.join(base, "ckpt")
-        con = duckdb.connect()
-        try:
-
-            def write_shard(shard: int) -> None:
-                con.execute(
-                    f"""
-                    COPY (
-                        SELECT event_id, user_id, event_type,
-                               CAST(ROUND(value * 100) AS BIGINT) AS cents
-                        FROM read_parquet('{sf_dir}/events.parquet')
-                        WHERE event_id % {BUS_SHARDS} = {shard}
-                        ORDER BY event_id
-                    ) TO '{root}/shard-{shard}.parquet'
-                    """
-                )
-
-            for shard in range(BUS_SHARDS - 1):
-                write_shard(shard)
-            register_bus_datasource(spark)
-
-            def drain() -> None:
-                stream = (
-                    spark.readStream.format("bus_topic")
-                    .option("path", root)
-                    .load()
-                )
-                q = (
-                    stream.writeStream.format("parquet")
-                    .option("path", out)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-
-            with stream_shuffle(spark):
-                drain()
-                write_shard(BUS_SHARDS - 1)  # the rebalance event
-                drain()
-        finally:
-            con.close()
-        _BUS_REBALANCE_CACHE[key] = out
     return (
-        spark.read.parquet(_BUS_REBALANCE_CACHE[key])
+        spark.read.parquet(_stage_bus_rebalance(spark, sf_dir))
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -3562,7 +3500,7 @@ def q_stream_exp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window as W
 
-    root = _tracked_mkdtemp(prefix="exph_stream_")
+    root = tracked_mkdtemp(prefix="exph_stream_")
     src = _time_split_events_dir(spark, sf_dir)
     state_dir = os.path.join(root, "state")
 
@@ -3705,7 +3643,7 @@ def q_stream_graph_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != 0)
         .select("vec_id", "embedding", norm("embedding").alias("nrm"))
     )
-    root = _tracked_mkdtemp(prefix="graph_serve_")
+    root = tracked_mkdtemp(prefix="graph_serve_")
     qdir = os.path.join(root, "queries")
     out_dir = os.path.join(root, "results")
     bq = load_table(spark, sf_dir, "embeddings").filter(
@@ -3950,7 +3888,7 @@ def q_stream_graph_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     state-store blowup with stream length."""
     import os
 
-    root = _tracked_mkdtemp(prefix="graph_upsert_")
+    root = tracked_mkdtemp(prefix="graph_upsert_")
     _graph_upsert_stream_run(spark, sf_dir, root)
     last = _latest_state_version_prefixed_name(
         root, "serve_v", "q_stream_graph_upsert"

@@ -106,11 +106,9 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
     spark = df.sparkSession
     if parts is None:
         parts = 2 * spark.sparkContext.defaultParallelism
-    try:
-        if len(df.inputFiles()) >= parts:
-            return df
-    except Exception:
-        pass  # non-file-backed frame: fall through to the repartition
+    # A non-file-backed frame lists no input files, so it repartitions.
+    if len(df.inputFiles()) >= parts:
+        return df
     return df.repartition(parts)
 
 

@@ -2005,7 +2005,7 @@ def test_rewrite_manifests_preserves_reads_and_torn_invisible(spark, sf_dir):
     cur = os.path.join(base, "CURRENT")
     if os.path.exists(cur):
         os.remove(cur)
-    fmt._MAN_COMPACT_CACHE.clear()
+    fmt._compact_logs.cache_clear()
     torn = os.path.join(base, "manifest-rewrite")
     os.makedirs(torn, exist_ok=True)
     with open(os.path.join(torn, "base-manifest.parquet"), "wb") as f:
@@ -2143,3 +2143,38 @@ def test_incremental_cluster_laws(spark, sf_dir):
     assert after.rows_rewritten == n_app
     assert after.files_rewritten == 2
     assert after.rows_scanned <= before.rows_scanned
+
+
+def test_persisted_index_dirs_are_removed_at_exit(spark, sf_dir):
+    """The persisted IVF-PQ and graph index roots are session fixtures:
+    their temp dirs must be registered for removal at interpreter exit,
+    not leaked one per session."""
+    from ex_aws_firehose_spark import caching
+    from ex_aws_firehose_spark.operators.llm import (
+        graph_persisted_edges_dir,
+        persisted_index_dir,
+    )
+
+    for root in (
+        persisted_index_dir(spark, sf_dir),
+        graph_persisted_edges_dir(spark, sf_dir),
+    ):
+        assert root in caching._TMP_DIRS, root
+
+
+def test_spread_skips_wide_file_scans_and_repartitions_the_rest(
+    spark, tmp_path
+):
+    """spread() returns a frame already read from >= parts files
+    unchanged, and repartitions a non-file-backed frame to parts."""
+    from ex_aws_firehose_spark.tables import spread
+
+    path = str(tmp_path / "wide")
+    spark.range(100).repartition(4).write.parquet(path)
+    wide = spark.read.parquet(path)
+    assert len(wide.inputFiles()) == 4
+    assert spread(wide, parts=4) is wide
+
+    narrow = spark.range(10)
+    assert narrow.inputFiles() == []
+    assert spread(narrow, parts=3).rdd.getNumPartitions() == 3

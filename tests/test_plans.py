@@ -69,10 +69,9 @@ def test_manifest_pruned_read_scans_fewer_files(spark, sf_dir):
     month files out of the ~80-file table — file skipping, not a
     post-scan filter."""
     df = REGISTRY["q_read_manifest_pruned"].fn(spark, sf_dir)
-    from ex_aws_firehose_spark.sources.formats import _MANIFEST_CACHE
+    from ex_aws_firehose_spark.sources.formats import _stage_manifest_table
 
-    key = _MANIFEST_CACHE.scoped_key(spark, sf_dir)
-    _root, _manifest, files_total = _MANIFEST_CACHE[key]
+    _root, _manifest, files_total = _stage_manifest_table(spark, sf_dir)
     scanned = [f for f in df.inputFiles() if "orders_manifest_" in f]
     assert 0 < len(scanned) < files_total, (len(scanned), files_total)
     assert len(scanned) == 3, scanned  # Jan/Feb/Mar 1997 month files
@@ -87,13 +86,12 @@ def test_bloom_pruned_read_scans_fewer_files(spark, sf_dir):
     negatives)."""
     df = REGISTRY["q_read_bloom_pruned"].fn(spark, sf_dir)
     from ex_aws_firehose_spark.sources.formats import (
-        _MANIFEST_CACHE,
         BLOOM_PROBE_CUSTKEY,
+        _stage_manifest_table,
     )
     from ex_aws_firehose_spark.tables import load_table
 
-    key = _MANIFEST_CACHE.scoped_key(spark, sf_dir)
-    _root, _manifest, files_total = _MANIFEST_CACHE[key]
+    _root, _manifest, files_total = _stage_manifest_table(spark, sf_dir)
     scanned = {
         f.split("month=")[1].split("/")[0]
         for f in df.inputFiles()

@@ -489,7 +489,6 @@ def test_graph_ann_ladder_routing_bounded_and_mirrored(spark):
     full-layer scan is N × |l3|, and every deeper scoring stage is
     candidate-join bounded."""
     import ex_aws_firehose_spark.operators.llm as llm
-    from ex_aws_firehose_spark.caching import SessionCache
     from ex_aws_firehose_spark.functions.vector import dot, norm
     from ex_aws_firehose_spark.testing import (
         compare_frames,
@@ -497,9 +496,9 @@ def test_graph_ann_ladder_routing_bounded_and_mirrored(spark):
     )
 
     sf10 = "/root/testdata/sf0.1"
-    saved = (llm.GRAPH_L2_MOD, llm.GRAPH_L3_MOD, llm._GRAPH_ANN_CACHE)
+    saved = (llm.GRAPH_L2_MOD, llm.GRAPH_L3_MOD)
     llm.GRAPH_L2_MOD, llm.GRAPH_L3_MOD = 64, 256
-    llm._GRAPH_ANN_CACHE = SessionCache()
+    llm._graph_ann_parts.cache_clear()
     try:
         spark_pdf = llm.q_sim_graph_ann(spark, sf10).toPandas()
         con = duckdb_connection(sf10)
@@ -566,7 +565,8 @@ def test_graph_ann_ladder_routing_bounded_and_mirrored(spark):
         assert per_vec.m <= llm.GRAPH_ROUTE * occ
         assert cand2.count() < n_vec * n_l2
     finally:
-        llm.GRAPH_L2_MOD, llm.GRAPH_L3_MOD, llm._GRAPH_ANN_CACHE = saved
+        llm.GRAPH_L2_MOD, llm.GRAPH_L3_MOD = saved
+        llm._graph_ann_parts.cache_clear()
 
 
 def test_rp_lsh_scale_branch_binds_and_mirrors(spark):

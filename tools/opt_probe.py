@@ -30,6 +30,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import preludes
 from ex_aws_firehose_spark.registry import REGISTRY, load_all_operators
 from ex_aws_firehose_spark.session import get_spark
 
@@ -38,72 +39,6 @@ UI_PORT = 4077
 
 def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
-
-
-def _run_preludes(spark, sf_dir: str) -> dict[str, float]:
-    """Replicate bench.py's prelude training rows so per-key timings see
-    the same session-cache state the bench gives them."""
-    from ex_aws_firehose_spark.operators.llm import (
-        ADC_K,
-        ADC_M,
-        INC_ADD_MOD,
-        _top_pc_frames,
-        graph_ann_build,
-        ivf_train,
-        pq_train,
-    )
-
-    base_w = f"vec_id % {INC_ADD_MOD} != {INC_ADD_MOD - 1}"
-    rows = {
-        "_train_ivf_codebook": lambda: ivf_train(spark, sf_dir),
-        "_train_pq_codebook": lambda: pq_train(spark, sf_dir, ADC_M, ADC_K),
-        "_train_pq_codebook_default": lambda: pq_train(spark, sf_dir),
-        "_build_top_pc": lambda: _top_pc_frames(spark, sf_dir),
-        "_build_graph_ann_index": lambda: graph_ann_build(spark, sf_dir),
-        "_train_ivf_codebook_filtered": lambda: ivf_train(
-            spark, sf_dir, where=base_w
-        ),
-        "_train_pq_codebook_filtered": lambda: pq_train(
-            spark, sf_dir, ADC_M, ADC_K, where=base_w
-        ),
-        "_build_graph_ann_index_filtered": lambda: graph_ann_build(
-            spark, sf_dir, where=base_w
-        ),
-        "_build_co_edges": lambda: __import__(
-            "ex_aws_firehose_spark.operators.scale", fromlist=["co_edges"]
-        ).co_edges(spark, sf_dir).count(),
-        "_build_sym_edges": lambda: __import__(
-            "ex_aws_firehose_spark.operators.scale", fromlist=["sym_edges"]
-        ).sym_edges(spark, sf_dir).count(),
-        "_build_wedges": lambda: __import__(
-            "ex_aws_firehose_spark.operators.scale",
-            fromlist=["wedge_frames"],
-        ).wedge_frames(spark, sf_dir)["closed"].count(),
-    }
-
-    from ex_aws_firehose_spark.operators.llm import (
-        minhash_sig_frame,
-        shingle_card,
-        shingle_pair_counts,
-        star_components,
-    )
-
-    rows["_build_minhash_sig"] = lambda: minhash_sig_frame(
-        spark, sf_dir
-    ).count()
-    rows["_build_shingle_pairs"] = lambda: (
-        shingle_pair_counts(spark, sf_dir).count(),
-        shingle_card(spark, sf_dir).count(),
-    )
-    rows["_build_star_components"] = lambda: star_components(spark, sf_dir)[
-        0
-    ].count()
-    out = {}
-    for name, thunk in rows.items():
-        t0 = time.perf_counter()
-        thunk()
-        out[name] = round(time.perf_counter() - t0, 3)
-    return out
 
 
 def _sql_metrics(app_id: str, n_last: int = 1) -> list[dict]:
@@ -166,7 +101,11 @@ def main(argv=None) -> int:
     _materialize(REGISTRY["q_scan_project"].fn(spark, sf_dir))
 
     if args.preludes:
-        pt = _run_preludes(spark, sf_dir)
+        pt = {}
+        for name, thunk in preludes(spark, sf_dir):
+            t0 = time.perf_counter()
+            thunk()
+            pt[name] = round(time.perf_counter() - t0, 3)
         print("preludes: " + json.dumps(pt))
 
     for key in args.keys:
