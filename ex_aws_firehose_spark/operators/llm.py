@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ex_aws_firehose_spark.functions.text import (
@@ -48,7 +48,7 @@ from ex_aws_firehose_spark.functions.vector import (
 )
 from ex_aws_firehose_spark.caching import session_cached, tracked_mkdtemp
 from ex_aws_firehose_spark.registry import query
-from ex_aws_firehose_spark.tables import load_table, spread
+from ex_aws_firehose_spark.tables import fixpoint, load_table, spread
 
 # ---------------------------------------------------------------------------
 # Dedup: exact
@@ -956,11 +956,29 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure — fine at test SF, quadratic in general, which is why the
     engine side iterates instead.) Each round is one self-join shuffle
     on doc_id; large-diameter graphs switch to alternating
-    large-star/small-star (same loop shape)."""
+    large-star/small-star (same loop shape). A chain that needs more
+    than ``CC_MAX_ROUNDS`` rounds raises instead of returning
+    truncated labels."""
     pairs = q_dedup_minhash(spark, sf_dir)
+    labels, _ = min_label_components(
+        pairs.selectExpr("doc_a AS a", "doc_b AS b")
+    )
+    return labels.groupBy(F.col("label").alias("cluster_id")).agg(
+        F.count("*").alias("cluster_size")
+    )
+
+
+CC_MAX_ROUNDS = 15
+
+
+def min_label_components(und_pairs: DataFrame) -> tuple[DataFrame, int]:
+    """Min-label propagation over an undirected (a, b) pair frame: the
+    O(diameter) counterpart of star_components_from_edges. Returns
+    (labels(doc_id, label=component min), n_rounds); raises when the
+    labels still change after ``CC_MAX_ROUNDS`` rounds."""
     edges = (
-        pairs.selectExpr("doc_a AS src", "doc_b AS dst")
-        .union(pairs.selectExpr("doc_b AS src", "doc_a AS dst"))
+        und_pairs.selectExpr("a AS src", "b AS dst")
+        .union(und_pairs.selectExpr("b AS src", "a AS dst"))
         .distinct()
         .localCheckpoint()
     )
@@ -970,14 +988,14 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("label", F.col("doc_id"))
         .localCheckpoint()
     )
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    for _ in range(15):  # bound: component diameter at test SF ≪ 15
+
+    def step(labels: DataFrame) -> DataFrame:
         neighbor_min = (
             edges.join(labels, edges.dst == labels.doc_id)
             .groupBy("src")
             .agg(F.min("label").alias("nbr_label"))
         )
-        labels = (
+        return (
             labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
             .select(
                 "doc_id",
@@ -987,14 +1005,19 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-        # Convergence: per-node labels only ever decrease, so an
-        # unchanged sum ⇔ fixpoint — one aggregate instead of a join.
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels.groupBy(F.col("label").alias("cluster_id")).agg(
-        F.count("*").alias("cluster_size")
+
+    # Per-node labels only ever decrease, so an unchanged sum ⇔
+    # fixpoint — one aggregate instead of a join.
+    def label_sum(labels: DataFrame) -> int | None:
+        return labels.agg(F.sum("label")).collect()[0][0]
+
+    return fixpoint(
+        labels,
+        step,
+        label_sum,
+        max_rounds=CC_MAX_ROUNDS,
+        name="min_label_components",
+        prev=label_sum(labels),
     )
 
 
@@ -1108,7 +1131,8 @@ def star_components(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     near-dup chains. Same loop mechanics: localCheckpoint per round
     (lineage truncation), aggregate-only convergence (edge count +
     endpoint sum — each star op only ever lowers endpoints, so an
-    unchanged pair ⇔ fixpoint), no data collect.
+    unchanged pair ⇔ fixpoint), no data collect. The loop raises if
+    it has not converged after ``STAR_MAX_ROUNDS`` rounds.
 
     The labels are built ONCE per (session, sf_dir) and persisted —
     q_curate_dedup_keeper and q_dedup_clusters_star each re-ran the
@@ -1146,10 +1170,7 @@ def star_components_from_edges(und_pairs: DataFrame) -> tuple[DataFrame, int]:
 
 
 def _star_loop(und_pairs: DataFrame) -> tuple[DataFrame, int]:
-    und = und_pairs.selectExpr("a", "b").distinct().localCheckpoint()
-    prev = None
-    rounds = 0
-    for _ in range(STAR_MAX_ROUNDS):
+    def step(und: DataFrame) -> DataFrame:
         for large in (True, False):
             adj = und.union(
                 und.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -1170,20 +1191,25 @@ def _star_loop(und_pairs: DataFrame) -> tuple[DataFrame, int]:
                         m.select(F.col("u").alias("a"), F.col("m").alias("b"))
                     )
                 )
-            # Truncate lineage once per ROUND (after small-star): the
-            # large-star intermediate stays lazy, halving per-round
-            # materializations; two star ops of lineage is shallow
-            # enough for Catalyst.
             und = new.filter(F.col("a") != F.col("b")).distinct()
-            if not large:
-                und = und.localCheckpoint()
-        rounds += 1
-        cur = und.agg(
+        # Truncate lineage once per ROUND (after small-star): the
+        # large-star intermediate stays lazy, halving per-round
+        # materializations; two star ops of lineage is shallow
+        # enough for Catalyst.
+        return und.localCheckpoint()
+
+    def signature(und: DataFrame):
+        return und.agg(
             F.count("*").alias("n"), F.sum(F.col("a") + F.col("b")).alias("s")
         ).collect()[0]
-        if prev is not None and cur == prev:
-            break
-        prev = cur
+
+    und, rounds = fixpoint(
+        und_pairs.selectExpr("a", "b").distinct().localCheckpoint(),
+        step,
+        signature,
+        max_rounds=STAR_MAX_ROUNDS,
+        name="star_components",
+    )
     # At fixpoint edges are stars (v, root): larger side → component min.
     stars = und.select(
         F.greatest("a", "b").alias("doc_id"), F.least("a", "b").alias("root")
@@ -4680,6 +4706,20 @@ def _plain_beam_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pool
 
 
+def _query_cosine(q: DataFrame) -> tuple[DataFrame, Column]:
+    """The one-row query frame ``q`` as a broadcast (qv, qnrm) row, and
+    the 6-dp cosine of a row's (embedding, nrm) against it: the score
+    the single-query graph walks rank by."""
+    qv = F.broadcast(
+        q.select(F.col("embedding").alias("qv"), norm("embedding").alias("qnrm"))
+    )
+    score = F.round(
+        dot(F.col("embedding"), F.col("qv")) / (F.col("nrm") * F.col("qnrm")),
+        6,
+    )
+    return qv, score
+
+
 def _graph_beam_serve(
     spark: SparkSession,
     sf_dir: str,
@@ -4692,15 +4732,8 @@ def _graph_beam_serve(
     a new batch never joins the layers), candidates scored from
     ``score_e`` (base, or base ∪ batch after an add). Returns the
     visited pool (vec_id, c)."""
-    full = load_table(spark, sf_dir, "embeddings")
-    qv = F.broadcast(
-        full.filter(F.col("vec_id") == 0).select(
-            F.col("embedding").alias("qv"), norm("embedding").alias("qnrm")
-        )
-    )
-    score = F.round(
-        dot(F.col("embedding"), F.col("qv")) / (F.col("nrm") * F.col("qnrm")),
-        6,
+    qv, score = _query_cosine(
+        load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
     )
     pool = (
         entry_e.filter(F.col("vec_id") % GRAPH_HUB_MOD == 0)
@@ -4708,27 +4741,46 @@ def _graph_beam_serve(
         .select("vec_id", score.alias("c"))
         .localCheckpoint()
     )
-    frontier = pool.orderBy(F.desc("c"), "vec_id").limit(GRAPH_BEAM).select(
-        "vec_id"
+    return beam_walk(
+        pool,
+        edges,
+        lambda ids: (
+            ids.join(score_e, "vec_id")
+            .crossJoin(qv)
+            .select("vec_id", score.alias("c"))
+        ),
+        lambda new: (
+            new.orderBy(F.desc("c"), "vec_id").limit(GRAPH_BEAM).select("vec_id")
+        ),
     )
+
+
+def beam_walk(pool: DataFrame, edges: DataFrame, score, top) -> DataFrame:
+    """The graph-ANN beam walk every serving key shares:
+    ``GRAPH_ROUNDS`` rounds of frontier = ``top(new)`` (the entry
+    ``pool`` is round 0's ``new``) → broadcast gather of the
+    frontier's out-edges → the UNSEEN candidates, ``score``d → pooled.
+    The walk is keyed by the frontier's columns: ``vec_id`` for one
+    query, ``qid, vec_id`` for a batch. ``score`` maps candidate keys
+    to scored pool rows; ``top`` picks a frontier from scored rows.
+    Every round's arrivals and pool are localCheckpointed, so lineage
+    never spans more than one round. Returns the visited pool."""
+    new = pool
     for _ in range(GRAPH_ROUNDS):
+        frontier = top(new)
+        keys = frontier.columns
         cand = (
             F.broadcast(frontier)
             .join(edges, frontier.vec_id == edges.src)
-            .select(F.col("dst").alias("vec_id"))
+            .select(
+                *(k for k in keys if k != "vec_id"), F.col("dst").alias("vec_id")
+            )
             .distinct()
         )
-        new = (
-            cand.join(pool, "vec_id", "left_anti")
-            .join(score_e, "vec_id")
-            .crossJoin(qv)
-            .select("vec_id", score.alias("c"))
-            .localCheckpoint()
-        )
+        new = score(
+            cand.join(pool.select(*keys), keys, "left_anti")
+        ).localCheckpoint()
         pool = pool.unionByName(new).localCheckpoint()
-        frontier = new.orderBy(F.desc("c"), "vec_id").limit(
-            GRAPH_BEAM
-        ).select("vec_id")
     return pool
 
 
@@ -9569,7 +9621,10 @@ def q_curate_span_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tokens_stripped"),
         )
     )
-    return stats.select(
+    # A source whose every document is an exact copy of a lower-doc_id
+    # document elsewhere has no survivors and no report row, as in the
+    # oracle's all_stats ⋈ surv_stats.
+    return stats.filter(F.col("n_survivors") > 0).select(
         "source",
         "n_docs",
         (F.col("n_docs") - F.col("n_survivors")).alias("n_exact_dropped"),
@@ -15978,34 +16033,20 @@ def _graph_beam_serve_batch(
         .select("qid", "vec_id", score.alias("c"))
         .localCheckpoint()
     )
-    frontier = (
-        pool.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= GRAPH_BEAM)
-        .select("qid", "vec_id")
-    )
-    for _ in range(GRAPH_ROUNDS):
-        cand = (
-            F.broadcast(frontier)
-            .join(edges, frontier.vec_id == edges.src)
-            .select("qid", F.col("dst").alias("vec_id"))
-            .distinct()
-        )
-        new = (
-            cand.join(
-                pool.select("qid", "vec_id"), ["qid", "vec_id"], "left_anti"
-            )
-            .join(e, "vec_id")
+    return beam_walk(
+        pool,
+        edges,
+        lambda ids: (
+            ids.join(e, "vec_id")
             .join(F.broadcast(bq), "qid")
             .select("qid", "vec_id", score.alias("c"))
-            .localCheckpoint()
-        )
-        pool = pool.unionByName(new).localCheckpoint()
-        frontier = (
+        ),
+        lambda new: (
             new.withColumn("rn", F.row_number().over(wq))
             .filter(F.col("rn") <= GRAPH_BEAM)
             .select("qid", "vec_id")
-        )
-    return pool
+        ),
+    )
 
 
 def _graph_batch_oracle() -> str:
@@ -16281,15 +16322,8 @@ def _graph_beam_serve_labeled(
             "vec_id", "label", "embedding", norm("embedding").alias("nrm")
         )
     )
-    full = load_table(spark, sf_dir, "embeddings")
-    qv = F.broadcast(
-        full.filter(F.col("vec_id") == 0).select(
-            F.col("embedding").alias("qv"), norm("embedding").alias("qnrm")
-        )
-    )
-    score = F.round(
-        dot(F.col("embedding"), F.col("qv")) / (F.col("nrm") * F.col("qnrm")),
-        6,
+    qv, score = _query_cosine(
+        load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
     )
     match = (F.col("label") == ANN_FILTER_LABEL).cast("int")
     if aware:
@@ -16302,34 +16336,21 @@ def _graph_beam_serve_labeled(
         .select("vec_id", "label", score.alias("c"))
         .localCheckpoint()
     )
-    frontier = (
-        pool.withColumn("m", match)
-        .orderBy(*front_order)
-        .limit(GRAPH_BEAM)
-        .select("vec_id")
-    )
-    for _ in range(GRAPH_ROUNDS):
-        cand = (
-            F.broadcast(frontier)
-            .join(edges, frontier.vec_id == edges.src)
-            .select(F.col("dst").alias("vec_id"))
-            .distinct()
-        )
-        new = (
-            cand.join(pool.select("vec_id"), "vec_id", "left_anti")
-            .join(el, "vec_id")
+    return beam_walk(
+        pool,
+        edges,
+        lambda ids: (
+            ids.join(el, "vec_id")
             .crossJoin(qv)
             .select("vec_id", "label", score.alias("c"))
-            .localCheckpoint()
-        )
-        pool = pool.unionByName(new).localCheckpoint()
-        frontier = (
+        ),
+        lambda new: (
             new.withColumn("m", match)
             .orderBy(*front_order)
             .limit(GRAPH_BEAM)
             .select("vec_id")
-        )
-    return pool
+        ),
+    )
 
 
 def _graph_serve_labeled_ctes(prefix: str, aware: bool) -> tuple:
@@ -16703,38 +16724,18 @@ def q_sim_graph_ann_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != 0)
         .select("vec_id", "embedding", norm("embedding").alias("nrm"))
     )
-    apool = adc_score(
-        e.filter(F.col("vec_id") % GRAPH_HUB_MOD == 0).select("vec_id")
-    ).localCheckpoint()
-    frontier = apool.orderBy("d", "vec_id").limit(GRAPH_BEAM).select(
-        "vec_id"
+    apool = beam_walk(
+        adc_score(
+            e.filter(F.col("vec_id") % GRAPH_HUB_MOD == 0).select("vec_id")
+        ).localCheckpoint(),
+        edges,
+        adc_score,
+        lambda new: new.orderBy("d", "vec_id").limit(GRAPH_BEAM).select("vec_id"),
     )
-    for _ in range(GRAPH_ROUNDS):
-        cand = (
-            F.broadcast(frontier)
-            .join(edges, frontier.vec_id == edges.src)
-            .select(F.col("dst").alias("vec_id"))
-            .distinct()
-        )
-        new = adc_score(
-            cand.join(apool.select("vec_id"), "vec_id", "left_anti")
-        ).localCheckpoint()
-        apool = apool.unionByName(new).localCheckpoint()
-        frontier = new.orderBy("d", "vec_id").limit(GRAPH_BEAM).select(
-            "vec_id"
-        )
     short = apool.orderBy("d", "vec_id").limit(ADC_RERANK_POOL).select(
         "vec_id"
     )
-    qv = F.broadcast(
-        e0.select(
-            F.col("embedding").alias("qv"), norm("embedding").alias("qnrm")
-        )
-    )
-    score = F.round(
-        dot(F.col("embedding"), F.col("qv")) / (F.col("nrm") * F.col("qnrm")),
-        6,
-    )
+    qv, score = _query_cosine(e0)
     aserve = (
         e.join(short, "vec_id", "left_semi")
         .crossJoin(qv)

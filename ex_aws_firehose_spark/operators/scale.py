@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ex_aws_firehose_spark.caching import session_cached
 from ex_aws_firehose_spark.operators.relational import _cents
 from ex_aws_firehose_spark.registry import query
-from ex_aws_firehose_spark.tables import load_table
+from ex_aws_firehose_spark.tables import fixpoint, load_table
 
 # DuckDB reads the raw ns-precision event timestamps; Spark reads µs
 # (see operators/relational.py EVENTS_US).
@@ -387,6 +387,28 @@ _PR_ORACLE = (
 )
 
 
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The nation trade graph shared by PageRank, BFS, shortest path
+    and HITS: customer-nation → supplier-nation edges weighted by
+    co-occurring lineitems (src, dst, w). Dimensions are broadcast;
+    the lineitem ⋈ orders join is the only fact-scale work. A lazy
+    frame, not session-cached: each consumer derives and materializes
+    its own edge list from it."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(F.broadcast(c), F.col("o_custkey") == c.c_custkey)
+        .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
+        .groupBy(
+            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
+        )
+        .agg(F.count("*").alias("w"))
+    )
+
+
 @query("q_graph_pagerank", oracle=_PR_ORACLE, tags=("scale", "graph"))
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-point PageRank over the trade graph (customer-nation →
@@ -419,19 +441,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     one array) the loop form applies: edges hash-partitioned by src,
     ranks co-partitioned, checkpointing every few iterations — the
     mechanism q_graph_hits / _lp_state still demonstrate."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), F.col("o_custkey") == c.c_custkey)
-        .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count("*").alias("w"))
-    )
+    edges = _trade_edges(spark, sf_dir)
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
     ew = edges.join(outw, "src")
 
@@ -446,7 +456,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # element_at(r, src + 1) relies on NODES being the contiguous
     # 0..n-1 nation keys (sorted) — the same identification the
     # left-join form made through the node equi-join key.
-    fixpoint = (
+    power = (
         f"aggregate(sequence(1, {_PR_ITERS}), "
         f"transform(NODES, nd -> {_PR_SCALE} div n), "
         "(r, it) -> transform(NODES, nd -> "
@@ -455,7 +465,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(acc, e) -> acc + (element_at(r, cast(e.src as int) + 1) * e.w)"
         " div e.ow)) div 100))"
     )
-    row = eagg.crossJoin(F.broadcast(nagg)).withColumn("r", F.expr(fixpoint))
+    row = eagg.crossJoin(F.broadcast(nagg)).withColumn("r", F.expr(power))
     return row.select(
         F.explode(F.arrays_zip("NODES", "r")).alias("z")
     ).select(F.col("z.NODES").alias("node"), F.col("z.r").alias("rank"))
@@ -2485,7 +2495,7 @@ def q_dq_functional_dep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 KCORE_K = 2
-KCORE_MAX_ROUNDS = 12  # peel rounds; convergence pinned < this by test
+KCORE_MAX_ROUNDS = 12  # peel rounds; the peel raises if still shrinking
 
 
 def _kcore_oracle() -> str:
@@ -2551,9 +2561,9 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     one counting aggregate over the symmetric edge list, and the
     driver loop converges by alive-count fixpoint with lineage
     truncated per round (the q_dedup_clusters pattern). The DuckDB
-    oracle unrolls {KCORE_MAX_ROUNDS} peel rounds — exact because a
-    converged alive set is idempotent under further rounds, and a test
-    pins convergence strictly inside the unroll budget.
+    oracle unrolls KCORE_MAX_ROUNDS peel rounds — exact because a
+    converged alive set is idempotent under further rounds, and the
+    peel raises if it is still shrinking at round KCORE_MAX_ROUNDS.
 
     100 TB shape: per round the edge frame is filtered by two
     broadcast-able semi-joins against the shrinking alive set and hash
@@ -2568,9 +2578,9 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("src").alias("u"), F.col("dst").alias("v")
     )
     alive = sym.select("u").distinct().localCheckpoint()
-    n_alive = alive.count()
-    for _ in range(KCORE_MAX_ROUNDS):
-        survivors = (
+    alive, _ = fixpoint(
+        alive,
+        lambda alive: (
             sym.join(alive, "u", "left_semi")
             .join(alive.select(F.col("u").alias("v")), "v", "left_semi")
             .groupBy("u")
@@ -2578,12 +2588,14 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("deg") >= KCORE_K)
             .select("u")
             .localCheckpoint()
-        )
-        n_next = survivors.count()
-        alive = survivors
-        if n_next == n_alive:
-            break
-        n_alive = n_next
+        ),
+        DataFrame.count,
+        max_rounds=KCORE_MAX_ROUNDS,
+        name="q_graph_kcore",
+        # The input is often already the k-core (round 1 converges at
+        # sf0.01 and sf0.1), so its count is worth one job.
+        prev=alive.count(),
+    )
     coredeg = (
         sym.join(alive, "u", "left_semi")
         .join(alive.select(F.col("u").alias("v")), "v", "left_semi")
@@ -2608,7 +2620,10 @@ _BFS_OUT_DEGREE = 2  # keep each node's top-2 out-edges (by weight) — a
 # e0 (weighted nation-trade edges) is its own constant so _sp_oracle can
 # compose it with a weighted edge list instead of string-splitting the
 # formatted _BFS_EDGE_CTE (which silently broke on whitespace edits).
-_BFS_E0_CTE = """WITH e0 AS (
+# The edge CTEs of the BFS, SP and HITS oracles are MATERIALIZED: each
+# round references them, and DuckDB otherwise re-inlines the 4-way
+# lineitem join per reference (out of memory at sf0.1 under a 4 GB cap).
+_BFS_E0_CTE = """WITH e0 AS MATERIALIZED (
         SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
                CAST(COUNT(*) AS BIGINT) AS w
         FROM lineitem l
@@ -2621,7 +2636,7 @@ _BFS_E0_CTE = """WITH e0 AS (
 
 _BFS_EDGE_CTE = f"""
     {_BFS_E0_CTE},
-    edges AS (
+    edges AS MATERIALIZED (
         SELECT src, dst FROM (
             SELECT src, dst,
                    row_number() OVER (PARTITION BY src
@@ -2676,20 +2691,7 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     but the frontier, and a billion-edge graph runs the same loop with
     edges hash-partitioned by src and the frontier broadcast while it
     fits (falling back to a shuffle join past that)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    e0 = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), F.col("o_custkey") == c.c_custkey)
-        .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count("*").alias("w"))
-    )
+    e0 = _trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst"))
     wnd = Window.partitionBy("src").orderBy(F.col("w").desc(), "dst")
     edges = (
         e0.withColumn("rn", F.row_number().over(wnd))
@@ -2731,7 +2733,7 @@ _SP_COST_SCALE = 1_000_000  # edge cost = 1e6 div weight (integer, exact)
 
 def _sp_oracle(rounds: int = _SP_ROUNDS) -> str:
     ctes = [
-        f"""ew AS (
+        f"""ew AS MATERIALIZED (
         SELECT src, dst, {_SP_COST_SCALE} // w AS ecost FROM (
             SELECT src, dst, w,
                    row_number() OVER (PARTITION BY src
@@ -2780,20 +2782,7 @@ def q_graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same loop runs with edges hash-partitioned by src and distances
     co-partitioned (the PageRank layout), checkpointing every few
     rounds to cut lineage."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    e0 = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), F.col("o_custkey") == c.c_custkey)
-        .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count("*").alias("w"))
-    )
+    e0 = _trade_edges(spark, sf_dir).filter(F.col("src") != F.col("dst"))
     wnd = Window.partitionBy("src").orderBy(F.col("w").desc(), "dst")
     edges = (
         e0.withColumn("rn", F.row_number().over(wnd))
@@ -4190,7 +4179,7 @@ _HITS_ITERS = 3
 
 def _hits_oracle() -> str:
     ctes = [
-        """edges0 AS (
+        """edges0 AS MATERIALIZED (
         SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
                CAST(COUNT(*) AS BIGINT) AS w
         FROM lineitem l
@@ -4199,9 +4188,9 @@ def _hits_oracle() -> str:
         JOIN supplier s ON l.l_suppkey = s.s_suppkey
         GROUP BY 1, 2
     )""",
-        """outw AS (SELECT src, CAST(SUM(w) AS BIGINT) AS ow
+        """outw AS MATERIALIZED (SELECT src, CAST(SUM(w) AS BIGINT) AS ow
                     FROM edges0 GROUP BY src)""",
-        """edges AS (
+        """edges AS MATERIALIZED (
         SELECT e.src, e.dst, CAST(e.w * 1000 // o.ow AS BIGINT) AS wpm
         FROM edges0 e JOIN outw o USING (src)
     )""",
@@ -4266,26 +4255,7 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     join of the |nodes|-row score frame against the ≤|nodes|² edge
     frame + one hash agg. Web-scale: partition edges by the join-side
     key per half-step and co-partition scores — same loop."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    s = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    edges0 = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), F.col("o_custkey") == c.c_custkey)
-        .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .agg(F.count("*").alias("w"))
-    )
+    edges0 = _trade_edges(spark, sf_dir)
     outw = edges0.groupBy("src").agg(F.sum("w").alias("ow"))
     edges = (
         edges0.join(outw, "src")

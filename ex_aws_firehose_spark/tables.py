@@ -112,6 +112,32 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
     return df.repartition(parts)
 
 
+_UNMEASURED = object()
+
+
+def fixpoint(
+    state, step, signature, *, max_rounds: int, name: str, prev=_UNMEASURED
+):
+    """Run ``state = step(state)`` until ``signature(state)`` stops
+    changing; return ``(state, rounds)``. The signature is a cheap
+    aggregate of a monotone state (a label sum, an alive count), so
+    equal consecutive signatures mean a fixpoint. ``prev``, the
+    input's signature, lets round 1 converge; without it the input is
+    never measured. Raises ``RuntimeError`` if the signature still
+    changes at round ``max_rounds``: a truncated fixpoint is a wrong
+    answer, not a slow one."""
+    last = _UNMEASURED
+    for rounds in range(1, max_rounds + 1):
+        state = step(state)
+        last, prev = prev, signature(state)
+        if prev == last:
+            return state, rounds
+    raise RuntimeError(
+        f"{name} did not converge in {max_rounds} rounds;"
+        f" last two signatures: {last!r}, {prev!r}"
+    )
+
+
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for the SQL API surface."""
     for name in TABLE_NAMES:

@@ -10,13 +10,17 @@ floor with margin. Measured: 0.45 @ sf0.01, 0.55 @ sf0.1.
 
 from __future__ import annotations
 
+import pytest
+
 from ex_aws_firehose_spark.operators.llm import (
     ANN_NPROBE,
+    min_label_components,
     q_dedup_clusters,
     q_dedup_clusters_star,
     q_sim_ann_ivf,
     q_sim_cosine_topk,
     star_components,
+    star_components_from_edges,
 )
 
 MIN_RECALL = 0.4
@@ -52,6 +56,30 @@ def test_star_components_round_bound(spark, sf_dir):
     small constant, nowhere near the safety bound."""
     _, rounds = star_components(spark, sf_dir)
     assert rounds <= 6, f"star CC took {rounds} rounds"
+
+
+def _path_pairs(spark, n: int):
+    """The near-dup chain 0 - 1 - ... - n-1 as undirected (a, b) pairs."""
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "a long, b long"
+    )
+
+
+def test_min_label_components_raises_past_its_round_cap(spark):
+    """Min-label propagation needs one round per hop: a 20-node chain
+    cannot converge in CC_MAX_ROUNDS = 15 and must fail loudly rather
+    than return truncated labels."""
+    with pytest.raises(RuntimeError, match="min_label_components"):
+        min_label_components(_path_pairs(spark, 20))
+
+
+def test_star_components_collapse_a_long_chain(spark):
+    """large-star/small-star is diameter-independent: the same chain is
+    one component labelled by its minimum."""
+    labels, _ = star_components_from_edges(_path_pairs(spark, 20))
+    assert sorted(tuple(r) for r in labels.collect()) == [
+        (i, 0) for i in range(20)
+    ]
 
 
 def test_simhash_rotate_recall_superset(spark, sf_dir):
@@ -102,56 +130,11 @@ def test_pq_sse_decreases_over_lloyd_rounds(spark, sf_dir):
 
 def test_kcore_converges_inside_unroll_budget(spark, sf_dir):
     """q_graph_kcore's oracle unrolls KCORE_MAX_ROUNDS peel rounds and
-    is exact only if the peel reaches its fixpoint strictly inside that
-    budget — pin it."""
-    import pyspark.sql.functions as F
+    is exact only if the peel reaches its fixpoint within that budget;
+    the peel raises otherwise, so running the key is the check."""
+    from ex_aws_firehose_spark.operators.scale import q_graph_kcore
 
-    from ex_aws_firehose_spark.operators.scale import (
-        KCORE_K,
-        KCORE_MAX_ROUNDS,
-        TRI_MIN_COOCCUR,
-    )
-    from ex_aws_firehose_spark.tables import load_table
-
-    e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("hr")
-    )
-    a, b = e.alias("a"), e.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.hr") == F.col("b.hr"))
-            & (F.col("a.event_type") == F.col("b.event_type"))
-            & (F.col("a.user_id") < F.col("b.user_id")),
-        )
-        .groupBy(F.col("a.user_id").alias("ua"), F.col("b.user_id").alias("ub"))
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= TRI_MIN_COOCCUR)
-    )
-    sym = (
-        edges.select(F.col("ua").alias("u"), F.col("ub").alias("v"))
-        .unionByName(edges.select(F.col("ub").alias("u"), F.col("ua").alias("v")))
-        .localCheckpoint()
-    )
-    alive = sym.select("u").distinct().localCheckpoint()
-    n_alive = alive.count()
-    rounds = 0
-    for _ in range(KCORE_MAX_ROUNDS):
-        alive = (
-            sym.join(alive, "u", "left_semi")
-            .join(alive.select(F.col("u").alias("v")), "v", "left_semi")
-            .groupBy("u")
-            .agg(F.count("*").alias("deg"))
-            .filter(F.col("deg") >= KCORE_K)
-            .select("u")
-            .localCheckpoint()
-        )
-        rounds += 1
-        n_next = alive.count()
-        if n_next == n_alive:
-            break
-        n_alive = n_next
-    assert rounds < KCORE_MAX_ROUNDS, rounds
+    assert q_graph_kcore(spark, sf_dir).collect()
 
 
 def test_adc_recall_contract(spark, sf_dir):

@@ -13,6 +13,7 @@ import itertools
 import shutil
 import tempfile
 
+import duckdb
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -159,3 +160,37 @@ def test_prefix_filter_equals_bruteforce_jaccard(spark, texts):
         if a and b and len(a & b) / len(a | b) >= 0.5:
             expected.add((i, j))
     assert got == expected
+
+
+def test_span_cascade_drops_a_source_with_no_survivors(spark, tmp_path):
+    """A source whose every document is an exact copy of a lower doc_id
+    in another source keeps no survivors; the oracle's inner join gives
+    it no report row, and neither may Spark."""
+    from ex_aws_firehose_spark.operators.llm import q_curate_span_cascade
+    from ex_aws_firehose_spark.registry import REGISTRY
+    from ex_aws_firehose_spark.testing import compare_frames
+
+    texts = [
+        "the quick brown fox jumps over the lazy dog again",
+        "a stitch in time saves nine and then saves more",
+        "every good boy deserves fudge with extra fudge sauce",
+    ]
+    rows = [(i + 1, t, "en", "web", len(t)) for i, t in enumerate(texts)]
+    rows += [(10 + i, t, "en", "mirror", len(t)) for i, t in enumerate(texts)]
+    sf = str(tmp_path)
+    spark.createDataFrame(rows, DOCS_SCHEMA).coalesce(1).write.parquet(
+        f"{sf}/documents.parquet"
+    )
+    got = q_curate_span_cascade(spark, sf).toPandas()
+    assert list(got["source"]) == ["web"]
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{sf}/documents.parquet/*.parquet')"
+        )
+        want = con.execute(REGISTRY["q_curate_span_cascade"].oracle).df()
+    finally:
+        con.close()
+    res = compare_frames("q_curate_span_cascade", got, want)
+    assert res.ok, res.detail
