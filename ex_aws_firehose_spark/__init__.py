@@ -13,8 +13,10 @@ Design principles (see SURVEY.md §4, §7):
 - DataFrame/SQL first: every operator is declared via the PySpark
   DataFrame API so Catalyst performs pushdown/pruning/join-selection and
   Tungsten executes it with whole-stage codegen.
-- UDFs only where built-ins genuinely can't express the semantics
-  (gzip codec, minhash) — and then always Arrow-vectorized pandas UDFs.
+- UDFs only where built-ins genuinely can't express the semantics: the
+  gzip codec is a compiled JVM UDF (functions/GzipCodec.java), and
+  Python code runs only Arrow-batched (pandas UDFs, mapInPandas,
+  applyInPandas).
 - Every query in :mod:`ex_aws_firehose_spark.registry` carries a DuckDB
   oracle SQL string for differential testing.
 """

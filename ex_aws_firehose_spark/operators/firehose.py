@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ex_aws_firehose_spark.functions.codec import gzip_compress, gzip_decompress
+from ex_aws_firehose_spark.functions import codec
 from ex_aws_firehose_spark.caching import session_cached
 from ex_aws_firehose_spark.registry import query
 from ex_aws_firehose_spark.tables import load_table, spread
@@ -141,7 +141,7 @@ split AS (
 
 
 # ---------------------------------------------------------------------------
-# Fixture synthesis (FIXTURES.md §B) — pure DataFrame ops + gzip UDF.
+# Fixture synthesis (FIXTURES.md §B) — pure DataFrame ops + the JVM gzip UDF.
 # ---------------------------------------------------------------------------
 
 
@@ -155,13 +155,13 @@ def _message_col() -> Column:
 # One materialization of the synthesized record batch per (session,
 # sf_dir): every §2.1-2.3 query starts from the same records, so without
 # this each query would re-run the groupBy+gzip synthesis from scratch.
-# Same for the decoded batch: the gzip-decompress UDF is the single most
-# expensive stage of the pipeline, and every downstream query
-# (explode/transform/reassemble/route/split/reingest) starts from it.
+# Same for the decoded batch: every downstream query
+# (explode/transform/reassemble/route/split/reingest) starts from it, so
+# base64 + gunzip + JSON parsing run once per (session, sf_dir).
 @session_cached
 def decoded_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """synthesize_records → decode_chain, persisted once per (session,
-    sf_dir) so the gunzip UDF runs a single time across all queries."""
+    sf_dir) so the decode chain runs a single time across all queries."""
     return decode_chain(synthesize_records(spark, sf_dir)).persist()
 
 
@@ -182,7 +182,8 @@ def synthesize_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     the processor (reference lambda/main.py:74 in reverse).
 
     Scales: one shuffle (groupBy rec_no ≈ 10-row groups, high
-    cardinality), gzip UDF Arrow-batched, no driver materialization.
+    cardinality), gzip in the JVM (``codec.gzip``), no driver
+    materialization.
     The result is persisted (MEMORY_AND_DISK) and shared across queries.
     """
     return _synthesize_records_uncached(spark, sf_dir).persist()
@@ -243,7 +244,7 @@ def _synthesize_records_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(
                 F.lit("rec-"), F.lpad(F.col("rec_no").cast("string"), 8, "0")
             ).alias("record_id"),
-            F.base64(gzip_compress(F.col("payload_json").cast("binary"))).alias(
+            F.base64(codec.gzip(spark, F.col("payload_json").cast("binary"))).alias(
                 "data"
             ),
         )
@@ -263,10 +264,12 @@ def decode_chain(records: DataFrame) -> DataFrame:
     3-way dispatch condition of lambda/main.py:80-91) and ``bare_value``
     (the JSON string payload for the re-ingested-data branch)."""
     # try_to_binary (not unbase64): invalid base64 yields null → the
-    # record dead-letters instead of throwing inside codegen.
+    # record dead-letters instead of throwing inside codegen. It rejects
+    # MIME line breaks, which the reference's b64decode skips, so they
+    # are stripped first (the inverse of unchunked_base64).
+    raw = F.try_to_binary(F.translate("data", "\r\n", ""), F.lit("base64"))
     df = records.withColumn(
-        "payload",
-        gzip_decompress(F.expr("try_to_binary(data, 'base64')")).cast("string"),
+        "payload", codec.gunzip(records.sparkSession, raw).cast("string")
     )
     df = df.withColumn("envelope", F.from_json("payload", ENVELOPE_SCHEMA))
     return df.withColumn(
@@ -356,7 +359,7 @@ def route(decoded: DataFrame) -> DataFrame:
     record's ``logEvents`` array — array order is event order, and
     ``array_join`` skips a NULL-message event exactly as the
     explode → ``reassemble`` composition does. No shuffle, no join
-    back, and ``decoded`` (with its gzip UDF) is read once."""
+    back, and ``decoded`` (with its gunzip) is read once."""
     payload = F.array_join(
         F.transform("envelope.logEvents", lambda e: rewrite_message(e.message)),
         "",
@@ -809,7 +812,7 @@ def q_decode_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "data", F.substring("data", 1, 10)
     )
     # route() is row-local and reads `decoded` once, so the slice's
-    # Arrow decode runs once without a checkpoint barrier.
+    # decode runs once without a checkpoint barrier.
     decoded = decoded_records(spark, sf_dir).filter(~is_corrupt).unionByName(
         decode_chain(corrupted)
     )

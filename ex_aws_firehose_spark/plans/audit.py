@@ -44,14 +44,15 @@ def read_schemas(df: DataFrame) -> list[str]:
     return re.findall(r"ReadSchema: (\S+)", physical_plan(df))
 
 
+PYTHON_EVAL = re.compile(
+    r"\b(BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas\w*)\b"
+)
+
+
 def python_eval_operators(df: DataFrame) -> list[str]:
     """Names of Python-evaluation operators in the plan. Row-at-a-time
     ``BatchEvalPython`` is the slow path and should never appear."""
-    return re.findall(
-        r"\b(BatchEvalPython|ArrowEvalPython|MapInPandas|"
-        r"FlatMapGroupsInPandas\w*)\b",
-        physical_plan(df),
-    )
+    return PYTHON_EVAL.findall(physical_plan(df))
 
 
 def shuffle_count(df: DataFrame) -> int:

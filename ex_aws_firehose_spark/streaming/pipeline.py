@@ -121,12 +121,12 @@ def tri_sink_batch(batch_df: DataFrame, batch_id: int, paths: SinkPaths) -> None
     and fan out to the three sinks. The primary and error sinks are the
     two partitions of ONE result-partitioned write, and ``route`` is
     row-local, so a batch is exactly two single-stage jobs: the backup
-    write, then the routed write, whose one stage runs the gzip UDF
-    once with no exchange or join (per-batch data is tiny, so job count
-    IS the cost)."""
+    write, then the routed write, whose one stage decodes each record
+    once, in the JVM, with no exchange, join or Python worker (per-batch
+    data is tiny, so job count IS the cost)."""
     # Every routed row is Ok or ProcessingFailed, so the write needs no
     # filter on `result`: one would be pushed below the decode and run
-    # the gzip UDF a second time.
+    # the gunzip a second time.
     routed = route(decode_chain(batch_df)).select(
         "idx",
         "record_id",
@@ -161,7 +161,7 @@ def run_stream(
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     # No stream_shuffle override here: this pipeline is stateless (the
     # checkpoint holds only source offsets), and the per-batch transform
-    # wants full parallelism for the gunzip UDF.
+    # has no shuffle for the override to size.
     q = writer.start()
     q.processAllAvailable()
     n_batches = len(

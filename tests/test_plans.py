@@ -136,7 +136,8 @@ def test_no_row_at_a_time_python(spark, sf_dir, key):
     if key in _PYTHON_OK:
         assert "BatchEvalPython" not in ops, ops
     else:
-        # gzip codec UDFs are Arrow-batched pandas UDFs (ArrowEvalPython)
+        # the Python operators these keys use are Arrow-batched
+        # (ArrowEvalPython, MapInPandas, FlatMapGroupsInPandas*)
         assert all(op != "BatchEvalPython" for op in ops), (key, ops)
 
 
@@ -1296,13 +1297,15 @@ def test_reingest_null_size_does_not_poison_packing(spark):
 
 def test_tri_sink_batch_two_jobs_no_shuffle(spark, tmp_path):
     """One delivery micro-batch is exactly two jobs (backup write,
-    routed write), and the routed write decodes once (one
-    ArrowEvalPython) with no exchange or join — a return to the
-    explode/join-back route (4 jobs, 4 gzip decodes) fails here."""
+    routed write), and the routed write has no exchange, no join and no
+    Python evaluation node: the gunzip runs in the JVM. A return to the
+    explode/join-back route (4 jobs, 4 gzip decodes) or to a Python
+    codec fails here."""
     import base64
     import gzip
     import json
 
+    from ex_aws_firehose_spark.plans.audit import PYTHON_EVAL
     from ex_aws_firehose_spark.streaming.pipeline import SinkPaths, tri_sink_batch
 
     def enc(payload):
@@ -1350,7 +1353,7 @@ def test_tri_sink_batch_two_jobs_no_shuffle(spark, tmp_path):
         .physicalPlanDescription()
     )
     assert '__partition_columns=["result"]' in plan, plan
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
+    assert PYTHON_EVAL.findall(plan) == [] and "firehose_gunzip" in plan, plan
     assert "Exchange" not in plan and "Join" not in plan, plan
     assert spark.read.parquet(routed).count() == 3
 
