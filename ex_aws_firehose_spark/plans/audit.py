@@ -7,8 +7,10 @@ scale: small-dim joins stay broadcast, predicates reach the parquet
 scan, projections prune columns, top-k never global-sorts, and no
 operator falls back to row-at-a-time Python evaluation
 (``BatchEvalPython``) — the Arrow-batched forms (``ArrowEvalPython``,
-``MapInPandas``, ``FlatMapGroupsInPandas*``) are the only sanctioned
-Python boundaries.
+``MapInPandas``/``MapInArrow``, the grouped and cogrouped
+``FlatMap*In{Pandas,Arrow}`` nodes, ``ArrowAggregatePython``) are the
+only sanctioned Python boundaries. :data:`PYTHON_EVAL` matches all of
+them, so "no Python node" asserts see every one.
 """
 
 from __future__ import annotations
@@ -44,8 +46,16 @@ def read_schemas(df: DataFrame) -> list[str]:
     return re.findall(r"ReadSchema: (\S+)", physical_plan(df))
 
 
+# Every physical node that ships rows to a Python worker on Spark 4.1:
+# scalar UDFs (BatchEvalPython, ArrowEvalPython), grouped-agg and window
+# pandas UDFs (ArrowAggregatePython, ArrowWindowPython), mapInPandas /
+# mapInArrow, grouped and cogrouped applyInPandas / applyInArrow
+# (FlatMap[Co]GroupsIn{Pandas,Arrow}, incl. ...WithState) and
+# transformWithStateInPandas.
 PYTHON_EVAL = re.compile(
-    r"\b(BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas\w*)\b"
+    r"\b(BatchEvalPython|ArrowEvalPython|Arrow(?:Aggregate|Window)Python"
+    r"|MapIn(?:Pandas|Arrow)|FlatMap(?:Co)?GroupsIn(?:Pandas|Arrow)\w*"
+    r"|TransformWithStateIn\w+)\b"
 )
 
 

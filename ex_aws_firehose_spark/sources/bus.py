@@ -121,7 +121,8 @@ def register_bus_datasource(spark) -> None:
             counts = self._counts()
             if self._chunk <= 0:
                 # unthrottled: the true topic end — deterministic under
-                # processAllAvailable (the registered key's mode)
+                # any trigger (the registered keys drain it with
+                # Trigger.AvailableNow, streaming/pipeline.py::drain)
                 return counts
             # throttled: advance each shard by at most `chunk` past the
             # consumer-group cursor per poll — a bus delivering in

@@ -17,7 +17,14 @@ of one Lambda invocation per record batch.  Checkpointing gives
 at-least-once per sink upgraded to effectively-exactly-once for the
 parquet sinks on replay (idempotent file commits per epoch).
 
-At scale: the trigger interval plays the role of buffer_interval
+Every stream in the package runs through the same three steps:
+:func:`stage_batches` writes one file per intended micro-batch,
+:func:`read_staged` reads them back one file per trigger, and
+:func:`drain` runs the query under ``Trigger.AvailableNow`` until the
+backlog is consumed. Versioned foreachBatch state is found on disk by
+:func:`latest_version` and :func:`read_prior_state`.
+
+At scale: one drain per schedule plays the role of buffer_interval
 (main.tf:18); each sink write is append-only partitioned parquet; no
 state is kept on the driver. A micro-batch runs two single-stage jobs
 (the backup write and the result-partitioned routed write) with no
@@ -27,13 +34,16 @@ pins that shape.
 
 from __future__ import annotations
 
+import itertools
 import os
+from collections.abc import Callable, Iterable
 from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from ex_aws_firehose_spark.caching import session_cached, tracked_mkdtemp
 from ex_aws_firehose_spark.operators.firehose import (
@@ -67,7 +77,7 @@ STREAM_SHUFFLE_PARTITIONS = int(
 def stream_shuffle(spark: SparkSession, n: int = STREAM_SHUFFLE_PARTITIONS):
     """Scope spark.sql.shuffle.partitions to a streaming run. The value
     is captured when the streaming query *starts*, so the override must
-    wrap start()..processAllAvailable(); restored afterwards so batch
+    wrap start()..awaitTermination(); restored afterwards so batch
     plans keep the session default (where AQE coalesces instead)."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
@@ -75,6 +85,123 @@ def stream_shuffle(spark: SparkSession, n: int = STREAM_SHUFFLE_PARTITIONS):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+BATCH_EPOCH = 1_700_000_000  # mtime of the first staged batch file
+
+
+def stage_batches(src: str, frames: Iterable[DataFrame]) -> str:
+    """Append each frame to ``src`` as one ``coalesce(1)`` parquet file
+    and stamp it ``BATCH_EPOCH + 10 * i``. The file source drains files
+    in mtime order, and on a coarse-mtime filesystem two sequential
+    writes can share a timestamp, leaving the random-UUID filename to
+    decide which batch comes first; explicit, strictly increasing stamps
+    make frame ``i`` micro-batch ``i``. Hidden and ``_``-prefixed files
+    (checksums, ``_SUCCESS``) are left alone. Returns ``src``."""
+    seen: set[str] = set()
+    for i, frame in enumerate(frames):
+        frame.coalesce(1).write.mode("append").parquet(src)
+        files = {
+            f
+            for f in os.listdir(src)
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        }
+        stamp = BATCH_EPOCH + 10 * i
+        for f in files - seen:
+            os.utime(os.path.join(src, f), (stamp, stamp))
+        seen = files
+    return src
+
+
+def read_staged(
+    spark: SparkSession, schema: T.StructType | str, src: str
+) -> DataFrame:
+    """The file-source stream over a staged dir: one file per trigger,
+    so each staged frame is one micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+
+
+_MEMORY_SINKS = itertools.count()
+
+
+def drain(
+    stream: DataFrame,
+    sink: Callable[[DataFrame, int], None] | str,
+    checkpoint: str | None = None,
+    mode: str = "append",
+    n: int = STREAM_SHUFFLE_PARTITIONS,
+) -> StreamingQuery:
+    """Run ``stream`` under ``Trigger.AvailableNow`` until everything
+    available at start is consumed, and return the stopped query (its
+    ``recentProgress`` and ``name`` stay readable).
+
+    ``sink`` is a foreachBatch function, ``"memory"`` (a memory table
+    named ``query.name``), ``"noop"``, or a directory for a parquet file
+    sink. The query checkpoints to ``checkpoint``, or to a fresh temp
+    dir when none is given; pass the same dir again to resume. ``n`` is
+    the shuffle-partition count the query runs with (see
+    :func:`stream_shuffle`). A failed batch re-raises here, after the
+    query has stopped and the shuffle setting is restored."""
+    sess = stream.sparkSession
+    w = stream.writeStream.outputMode(mode).option(
+        "checkpointLocation", checkpoint or tracked_mkdtemp(prefix="stream_ckpt_")
+    )
+    if callable(sink):
+        w = w.foreachBatch(sink)
+    elif sink == "memory":
+        w = w.format("memory").queryName(f"mem_sink_{next(_MEMORY_SINKS)}")
+    elif sink == "noop":
+        w = w.format("noop")
+    else:
+        w = w.format("parquet").option("path", sink)
+    with stream_shuffle(sess, n):
+        q = w.trigger(availableNow=True).start()
+        q.awaitTermination()
+    return q
+
+
+def state_versions(root: str, prefix: str) -> list[int]:
+    """The N of every ``{prefix}<N>`` dir under ``root``, ascending."""
+    if not os.path.isdir(root):
+        return []
+    return sorted(
+        int(d[len(prefix):])
+        for d in os.listdir(root)
+        if d.startswith(prefix) and d[len(prefix):].isdigit()
+    )
+
+
+def latest_version(root: str, prefix: str, key: str) -> str:
+    """The highest-numbered ``{prefix}<N>`` dir a versioned foreachBatch
+    drain committed under ``root``. Raises, naming ``key``, when there
+    is none: the staged source was empty or the sink never ran."""
+    versions = state_versions(root, prefix)
+    if not versions:
+        raise RuntimeError(
+            f"{key}: the drain committed no {prefix}<N> versions under "
+            f"{root}; the staged source was empty or the sink never ran"
+        )
+    return os.path.join(root, f"{prefix}{versions[-1]}")
+
+
+def read_prior_state(
+    spark: SparkSession, root: str, prefix: str, batch_id: int, schema: str
+) -> DataFrame:
+    """The state a micro-batch builds on: the highest ``{prefix}<N>``
+    version with N < ``batch_id``, or an empty frame of ``schema``. It
+    is read from disk, not remembered, so a batch replayed after a crash
+    starts from the same base and its overwrite commit is idempotent."""
+    prior = [v for v in state_versions(root, prefix) if v < batch_id]
+    if not prior:
+        # createDataFrame alone plans as an RDD scan; limit(0) makes it
+        # an empty LocalRelation, which the optimizer drops from the
+        # caller's union, so batch 0 plans as if there were no state.
+        return spark.createDataFrame([], schema).limit(0)
+    return spark.read.parquet(os.path.join(root, f"{prefix}{prior[-1]}"))
 
 
 @dataclass(frozen=True)
@@ -91,9 +218,8 @@ def prepare_source_files(
     spark: SparkSession, sf_dir: str, root: str
 ) -> SinkPaths:
     """Write the synthesized record batch as N deterministic files so a
-    file-source stream sees N micro-batches (maxFilesPerTrigger=1).
-    Files are split by idx % N — stable across runs, unlike
-    repartition's hash placement."""
+    file-source stream sees N micro-batches. Files are split by
+    idx % N — stable across runs, unlike repartition's hash placement."""
     routed = os.path.join(root, "routed")
     paths = SinkPaths(
         source=os.path.join(root, "source"),
@@ -109,10 +235,13 @@ def prepare_source_files(
         checkpoint=os.path.join(root, "checkpoint"),
     )
     records = synthesize_records(spark, sf_dir)
-    for i in range(N_SOURCE_FILES):
-        records.filter(F.col("idx") % N_SOURCE_FILES == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(paths.source)
+    stage_batches(
+        paths.source,
+        (
+            records.filter(F.col("idx") % N_SOURCE_FILES == i)
+            for i in range(N_SOURCE_FILES)
+        ),
+    )
     return paths
 
 
@@ -140,35 +269,19 @@ def tri_sink_batch(batch_df: DataFrame, batch_id: int, paths: SinkPaths) -> None
     routed.write.partitionBy("result").mode("append").parquet(paths.routed)
 
 
-def run_stream(
-    spark: SparkSession,
-    paths: SinkPaths,
-    trigger_seconds: int | None = None,
-) -> int:
-    """Run the delivery stream to completion over the prepared source
-    files; returns the number of micro-batches executed. ``trigger``
-    defaults to availableNow-style draining for tests; a production
-    deployment passes 60 (≈ the reference's buffer_interval)."""
-    reader = (
-        spark.readStream.schema(RECORDS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(paths.source)
+def run_stream(spark: SparkSession, paths: SinkPaths) -> int:
+    """Drain the delivery stream over the prepared source files; returns
+    the number of non-empty micro-batches executed (0 on a restart over
+    a fully committed checkpoint)."""
+    # The pipeline is stateless (the checkpoint holds only source
+    # offsets) and the per-batch transform has no shuffle, so the
+    # shuffle-partition scope drain applies changes nothing here.
+    q = drain(
+        read_staged(spark, RECORDS_SCHEMA, paths.source),
+        lambda df, bid: tri_sink_batch(df, bid, paths),
+        paths.checkpoint,
     )
-    writer = reader.writeStream.foreachBatch(
-        lambda df, bid: tri_sink_batch(df, bid, paths)
-    ).option("checkpointLocation", paths.checkpoint)
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    # No stream_shuffle override here: this pipeline is stateless (the
-    # checkpoint holds only source offsets), and the per-batch transform
-    # has no shuffle for the override to size.
-    q = writer.start()
-    q.processAllAvailable()
-    n_batches = len(
-        [p for p in q.recentProgress if p and p["numInputRows"] > 0]
-    )
-    q.stop()
-    return n_batches
+    return len([p for p in q.recentProgress if p["numInputRows"] > 0])
 
 
 # Completed tri-sink runs are cached: the §2.1 sink queries all read from

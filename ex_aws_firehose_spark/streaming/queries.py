@@ -2,19 +2,19 @@
 source/sink contract queries.
 
 Each query actually drives Structured Streaming machinery — file
-sources with maxFilesPerTrigger, foreachBatch fan-out, checkpointed
-restart, stateful dropDuplicates, windowed aggregation in complete
-mode — then returns the materialized result as a DataFrame so the
-driver's DuckDB oracle can diff it. Session windows run as a real
-two-batch streaming query in COMPLETE mode (cross-batch gap merge in
-the state store); their append-mode finalize-behind-watermark
+sources read one staged file per trigger, foreachBatch fan-out,
+checkpointed restart, stateful dropDuplicates, windowed aggregation in
+complete mode — then returns the materialized result as a DataFrame so
+the driver's DuckDB oracle can diff it. Every stream is staged with
+``stage_batches``, read with ``read_staged`` (or a bus source) and run
+to completion by ``drain`` under ``Trigger.AvailableNow``, the one
+trigger the package uses (streaming/pipeline.py). Session windows run
+as a real two-batch streaming query in COMPLETE mode (cross-batch gap
+merge in the state store); their append-mode finalize-behind-watermark
 mechanics are exercised separately in tests/test_streaming.py.
 """
 
 from __future__ import annotations
-
-import itertools
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,13 +25,16 @@ from ex_aws_firehose_spark.operators.firehose import ORACLE_CTE
 from ex_aws_firehose_spark.operators.llm import _minhash_cte
 from ex_aws_firehose_spark.registry import query
 from ex_aws_firehose_spark.streaming.pipeline import (
+    drain,
+    latest_version,
+    read_prior_state,
+    read_staged,
     run_stream,
-    stream_shuffle,
+    stage_batches,
+    state_versions,
     tri_sink_output,
 )
 from ex_aws_firehose_spark.tables import load_table
-
-_MEM_SINK_COUNTER = itertools.count()
 
 # Shared LSH band CTE (shingle → hash → signature → bands) for the
 # streaming incremental-dedup oracle — same SQL the batch MinHash
@@ -50,29 +53,6 @@ EVENTS_TS_SCHEMA = (
 )
 
 
-def _pin_new_mtimes(src: str, seen: set, stamp: float) -> set:
-    """Stamp the parquet part files that appeared since ``seen`` with
-    an explicit mtime (ADVICE r12): sequential coalesce(1) appends are
-    drained by the file source in mtime order, but on a coarse-mtime
-    filesystem two batches can share a timestamp and the random-UUID
-    filename tie-break would swap batch identities. Call after each
-    staged write with a strictly increasing ``stamp``; returns the
-    updated seen-set."""
-    import os
-
-    files = {
-        os.path.join(src, f)
-        for f in os.listdir(src)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    }
-    for f in sorted(files - seen):
-        os.utime(f, (stamp, stamp))
-    return files
-
-
-_BATCH_EPOCH = 1_700_000_000  # fixed base for staged-batch mtimes
-
-
 @session_cached
 def _events_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     """events staged ONCE per (session, sf) as two arrival-ordered
@@ -84,35 +64,7 @@ def _events_replay_dir(spark: SparkSession, sf_dir: str) -> str:
 
     src = os.path.join(tracked_mkdtemp(prefix="events_replay_"), "src")
     e = load_table(spark, sf_dir, "events")
-    seen = set()
-    e.coalesce(1).write.mode("append").parquet(src)
-    seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH)
-    e.filter(F.col("event_id") % 10 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    _pin_new_mtimes(src, seen, _BATCH_EPOCH + 10)
-    return src
-
-
-def _latest_state_version(state_dir: str, key: str) -> int:
-    """Highest v<N> directory under a versioned foreachBatch state dir,
-    with an explicit error when the drain produced NO batches (empty
-    staged source / sink never ran) — otherwise the bare max() raises
-    an unhelpful ValueError / FileNotFoundError."""
-    import os
-
-    versions = (
-        [d for d in os.listdir(state_dir) if d.startswith("v")]
-        if os.path.isdir(state_dir)
-        else []
-    )
-    if not versions:
-        raise RuntimeError(
-            f"{key}: the availableNow drain produced no state versions "
-            f"under {state_dir} — the staged source was empty or the "
-            "foreachBatch sink never ran"
-        )
-    return max(int(d[1:]) for d in versions)
+    return stage_batches(src, [e, e.filter(F.col("event_id") % 10 == 0)])
 
 
 @session_cached
@@ -146,16 +98,16 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # µs (or ms) parquet timestamp: read directly as TimestampType —
         # under the pinned UTC session zone the NTZ wall clocks become
         # the same UTC instants load_table's cast produces.
-        return spark.readStream.schema(EVENTS_TS_SCHEMA).parquet(d)
-    raw = spark.readStream.schema(EVENTS_STREAM_SCHEMA).parquet(d)
+        return read_staged(spark, EVENTS_TS_SCHEMA, d)
+    raw = read_staged(spark, EVENTS_STREAM_SCHEMA, d)
     return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
 @session_cached
 def _parity_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """events staged once per (session, sf) as two parity-split parquet
-    files (even event_ids, then odd — write order pins mtime order, so
-    the file source drains them as two micro-batches in that order).
+    files (even event_ids, then odd — drained as two micro-batches in
+    that order).
     Shared by every stream key that replays events as a 2-batch stream
     (session windows, stateful count, upsert, append windows): one
     staging write instead of one per key. Read-only to consumers; each
@@ -164,43 +116,9 @@ def _parity_events_dir(spark: SparkSession, sf_dir: str) -> str:
 
     src = os.path.join(tracked_mkdtemp(prefix="events_parity_"), "src")
     e = load_table(spark, sf_dir, "events")
-    seen = set()
-    e.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH)
-    e.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    _pin_new_mtimes(src, seen, _BATCH_EPOCH + 10)
-    return src
-
-
-def _run_to_memory(
-    stream_df: DataFrame, mode: str = "complete", n: int | None = None
-) -> DataFrame:
-    """Drain a streaming aggregation into a memory sink and return the
-    final table. ``n`` overrides the stream's shuffle-partition count:
-    stream-stream joins checkpoint FOUR state stores per partition per
-    micro-batch (left/right x keyToNumValues/keyWithIndexToValue), so
-    their commit I/O scales with partitions harder than any other
-    stateful op — they run at 4 (measured ~1 s/key saving vs 8 across
-    repeated A/B at sf0.1; key cardinality is far below either)."""
-    name = f"mem_sink_{next(_MEM_SINK_COUNTER)}"
-    sess = stream_df.sparkSession
-    with (
-        stream_shuffle(sess, n) if n is not None else stream_shuffle(sess)
-    ):
-        q = (
-            stream_df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        q.processAllAvailable()
-    out = stream_df.sparkSession.table(name)
-    q.stop()
-    return out
+    return stage_batches(
+        src, [e.filter(F.col("event_id") % 2 == p) for p in (0, 1)]
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -313,7 +231,7 @@ def q_stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value"
         ),
     )
-    out = _run_to_memory(agg)
+    out = spark.table(drain(agg, "memory", mode="complete").name)
     return out.select(
         F.col("w.start").alias("window_start"), "event_type", "n", "total_value"
     )
@@ -341,7 +259,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = e.groupBy(
         F.window("ts", "2 hours", "1 hour").alias("w"), "event_type"
     ).agg(F.count("*").alias("n"))
-    out = _run_to_memory(agg)
+    out = spark.table(drain(agg, "memory", mode="complete").name)
     return out.select(
         F.col("w.start").alias("window_start"), "event_type", "n"
     )
@@ -391,18 +309,11 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds merge lookups to adjacent windows. Complete mode here is
     test harness, not the scale path — production uses append +
     watermark so state drains."""
-    import os
-
-    src = _parity_events_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = read_staged(spark, EVENTS_TS_SCHEMA, _parity_events_dir(spark, sf_dir))
     agg = stream.groupBy(
         F.session_window("ts", "30 minutes").alias("w"), "user_id"
     ).agg(F.count("*").alias("n_events"))
-    out = _run_to_memory(agg)
+    out = spark.table(drain(agg, "memory", mode="complete").name)
     return out.select(
         "user_id", F.col("w.start").alias("session_start"), "n_events"
     )
@@ -435,19 +346,13 @@ def q_stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tracked_mkdtemp(prefix="late_stream_")
     src, out = os.path.join(root, "src"), os.path.join(root, "out")
     e = load_table(spark, sf_dir, "events")
-    # batch 1: on-time traffic; batch 2: the replayed (late) slice.
-    # The file source orders batches by modification time, so force a
-    # strictly earlier mtime on the batch-1 files — two writes landing
-    # within the filesystem's mtime resolution could otherwise flip
-    # the batch order and invert the watermark state.
-    e.filter(F.col("event_id") % 4 != 3).coalesce(1).write.mode("append").parquet(src)
-    first_files = {
-        os.path.join(src, f) for f in os.listdir(src) if f.endswith(".parquet")
-    }
-    e.filter(F.col("event_id") % 4 == 3).coalesce(1).write.mode("append").parquet(src)
-    earlier = time.time() - 60
-    for f in first_files:
-        os.utime(f, (earlier, earlier))
+    # batch 1: on-time traffic; batch 2: the replayed (late) slice. The
+    # staged order is the drain order, so the watermark state is set by
+    # batch 1 before batch 2 is classified.
+    stage_batches(
+        src,
+        [e.filter(F.col("event_id") % 4 != 3), e.filter(F.col("event_id") % 4 == 3)],
+    )
 
     state = {"cutoff": None}
 
@@ -464,19 +369,11 @@ def q_stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         if batch_max is not None and (cutoff is None or batch_max > cutoff):
             state["cutoff"] = batch_max
 
-    stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    drain(
+        read_staged(spark, EVENTS_TS_SCHEMA, src),
+        classify,
+        os.path.join(root, "ckpt"),
     )
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(classify)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
     return spark.read.parquet(out)
 
 
@@ -501,24 +398,13 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(root, "out")
     src = _events_replay_dir(spark, sf_dir)
 
-    stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .dropDuplicates(["event_id"])
+    drain(
+        read_staged(spark, EVENTS_TS_SCHEMA, src).dropDuplicates(["event_id"]),
+        lambda df, bid: df.select("event_id", "event_type")
+        .write.mode("append")
+        .parquet(out),
+        os.path.join(root, "ckpt"),
     )
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: df.select("event_id", "event_type")
-                .write.mode("append")
-                .parquet(out)
-            )
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
     deduped = spark.read.parquet(out)
     return deduped.groupBy("event_type").agg(
         F.countDistinct("event_id").alias("n_unique")
@@ -545,8 +431,6 @@ def q_stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     with custom expiry, CEP patterns, dedup-with-TTL): swap the fold in
     ``update_fn``, keep the plumbing. State lives in the state store
     (per-key, partitioned by the groupBy), never on the driver."""
-    import os
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     src = _parity_events_dir(spark, sf_dir)
@@ -560,11 +444,7 @@ def q_stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((n,))
         yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
 
-    stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = read_staged(spark, EVENTS_TS_SCHEMA, src)
     counted = stream.groupBy("user_id").applyInPandasWithState(
         update_fn,
         outputStructType="user_id long, n_events long",
@@ -572,7 +452,7 @@ def q_stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = _run_to_memory(counted, mode="update")
+    out = spark.table(drain(counted, "memory", mode="update").name)
     # Update-mode sink holds one row per (user, batch); the final state
     # is the monotone maximum.
     return out.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
@@ -743,7 +623,7 @@ def q_stream_join_static(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("tier", F.lit("other")).alias("tier"),
         F.round(F.col("value") * 100, 0).cast("long").alias("value_cents"),
     )
-    return _run_to_memory(enriched, mode="append")
+    return spark.table(drain(enriched, "memory").name)
 
 
 @query(
@@ -796,7 +676,12 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("v_user").alias("user_id"), "view_id", "click_id"
     )
-    return _run_to_memory(joined, mode="append", n=4)
+    # Stream-stream joins checkpoint FOUR state stores per partition per
+    # micro-batch (left/right x keyToNumValues/keyWithIndexToValue), so
+    # their commit I/O scales with partitions harder than any other
+    # stateful op; they run at 4 (measured ~1 s/key saving vs 8 across
+    # repeated A/B at sf0.1; key cardinality is far below either).
+    return spark.table(drain(joined, "memory", n=4).name)
 
 
 @query(
@@ -841,56 +726,62 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (shared staged source; state/checkpoint dirs stay per-query).
     src = _parity_events_dir(spark, sf_dir)
     root = tracked_mkdtemp(prefix="upsert_stream_")
-
-    state: dict[str, str | None] = {"dir": None}
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        cur = (
-            spark.read.parquet(state["dir"])
-            if state["dir"] is not None
-            else spark.createDataFrame(
-                [],
-                "user_id long, last_ts timestamp, last_event_type string, "
-                "last_cents long, event_id long",
-            )
-        )
-        incoming = batch_df.select(
-            "user_id",
-            F.col("ts").alias("last_ts"),
-            F.col("event_type").alias("last_event_type"),
-            F.round(F.col("value") * 100, 0).cast("long").alias("last_cents"),
-            "event_id",
-        )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("user_id").orderBy(
-            F.desc("last_ts"), F.desc("event_id")
-        )
-        merged = (
-            cur.unionByName(incoming)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        new_dir = os.path.join(root, f"state_v{batch_id}")
-        merged.write.mode("overwrite").parquet(new_dir)
-        state["dir"] = new_dir
-
-    stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    drain(
+        read_staged(spark, EVENTS_TS_SCHEMA, src),
+        lambda df, bid: _last_writer_wins_batch(spark, root, df, bid),
+        os.path.join(root, "ckpt"),
     )
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    return spark.read.parquet(state["dir"]).select(
-        "user_id", "last_ts", "last_event_type", "last_cents"
+    return spark.read.parquet(
+        latest_version(root, "state_v", "q_stream_upsert")
+    ).select("user_id", "last_ts", "last_event_type", "last_cents")
+
+
+def _last_writer_wins_batch(
+    spark: SparkSession, root: str, batch_df: DataFrame, batch_id: int
+) -> None:
+    """One micro-batch of a keyed current-image merge (q_stream_upsert,
+    q_stream_cdc_apply): union the prior ``state_v<N>`` image with the
+    batch's rows, keep the greatest (ts, event_id) row per user, and
+    commit ``state_v{batch_id}`` copy-on-write."""
+    import os
+
+    from pyspark.sql import Window
+
+    cur = read_prior_state(
+        spark,
+        root,
+        "state_v",
+        batch_id,
+        "user_id long, last_ts timestamp, last_event_type string, "
+        "last_cents long, event_id long",
+    )
+    incoming = batch_df.select(
+        "user_id",
+        F.col("ts").alias("last_ts"),
+        F.col("event_type").alias("last_event_type"),
+        F.round(F.col("value") * 100, 0).cast("long").alias("last_cents"),
+        "event_id",
+    )
+    w = Window.partitionBy("user_id").orderBy(
+        F.desc("last_ts"), F.desc("event_id")
+    )
+    merged = (
+        cur.unionByName(incoming)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+    merged.write.mode("overwrite").parquet(
+        os.path.join(root, f"state_v{batch_id}")
+    )
+
+
+def _events_slices_dir(spark: SparkSession, sf_dir: str, src: str) -> str:
+    """events staged into ``src`` as three event_id % 3 slices, drained
+    as three micro-batches in slice order."""
+    e = load_table(spark, sf_dir, "events")
+    return stage_batches(
+        src, [e.filter(F.col("event_id") % 3 == i) for i in range(3)]
     )
 
 
@@ -906,10 +797,10 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trigger.AvailableNow batch catch-up: the stream drains everything
-    available in bounded micro-batches (maxFilesPerTrigger still
-    applies, unlike the legacy Trigger.Once) and then terminates on its
-    own — the scheduled-backfill mode that lets one streaming codebase
-    serve both 24/7 and run-every-hour deployments with the same
+    available in bounded micro-batches (the one-file-per-trigger read
+    limit still applies, unlike the legacy Trigger.Once) and then
+    terminates on its own — the scheduled-backfill mode that lets one
+    streaming codebase serve both 24/7 and run-every-hour deployments with the same
     checkpoint. Three staged source files force three catch-up batches;
     the drained union must equal the batch view of the same data
     (counts per type + slice coverage proves every file landed exactly
@@ -917,43 +808,26 @@ def q_stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: AvailableNow is how you replay a large backlog
     without an unbounded first batch — the file source paces batches by
-    maxFilesPerTrigger/maxBytesPerTrigger, so executor memory and
+    its per-trigger file/byte limits, so executor memory and
     shuffle sizing hold during catch-up, and the checkpoint advances
     incrementally (a crash mid-backfill resumes, not restarts)."""
     import os
 
     root = tracked_mkdtemp(prefix="availnow_stream_")
-    src, out = os.path.join(root, "src"), os.path.join(root, "out")
-    e = load_table(spark, sf_dir, "events")
-    seen = set()
-    for slice_id in range(3):
-        e.filter(F.col("event_id") % 3 == slice_id).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH + slice_id * 10)
-
-    stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    src = _events_slices_dir(spark, sf_dir, os.path.join(root, "src"))
+    out = os.path.join(root, "out")
+    # Idempotent landing: each micro-batch overwrites its own
+    # batch-id-named subdirectory, so a replayed batch (failure after
+    # write, before checkpoint commit) rewrites the same files instead
+    # of appending duplicates — the "landed exactly once" contract the
+    # count-sensitive oracle asserts.
+    drain(
+        read_staged(spark, EVENTS_TS_SCHEMA, src),
+        lambda df, bid: df.select("event_id", "event_type")
+        .write.mode("overwrite")
+        .parquet(os.path.join(out, f"batch-{bid}")),
+        os.path.join(root, "ckpt"),
     )
-    with stream_shuffle(spark):
-        # Idempotent landing: each micro-batch overwrites its own
-        # batch-id-named subdirectory, so a replayed batch (failure
-        # after write, before checkpoint commit) rewrites the same
-        # files instead of appending duplicates — the "landed exactly
-        # once" contract the count-sensitive oracle asserts.
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: df.select("event_id", "event_type")
-                .write.mode("overwrite")
-                .parquet(os.path.join(out, f"batch-{bid}"))
-            )
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
     drained = spark.read.option("recursiveFileLookup", "true").parquet(out)
     return drained.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -994,16 +868,11 @@ def q_stream_replay_heal(spark: SparkSession, sf_dir: str) -> DataFrame:
     this key exercises is exactly the one those logs close."""
     import os
 
-    root = tracked_mkdtemp(prefix="replayheal_stream_")
-    src, out = os.path.join(root, "src"), os.path.join(root, "out")
-    e = load_table(spark, sf_dir, "events")
-    seen = set()
-    for slice_id in range(3):
-        e.filter(F.col("event_id") % 3 == slice_id).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH + slice_id * 10)
+    from pyspark.errors import StreamingQueryException
 
+    root = tracked_mkdtemp(prefix="replayheal_stream_")
+    src = _events_slices_dir(spark, sf_dir, os.path.join(root, "src"))
+    out = os.path.join(root, "out")
     crash_flag = os.path.join(root, "crash_armed")
     open(crash_flag, "w").close()
 
@@ -1017,30 +886,16 @@ def q_stream_replay_heal(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "injected crash: sink written, checkpoint commit pending"
             )
 
-    def start():
-        stream = (
-            spark.readStream.schema(EVENTS_TS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        return (
-            stream.writeStream.foreachBatch(land)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-
-    with stream_shuffle(spark):
-        q = start()
-        crashed = False
-        try:
-            q.awaitTermination()
-        except Exception:  # noqa: BLE001 — the injected failure, by design
-            crashed = True
-        if not crashed:
-            raise AssertionError("injected crash did not fire")
-        q2 = start()  # same checkpoint: replays batch 1, drains the rest
-        q2.awaitTermination()
+    stream = read_staged(spark, EVENTS_TS_SCHEMA, src)
+    ckpt = os.path.join(root, "ckpt")
+    try:
+        drain(stream, land, ckpt)
+    except StreamingQueryException as err:
+        if "injected crash" not in str(err):
+            raise
+    else:
+        raise AssertionError("injected crash did not fire")
+    drain(stream, land, ckpt)  # same checkpoint: replays batch 1, drains the rest
     drained = spark.read.option("recursiveFileLookup", "true").parquet(out)
     return drained.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -1051,40 +906,27 @@ def q_stream_replay_heal(spark: SparkSession, sf_dir: str) -> DataFrame:
 @session_cached
 def _docs_range_batches_dir(spark: SparkSession, sf_dir: str) -> str:
     """documents staged ONCE per (session, sf) as three arrival-ordered
-    doc_id-range parquet files (cuts at n//3 and 2*(n//3); strictly
-    increasing mtimes pin the file-source drain order). Shared by every
+    doc_id-range parquet files (cuts at n//3 and 2*(n//3)). Shared by every
     doc-stream key (minhash dedup, span dedup, quality monitor) — one
     staging write per session instead of one per key; consumers prune
     to the columns they need via their readStream schema."""
     import os
 
-    root = tracked_mkdtemp(prefix="docs_batches_")
-    src = os.path.join(root, "src")
+    src = os.path.join(tracked_mkdtemp(prefix="docs_batches_"), "src")
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
     n = d.count()
     cuts = (n // 3, 2 * (n // 3))
-    os.makedirs(src, exist_ok=True)
-    for i, cond in enumerate(
-        (
-            F.col("doc_id") < cuts[0],
-            (F.col("doc_id") >= cuts[0]) & (F.col("doc_id") < cuts[1]),
-            F.col("doc_id") >= cuts[1],
-        )
-    ):
-        scratch = os.path.join(root, f"scratch-{i}")
-        d.filter(cond).coalesce(1).write.mode("overwrite").parquet(scratch)
-        part = next(
-            f
-            for f in os.listdir(scratch)
-            if f.endswith(".parquet") and not f.startswith(".")
-        )
-        staged = os.path.join(src, f"batch-{i}.parquet")
-        os.rename(os.path.join(scratch, part), staged)
-        t = 1_700_000_000 + i * 10
-        os.utime(staged, (t, t))
-    return src
+    doc = F.col("doc_id")
+    return stage_batches(
+        src,
+        [
+            d.filter(doc < cuts[0]),
+            d.filter((doc >= cuts[0]) & (doc < cuts[1])),
+            d.filter(doc >= cuts[1]),
+        ],
+    )
 
 
 @query(
@@ -1178,19 +1020,11 @@ def q_stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             bands_b.unpersist()
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    drain(
+        read_staged(spark, "doc_id long, text string", src),
+        dedup_batch,
+        os.path.join(root, "ckpt"),
     )
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(dedup_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
 
 
@@ -1228,25 +1062,15 @@ def q_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(root, "out")
     src = _events_replay_dir(spark, sf_dir)
 
-    stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    drain(
+        read_staged(spark, EVENTS_TS_SCHEMA, src)
         .withWatermark("ts", "30 days")
-        .dropDuplicatesWithinWatermark(["event_id"])
+        .dropDuplicatesWithinWatermark(["event_id"]),
+        lambda df, bid: df.select("event_id", "event_type")
+        .write.mode("overwrite")
+        .parquet(os.path.join(out, f"batch-{bid}")),
+        os.path.join(root, "ckpt"),
     )
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: df.select("event_id", "event_type")
-                .write.mode("overwrite")
-                .parquet(os.path.join(out, f"batch-{bid}"))
-            )
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
     deduped = spark.read.option("recursiveFileLookup", "true").parquet(out)
     return deduped.groupBy("event_type").agg(
         F.countDistinct("event_id").alias("n_unique"),
@@ -1290,28 +1114,13 @@ def q_stream_window_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     tolerance against result availability. Two micro-batches force the
     watermark to advance across batches, proving cross-batch
     finalization rather than a single-batch flush."""
-    import os
-
-    src = _parity_events_dir(spark, sf_dir)
     stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        read_staged(spark, EVENTS_TS_SCHEMA, _parity_events_dir(spark, sf_dir))
         .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
     )
-    name = f"mem_sink_{next(_MEM_SINK_COUNTER)}"
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    return spark.table(drain(stream, "memory").name).select(
         F.col("w.start").alias("window_start"), "event_type", "n"
     )
 
@@ -1349,7 +1158,6 @@ def q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _parity_events_dir(spark, sf_dir)
     root = tracked_mkdtemp(prefix="incr_agg_stream_")
-    state: dict[str, str | None] = {"dir": None}
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         part = batch_df.groupBy("user_id").agg(
@@ -1359,14 +1167,12 @@ def q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.max("ts").alias("last_ts"),
         )
-        cur = (
-            spark.read.parquet(state["dir"])
-            if state["dir"] is not None
-            else spark.createDataFrame(
-                [],
-                "user_id long, n_events long, sum_cents long, "
-                "last_ts timestamp",
-            )
+        cur = read_prior_state(
+            spark,
+            root,
+            "state_v",
+            batch_id,
+            "user_id long, n_events long, sum_cents long, last_ts timestamp",
         )
         merged = (
             cur.unionByName(part)
@@ -1377,27 +1183,18 @@ def q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("last_ts").alias("last_ts"),
             )
         )
-        new_dir = os.path.join(root, f"state_v{batch_id}")
-        merged.write.mode("overwrite").parquet(new_dir)
-        state["dir"] = new_dir
-
-    stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option(
-                "checkpointLocation",
-                tracked_mkdtemp(prefix="incr_agg_ckpt_"),
-            )
-            .start()
+        merged.write.mode("overwrite").parquet(
+            os.path.join(root, f"state_v{batch_id}")
         )
-        q.processAllAvailable()
-        q.stop()
-    return spark.read.parquet(state["dir"])
+
+    drain(
+        read_staged(spark, EVENTS_TS_SCHEMA, src),
+        merge_batch,
+        os.path.join(root, "ckpt"),
+    )
+    return spark.read.parquet(
+        latest_version(root, "state_v", "q_stream_incremental_agg")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1422,9 +1219,8 @@ def _ivm_two_sided_dir(spark: SparkSession, sf_dir: str) -> str:
     batch 0 = the base load (both sides), batches 1 and 2 = mixed
     deltas (new orders AND new customers in the same batch — the
     simultaneous two-sided arrival q_ivm_join_delta's algebra is
-    for). Staged mtimes are pinned explicitly (``_pin_new_mtimes``,
-    ADVICE r12) so the file source drains the batches deterministically
-    even on a coarse-mtime filesystem."""
+    for). ``stage_batches`` pins the drain order explicitly (ADVICE
+    r12), so it holds even on a coarse-mtime filesystem."""
     import os
 
     from ex_aws_firehose_spark.operators.relational import _cents
@@ -1447,13 +1243,9 @@ def _ivm_two_sided_dir(spark: SparkSession, sf_dir: str) -> str:
         F.expr(_IVM_STREAM_BATCH.format(k="c_custkey")).alias("b"),
     )
     both = o.unionByName(c)
-    seen = set()
-    for b in range(3):
-        both.filter(F.col("b") == b).drop("b").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH + b * 10)
-    return src
+    return stage_batches(
+        src, [both.filter(F.col("b") == b).drop("b") for b in range(3)]
+    )
 
 
 def _ivm_join_batch(
@@ -1473,28 +1265,17 @@ def _ivm_join_batch(
     raise AFTER the state write, BEFORE Spark commits the checkpoint."""
     import os
 
-    versions = (
-        [
-            int(d[len("state_v"):])
-            for d in os.listdir(root)
-            if d.startswith("state_v")
-        ]
-        if os.path.isdir(root)
-        else []
+    # one versioned file holds all four tables, tbl-tagged — the whole
+    # state is metadata-grain, so ONE write/read job per commit beats a
+    # file per table (job count is the cost here; at scale each tbl is
+    # its own partitioned table)
+    st = read_prior_state(
+        spark,
+        root,
+        "state_v",
+        batch_id,
+        "tbl string, custkey long, seg string, cents long",
     )
-    prior = [v for v in versions if v < batch_id]
-    if prior:
-        # one versioned file holds all four tables, tbl-tagged — the
-        # whole state is metadata-grain, so ONE write/read job per
-        # commit beats a file per table (job count is the cost here;
-        # at scale each tbl is its own partitioned table)
-        st = spark.read.parquet(
-            os.path.join(root, f"state_v{max(prior)}")
-        )
-    else:
-        st = spark.createDataFrame(
-            [], "tbl string, custkey long, seg string, cents long"
-        )
     s_old = st.filter(F.col("tbl") == "s").select("custkey", "seg")
     r_old = st.filter(F.col("tbl") == "r").select("custkey", "cents")
     v_old = st.filter(F.col("tbl") == "v").select(
@@ -1564,29 +1345,15 @@ def _ivm_join_stream_run(
 ) -> None:
     import os
 
-    src = _ivm_two_sided_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(_IVM_SIDED_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     # n=4: each commit runs three metadata-grain groupBys + one state
     # write; fewer partitions measured ~1 s/drain faster than the
     # stream default (state is |segments|+|custkeys| rows, never big)
-    with stream_shuffle(spark, 4):
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: _ivm_join_batch(
-                    spark, root, df, bid, crash_flag
-                )
-            )
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    drain(
+        read_staged(spark, _IVM_SIDED_SCHEMA, _ivm_two_sided_dir(spark, sf_dir)),
+        lambda df, bid: _ivm_join_batch(spark, root, df, bid, crash_flag),
+        os.path.join(root, "ckpt"),
+        n=4,
+    )
 
 
 @query(
@@ -1669,16 +1436,13 @@ def q_stream_ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = tracked_mkdtemp(prefix="ivm_join_stream_")
     _ivm_join_stream_run(spark, sf_dir, root)
-    last = _latest_state_version_prefixed(root, "q_stream_ivm_join_delta")
-
-    def _state(b: int) -> DataFrame:
-        return spark.read.parquet(os.path.join(root, f"state_v{b}"))
-
-    view = _state(last).filter(F.col("tbl") == "v").select(
-        "seg", F.col("cents").alias("v_cents")
+    view = (
+        spark.read.parquet(latest_version(root, "state_v", "q_stream_ivm_join_delta"))
+        .filter(F.col("tbl") == "v")
+        .select("seg", F.col("cents").alias("v_cents"))
     )
     d0, d1, d2 = (
-        _state(b)
+        spark.read.parquet(os.path.join(root, f"state_v{b}"))
         .filter(F.col("tbl") == "d")
         .select("seg", F.col("cents").alias("d_cents"))
         for b in (0, 1, 2)
@@ -1731,27 +1495,6 @@ def q_stream_ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _latest_state_version_prefixed(root: str, key: str) -> int:
-    """Highest state_v<N> under a versioned foreachBatch root, with an
-    explicit error when the drain produced no commits."""
-    import os
-
-    versions = (
-        [
-            int(d[len("state_v"):])
-            for d in os.listdir(root)
-            if d.startswith("state_v")
-        ]
-        if os.path.isdir(root)
-        else []
-    )
-    if not versions:
-        raise RuntimeError(
-            f"{key}: the drain produced no state versions under {root}"
-        )
-    return max(versions)
-
-
 @query(
     "q_stream_state_inspect",
     oracle="""
@@ -1780,24 +1523,12 @@ def q_stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _parity_events_dir(spark, sf_dir)
     root = tracked_mkdtemp(prefix="state_inspect_")
     ckpt = os.path.join(root, "ckpt")
-    stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    counts = (
+        read_staged(spark, EVENTS_TS_SCHEMA, src)
         .groupBy("user_id")
         .agg(F.count("*").alias("n_events"))
     )
-    name = f"mem_sink_{next(_MEM_SINK_COUNTER)}"
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
+    drain(counts, "memory", ckpt, mode="complete")
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.user_id").alias("user_id"),
@@ -1844,14 +1575,12 @@ def q_stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set(k, v)
     try:
         stream = (
-            spark.readStream.schema(EVENTS_TS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+            read_staged(spark, EVENTS_TS_SCHEMA, src)
             .dropDuplicates(["event_id"])
             .groupBy("event_type")
             .agg(F.count("*").alias("n_unique"))
         )
-        out = _run_to_memory(stream, mode="complete")
+        out = spark.table(drain(stream, "memory", mode="complete").name)
     finally:
         for k, v in old.items():
             if v is not None:
@@ -1878,8 +1607,7 @@ def _time_split_events_dir(spark: SparkSession, sf_dir: str) -> str:
     half by timestamp, second half, then a single watermark-driver row
     (reserved user −1, max ts + 100 h) whose only job is to push the
     watermark past every real user's last-event + gap so their timers
-    fire. Sequential coalesce(1) writes pin mtime order, which is the
-    file source's drain order."""
+    fire, drained as three micro-batches in that order."""
     import os
 
     src = os.path.join(tracked_mkdtemp(prefix="events_tsplit_"), "src")
@@ -1895,11 +1623,6 @@ def _time_split_events_dir(spark: SparkSession, sf_dir: str) -> str:
     e1 = e.crossJoin(F.broadcast(split)).filter(F.col("ts") <= F.col("s"))
     e2 = e.crossJoin(F.broadcast(split)).filter(F.col("ts") > F.col("s"))
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    seen = set()
-    e1.select(cols).coalesce(1).write.mode("append").parquet(src)
-    seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH)
-    e2.select(cols).coalesce(1).write.mode("append").parquet(src)
-    seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH + 10)
     flush = e.agg(F.max("ts").alias("m")).select(
         F.lit(-1).cast("long").alias("event_id"),
         F.expr("m + INTERVAL 100 HOURS").alias("ts"),
@@ -1908,9 +1631,7 @@ def _time_split_events_dir(spark: SparkSession, sf_dir: str) -> str:
         F.lit(0.0).alias("value"),
         F.lit("").alias("props"),
     )
-    flush.coalesce(1).write.mode("append").parquet(src)
-    _pin_new_mtimes(src, seen, _BATCH_EPOCH + 20)
-    return src
+    return stage_batches(src, [e1.select(cols), e2.select(cols), flush])
 
 
 @query(
@@ -1974,8 +1695,6 @@ def q_stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     store (RocksDB-backed in production, q_stream_rocksdb_state);
     timers are per-key entries the store scans once per batch — the
     1-row flush batch costs O(|timed-out keys|), not O(events)."""
-    import os
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     gap_us = SESSION_TIMEOUT_GAP_HOURS * 3600 * 1_000_000
@@ -2019,11 +1738,8 @@ def q_stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
             columns=["user_id", "start_us", "end_us", "n_events", "closed_by"],
         )
 
-    stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withWatermark("ts", "1 second")
+    stream = read_staged(spark, EVENTS_TS_SCHEMA, src).withWatermark(
+        "ts", "1 second"
     )
     sessions = stream.groupBy("user_id").applyInPandasWithState(
         sess_fn,
@@ -2035,7 +1751,7 @@ def q_stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    out = _run_to_memory(sessions, mode="append")
+    out = spark.table(drain(sessions, "memory").name)
     return out.filter(F.col("user_id") >= 0).select(
         "user_id",
         F.timestamp_micros(F.col("start_us")).alias("session_start"),
@@ -2071,24 +1787,14 @@ def q_stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero extra pass; cost is O(metrics), not O(rows). This is the
     cheap end of the observability spectrum (the expensive end — full
     state introspection — is q_stream_state_inspect)."""
-    src = _parity_events_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .observe(
-            "audit",
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(
-                F.round(F.col("value") * 100, 0).cast("long")
-            ).alias("cents_sum"),
-        )
+    stream = read_staged(
+        spark, EVENTS_TS_SCHEMA, _parity_events_dir(spark, sf_dir)
+    ).observe(
+        "audit",
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("cents_sum"),
     )
-    with stream_shuffle(spark):
-        q = stream.writeStream.format("noop").start()
-        q.processAllAvailable()
-        progress = list(q.recentProgress)
-        q.stop()
+    progress = drain(stream, "noop").recentProgress
     rows = []
     idx = 0
     for p in progress:
@@ -2144,12 +1850,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     quiet stream emits its tail only when something advances event
     time — the flush row here is the test-harness form of the
     heartbeat messages real deployments inject."""
-    src = _time_split_events_dir(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    raw = read_staged(spark, EVENTS_TS_SCHEMA, _time_split_events_dir(spark, sf_dir))
     views = (
         raw.filter(F.col("event_type").isin("view", "flush"))
         .select(
@@ -2175,7 +1876,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
         "left_outer",
     ).select(F.col("v_user").alias("user_id"), "view_id", "click_id")
-    out = _run_to_memory(joined, mode="append", n=4)
+    out = spark.table(drain(joined, "memory", n=4).name)
     return out.filter(F.col("user_id") >= 0)
 
 
@@ -2222,12 +1923,7 @@ def q_stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFra
     join documents cuts both ways here: BOTH sides' unmatched results
     are delayed by up to the watermark gap, so a quiet side needs the
     heartbeat pattern or its tail stays buffered."""
-    src = _time_split_events_dir(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    raw = read_staged(spark, EVENTS_TS_SCHEMA, _time_split_events_dir(spark, sf_dir))
     views = (
         raw.filter(F.col("event_type").isin("view", "flush"))
         .select(
@@ -2257,7 +1953,7 @@ def q_stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFra
         "view_id",
         "click_id",
     )
-    out = _run_to_memory(joined, mode="append", n=4)
+    out = spark.table(drain(joined, "memory", n=4).name)
     return out.filter(F.col("user_id") >= 0)
 
 
@@ -2424,22 +2120,11 @@ def q_stream_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx_dir = os.path.join(root, "shingle_index")
     out_dir = os.path.join(root, "verdicts")
 
-    def span_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _span_dedup_batch(spark, idx_dir, out_dir, batch_df, batch_id)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    drain(
+        read_staged(spark, "doc_id long, text string", src),
+        lambda df, bid: _span_dedup_batch(spark, idx_dir, out_dir, df, bid),
+        os.path.join(root, "ckpt"),
     )
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(span_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
 
 
@@ -2526,9 +2211,11 @@ def q_stream_sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .distinct()
         )
-        prev_dir = os.path.join(state_dir, f"v{batch_id - 1}")
-        if os.path.isdir(prev_dir):
-            hb = hb.unionByName(spark.read.parquet(prev_dir)).distinct()
+        hb = hb.unionByName(
+            read_prior_state(
+                spark, state_dir, "v", batch_id, "event_type string, h long"
+            )
+        ).distinct()
         rn = F.row_number().over(
             W.partitionBy("event_type").orderBy("h")
         )
@@ -2543,21 +2230,14 @@ def q_stream_sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state_dir, f"v{batch_id}")
         )
 
-    stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    drain(
+        read_staged(spark, EVENTS_TS_SCHEMA, src),
+        kmv_batch,
+        os.path.join(root, "ckpt"),
     )
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(kmv_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    last = _latest_state_version(state_dir, "q_stream_sketch_kmv")
-    state = spark.read.parquet(os.path.join(state_dir, f"v{last}"))
+    state = spark.read.parquet(
+        latest_version(state_dir, "v", "q_stream_sketch_kmv")
+    )
     w = W.partitionBy("event_type").orderBy("h")
     kth = (
         state.withColumn("rn", F.row_number().over(w))
@@ -2634,11 +2314,7 @@ def q_stream_join_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100).cast("long").alias("tier_cents"),
         )
     )
-    raw = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    raw = read_staged(spark, EVENTS_TS_SCHEMA, src)
     purchases = raw.filter(F.col("event_type") == "purchase").select(
         "event_id",
         "user_id",
@@ -2652,7 +2328,7 @@ def q_stream_join_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("valid_to").isNull() | (F.col("ts") < F.col("valid_to"))),
         "left",
     ).select("event_id", "user_id", "purchase_cents", "tier_cents")
-    return _run_to_memory(joined, mode="append")
+    return spark.table(drain(joined, "memory").name)
 
 
 # ---------------------------------------------------------------------------
@@ -2727,7 +2403,7 @@ def src_stream_bus_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = bus_topic_dir(spark, sf_dir)
     register_bus_datasource(spark)
     stream = spark.readStream.format("bus_topic").option("path", root).load()
-    return _run_to_memory(stream, mode="append")
+    return spark.table(drain(stream, "memory").name)
 
 
 # ---------------------------------------------------------------------------
@@ -2763,17 +2439,12 @@ def q_stream_filter_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, no watermark, no Python — a stateless filter costs nothing
     at any scale. Batch keys q_filter_pattern_* prove the DSL; this
     key proves its streaming placement."""
-    src = _parity_events_dir(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    raw = read_staged(spark, EVENTS_TS_SCHEMA, _parity_events_dir(spark, sf_dir))
     msg = F.expr(_MSG_EXPR)
     flt = raw.select("event_id", msg.alias("message")).filter(
         _STREAM_FP.column(message=F.col("message"))
     )
-    return _run_to_memory(flt, mode="append")
+    return spark.table(drain(flt, "memory").name)
 
 
 # ---------------------------------------------------------------------------
@@ -2796,7 +2467,7 @@ def q_stream_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING ANN serving — the online half of the index lifecycle
     (train → persist → q_sim_index_persist proves the round-trip →
     THIS key serves a live query stream against it): query vectors
-    arrive in micro-batches (two staged files, maxFilesPerTrigger=1),
+    arrive in micro-batches (two staged files, one per trigger),
     each batch routes/scores through the SAME _adc_serve_batch path as
     the batch key against the RELOADED parquet index, results append
     to the sink. Because per-query serving is independent of how
@@ -2823,42 +2494,17 @@ def q_stream_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     bq = e.filter(F.col("vec_id") < ADC_BATCH_Q).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
-    # two single-file micro-batches, mtime-ordered
     half = ADC_BATCH_Q // 2
-    for i, cond in enumerate(
-        (F.col("qid") < half, F.col("qid") >= half)
-    ):
-        part = os.path.join(root, f"scratch-{i}")
-        bq.filter(cond).coalesce(1).write.mode("overwrite").parquet(part)
-        f = next(
-            n
-            for n in os.listdir(part)
-            if n.endswith(".parquet") and not n.startswith(".")
-        )
-        os.makedirs(qdir, exist_ok=True)
-        staged = os.path.join(qdir, f"batch-{i}.parquet")
-        os.rename(os.path.join(part, f), staged)
-        t = 1_700_000_000 + i * 10
-        os.utime(staged, (t, t))
-
-    def serve_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _adc_serve_batch(batch_df, cent, codes, cb, members).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    stream = (
-        spark.readStream.schema("qid long, qv array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(qdir)
+    stage_batches(
+        qdir, [bq.filter(F.col("qid") < half), bq.filter(F.col("qid") >= half)]
     )
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(serve_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        read_staged(spark, "qid long, qv array<float>", qdir),
+        lambda df, bid: _adc_serve_batch(df, cent, codes, cb, members)
+        .write.mode("append")
+        .parquet(out_dir),
+        os.path.join(root, "ckpt"),
+    )
     return spark.read.parquet(out_dir)
 
 
@@ -2932,8 +2578,6 @@ def q_stream_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch (text never shuffles); per batch only 3 counters
     aggregate. Stateless — monitoring adds nothing to the stream's
     state store."""
-    import os
-
     from ex_aws_firehose_spark.operators.llm import gopher_ok_flags
 
     src = _docs_range_batches_dir(spark, sf_dir)
@@ -2961,19 +2605,7 @@ def q_stream_quality_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         row.write.mode("append").parquet(out_dir)
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(monitor_batch)
-            .option("checkpointLocation", tracked_mkdtemp(prefix="qm_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(read_staged(spark, "doc_id long, text string", src), monitor_batch)
     return spark.read.parquet(out_dir)
 
 
@@ -3018,56 +2650,13 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _parity_events_dir(spark, sf_dir)
     root = tracked_mkdtemp(prefix="cdc_apply_")
-
-    state: dict[str, str | None] = {"dir": None}
-
-    def apply_cdc(batch_df: DataFrame, batch_id: int) -> None:
-        cur = (
-            spark.read.parquet(state["dir"])
-            if state["dir"] is not None
-            else spark.createDataFrame(
-                [],
-                "user_id long, last_ts timestamp, last_event_type string, "
-                "last_cents long, event_id long",
-            )
-        )
-        incoming = batch_df.select(
-            "user_id",
-            F.col("ts").alias("last_ts"),
-            F.col("event_type").alias("last_event_type"),
-            F.round(F.col("value") * 100, 0).cast("long").alias("last_cents"),
-            "event_id",
-        )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("user_id").orderBy(
-            F.desc("last_ts"), F.desc("event_id")
-        )
-        merged = (
-            cur.unionByName(incoming)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        new_dir = os.path.join(root, f"state_v{batch_id}")
-        merged.write.mode("overwrite").parquet(new_dir)
-        state["dir"] = new_dir
-
-    stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    drain(
+        read_staged(spark, EVENTS_TS_SCHEMA, src),
+        lambda df, bid: _last_writer_wins_batch(spark, root, df, bid),
+        os.path.join(root, "ckpt"),
     )
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(apply_cdc)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
     return (
-        spark.read.parquet(state["dir"])
+        spark.read.parquet(latest_version(root, "state_v", "q_stream_cdc_apply"))
         .filter(F.col("last_event_type") != "error")
         .select("user_id", "last_ts", "last_event_type", "last_cents")
     )
@@ -3138,15 +2727,14 @@ def q_stream_throttle_carryover(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _parity_events_dir(spark, sf_dir)
     root = tracked_mkdtemp(prefix="throttle_stream_")
     admitted_dir = os.path.join(root, "admitted")
-    state: dict[str, str | None] = {"dir": None}
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
-        backlog = (
-            spark.read.parquet(state["dir"])
-            if state["dir"] is not None
-            else spark.createDataFrame(
-                [], "event_id long, ts timestamp, user_id long, cents long"
-            )
+        backlog = read_prior_state(
+            spark,
+            root,
+            "queue_v",
+            batch_id,
+            "event_id long, ts timestamp, user_id long, cents long",
         )
         arrivals = batch_df.select(
             "event_id",
@@ -3171,27 +2759,19 @@ def q_stream_throttle_carryover(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("append")
             .parquet(admitted_dir)
         )
-        new_dir = os.path.join(root, f"queue_v{batch_id}")
         ranked.filter(F.col("rn") > THROTTLE_R).drop("rn").write.mode(
             "overwrite"
-        ).parquet(new_dir)
-        state["dir"] = new_dir
+        ).parquet(os.path.join(root, f"queue_v{batch_id}"))
 
-    stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    drain(
+        read_staged(spark, EVENTS_TS_SCHEMA, src),
+        admit,
+        os.path.join(root, "ckpt"),
     )
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(admit)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
     leftover = (
-        spark.read.parquet(state["dir"])
+        spark.read.parquet(
+            latest_version(root, "queue_v", "q_stream_throttle_carryover")
+        )
         .select(
             F.lit(-1).cast("long").alias("round"),
             "event_id",
@@ -3253,16 +2833,9 @@ def sink_manifest_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     root = tracked_mkdtemp(prefix="manifest_sink_")
-    src = os.path.join(root, "src")
+    src = _events_slices_dir(spark, sf_dir, os.path.join(root, "src"))
     data = os.path.join(root, "data")
     man = os.path.join(root, "manifest")
-    e = load_table(spark, sf_dir, "events")
-    seen = set()
-    for slice_id in range(3):
-        e.filter(F.col("event_id") % 3 == slice_id).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH + slice_id * 10)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         path = os.path.join(data, f"batch-{batch_id}")
@@ -3285,19 +2858,11 @@ def sink_manifest_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ordering is the transaction: data durable BEFORE the entry
         entry.coalesce(1).write.mode("append").parquet(man)
 
-    with stream_shuffle(spark):
-        stream = (
-            spark.readStream.schema(EVENTS_TS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(commit_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        read_staged(spark, EVENTS_TS_SCHEMA, src),
+        commit_batch,
+        os.path.join(root, "ckpt"),
+    )
 
     # the torn write: a data dir with DUPLICATE rows, no manifest entry
     spark.read.parquet(os.path.join(data, "batch-0")).write.mode(
@@ -3356,26 +2921,10 @@ def _stage_bus_rebalance(spark: SparkSession, sf_dir: str) -> str:
         for shard in range(BUS_SHARDS - 1):
             write_shard(shard)
         register_bus_datasource(spark)
-
-        def drain() -> None:
-            stream = (
-                spark.readStream.format("bus_topic")
-                .option("path", root)
-                .load()
-            )
-            q = (
-                stream.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        with stream_shuffle(spark):
-            drain()
-            write_shard(BUS_SHARDS - 1)  # the rebalance event
-            drain()
+        stream = spark.readStream.format("bus_topic").option("path", root).load()
+        drain(stream, out, ckpt)
+        write_shard(BUS_SHARDS - 1)  # the rebalance event
+        drain(stream, out, ckpt)
     finally:
         con.close()
     return out
@@ -3518,9 +3067,15 @@ def q_stream_exp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type", "bucket")
             .agg(F.count("*").alias("nb"))
         )
-        prev_dir = os.path.join(state_dir, f"v{batch_id - 1}")
-        if os.path.isdir(prev_dir):
-            hb = hb.unionByName(spark.read.parquet(prev_dir))
+        hb = hb.unionByName(
+            read_prior_state(
+                spark,
+                state_dir,
+                "v",
+                batch_id,
+                "event_type string, bucket long, nb long",
+            )
+        )
         merged = hb.groupBy("event_type", "bucket").agg(
             F.sum("nb").alias("nb")
         )
@@ -3528,21 +3083,14 @@ def q_stream_exp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state_dir, f"v{batch_id}")
         )
 
-    stream = (
-        spark.readStream.schema(EVENTS_TS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    drain(
+        read_staged(spark, EVENTS_TS_SCHEMA, src),
+        exph_batch,
+        os.path.join(root, "ckpt"),
     )
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(exph_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    last = _latest_state_version(state_dir, "q_stream_exp_histogram")
-    state = spark.read.parquet(os.path.join(state_dir, f"v{last}"))
+    state = spark.read.parquet(
+        latest_version(state_dir, "v", "q_stream_exp_histogram")
+    )
     tot = state.groupBy("event_type").agg(F.sum("nb").alias("n"))
     wcum = W.partitionBy("event_type").orderBy("bucket").rowsBetween(
         W.unboundedPreceding, 0
@@ -3650,19 +3198,9 @@ def q_stream_graph_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id") < ADC_BATCH_Q
     ).select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
     half = ADC_BATCH_Q // 2
-    for i, cond in enumerate((F.col("qid") < half, F.col("qid") >= half)):
-        part = os.path.join(root, f"scratch-{i}")
-        bq.filter(cond).coalesce(1).write.mode("overwrite").parquet(part)
-        f = next(
-            n
-            for n in os.listdir(part)
-            if n.endswith(".parquet") and not n.startswith(".")
-        )
-        os.makedirs(qdir, exist_ok=True)
-        staged = os.path.join(qdir, f"batch-{i}.parquet")
-        os.rename(os.path.join(part, f), staged)
-        t = 1_700_000_000 + i * 10
-        os.utime(staged, (t, t))
+    stage_batches(
+        qdir, [bq.filter(F.col("qid") < half), bq.filter(F.col("qid") >= half)]
+    )
 
     from pyspark.sql import Window as W
 
@@ -3682,19 +3220,11 @@ def q_stream_graph_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    stream = (
-        spark.readStream.schema("qid long, qv array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(qdir)
+    drain(
+        read_staged(spark, "qid long, qv array<float>", qdir),
+        serve_batch,
+        os.path.join(root, "ckpt"),
     )
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(serve_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return spark.read.parquet(out_dir)
 
 
@@ -3763,12 +3293,7 @@ def _graph_upsert_batch(
         raise RuntimeError(
             "injected crash: index appended, serve/commit pending"
         )
-    versions = sorted(
-        int(d[len("delta_v"):])
-        for d in os.listdir(root)
-        if d.startswith("delta_v")
-        and int(d[len("delta_v"):]) <= batch_id
-    )
+    versions = [v for v in state_versions(root, "delta_v") if v <= batch_id]
     delta = spark.read.parquet(
         *[os.path.join(root, f"delta_v{v}") for v in versions]
     )
@@ -3825,32 +3350,20 @@ def _graph_upsert_stream_run(
             .filter(f"NOT ({base_w})")
             .select("vec_id", "embedding")
         )
-        seen = set()
-        for i, half in enumerate(
-            (INC_ADD_MOD - 1, 2 * INC_ADD_MOD - 1)
-        ):
-            nb_all.filter(
-                F.col("vec_id") % (2 * INC_ADD_MOD) == half
-            ).coalesce(1).write.mode("append").parquet(src)
-            seen = _pin_new_mtimes(src, seen, _BATCH_EPOCH + i * 10)
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    with stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda df, bid: _graph_upsert_batch(
-                    spark, sf_dir, root, parts, base_w, df, bid,
-                    crash_flag,
-                )
-            )
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        stage_batches(
+            src,
+            [
+                nb_all.filter(F.col("vec_id") % (2 * INC_ADD_MOD) == half)
+                for half in (INC_ADD_MOD - 1, 2 * INC_ADD_MOD - 1)
+            ],
         )
-        q.awaitTermination()
+    drain(
+        read_staged(spark, "vec_id long, embedding array<float>", src),
+        lambda df, bid: _graph_upsert_batch(
+            spark, sf_dir, root, parts, base_w, df, bid, crash_flag
+        ),
+        os.path.join(root, "ckpt"),
+    )
 
 
 @query(
@@ -3886,33 +3399,8 @@ def q_stream_graph_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (O(hubs + ROUNDS·BEAM·degree)). State on disk is the edge delta
     (≤ (K1+K2)·2·|added| rows) — the index IS the state, no
     state-store blowup with stream length."""
-    import os
-
     root = tracked_mkdtemp(prefix="graph_upsert_")
     _graph_upsert_stream_run(spark, sf_dir, root)
-    last = _latest_state_version_prefixed_name(
-        root, "serve_v", "q_stream_graph_upsert"
+    return spark.read.parquet(
+        latest_version(root, "serve_v", "q_stream_graph_upsert")
     )
-    return spark.read.parquet(os.path.join(root, f"serve_v{last}"))
-
-
-def _latest_state_version_prefixed_name(
-    root: str, prefix: str, key: str
-) -> int:
-    """Highest ``{prefix}<N>`` under a versioned foreachBatch root."""
-    import os
-
-    versions = (
-        [
-            int(d[len(prefix):])
-            for d in os.listdir(root)
-            if d.startswith(prefix)
-        ]
-        if os.path.isdir(root)
-        else []
-    )
-    if not versions:
-        raise RuntimeError(
-            f"{key}: the drain produced no {prefix}* commits under {root}"
-        )
-    return max(versions)

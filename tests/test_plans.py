@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import re
 
+import pandas as pd
 import pytest
 
 from ex_aws_firehose_spark.plans.audit import (
@@ -139,6 +140,38 @@ def test_no_row_at_a_time_python(spark, sf_dir, key):
         # the Python operators these keys use are Arrow-batched
         # (ArrowEvalPython, MapInPandas, FlatMapGroupsInPandas*)
         assert all(op != "BatchEvalPython" for op in ops), (key, ops)
+
+
+def test_python_eval_finds_arrow_map_cogroup_and_agg_nodes(spark):
+    """The "no Python node" audit must see every node that ships rows
+    to a Python worker, not only the scalar-UDF and mapInPandas forms:
+    mapInArrow, cogrouped applyInPandas and a grouped-agg pandas UDF
+    plan as MapInArrow, FlatMapCoGroupsInPandas and
+    ArrowAggregatePython."""
+    # the pandas_udf type hints are strings under `from __future__ import
+    # annotations`; pyspark resolves them against module globals
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
+
+    from ex_aws_firehose_spark.plans.audit import physical_plan
+
+    df = spark.range(4).select(
+        F.col("id").alias("k"), F.col("id").cast("double").alias("v")
+    )
+
+    @pandas_udf("double")
+    def mean_udf(v: pd.Series) -> float:
+        return v.mean()
+
+    plans = {
+        "MapInArrow": df.mapInArrow(lambda it: it, df.schema),
+        "FlatMapCoGroupsInPandas": df.groupBy("k")
+        .cogroup(df.groupBy("k"))
+        .applyInPandas(lambda left, right: left, df.schema),
+        "ArrowAggregatePython": df.groupBy("k").agg(mean_udf("v")),
+    }
+    for node, plan in plans.items():
+        assert python_eval_operators(plan) == [node], (node, physical_plan(plan))
 
 
 def test_bucketed_join_is_shuffle_free(spark, sf_dir):

@@ -12,8 +12,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from ex_aws_firehose_spark.streaming.pipeline import (
+    BATCH_EPOCH,
+    drain,
+    latest_version,
     prepare_source_files,
+    read_staged,
     run_stream,
+    stage_batches,
+    state_versions,
 )
 
 TS_SCHEMA = "event_id long, ts timestamp, user_id long, value double"
@@ -443,26 +449,15 @@ def test_crash_replay_span_index(spark, smoke_dir):
     cuts = (n // 3, 2 * (n // 3))
 
     def stage(root):
-        src = os.path.join(root, "src")
-        os.makedirs(src, exist_ok=True)
-        conds = (
-            F.col("doc_id") < cuts[0],
-            (F.col("doc_id") >= cuts[0]) & (F.col("doc_id") < cuts[1]),
-            F.col("doc_id") >= cuts[1],
+        doc = F.col("doc_id")
+        return stage_batches(
+            os.path.join(root, "src"),
+            [
+                d.filter(doc < cuts[0]),
+                d.filter((doc >= cuts[0]) & (doc < cuts[1])),
+                d.filter(doc >= cuts[1]),
+            ],
         )
-        for i, cond in enumerate(conds):
-            scratch = os.path.join(root, f"scratch-{i}")
-            d.filter(cond).coalesce(1).write.mode("overwrite").parquet(scratch)
-            part = next(
-                f
-                for f in os.listdir(scratch)
-                if f.endswith(".parquet") and not f.startswith(".")
-            )
-            staged = os.path.join(src, f"batch-{i}.parquet")
-            os.rename(os.path.join(scratch, part), staged)
-            t = 1_700_000_000 + i * 10
-            os.utime(staged, (t, t))
-        return src
 
     def run(root, crash_on_batch=None):
         src = stage(root)
@@ -521,10 +516,7 @@ def test_crash_replay_ivm_join_state(spark, smoke_dir):
     state_v1) and its copy-on-write overwrite is idempotent, so the
     healed final view equals the one-shot orders⋈customer aggregate."""
     from ex_aws_firehose_spark.operators.relational import _cents
-    from ex_aws_firehose_spark.streaming.queries import (
-        _ivm_join_stream_run,
-        _latest_state_version_prefixed,
-    )
+    from ex_aws_firehose_spark.streaming.queries import _ivm_join_stream_run
     from ex_aws_firehose_spark.tables import load_table
 
     root = tempfile.mkdtemp(prefix="crash_ivm_join_")
@@ -537,11 +529,11 @@ def test_crash_replay_ivm_join_state(spark, smoke_dir):
     # restart: same checkpoint -> batch 1 replays, then batch 2 drains
     _ivm_join_stream_run(spark, smoke_dir, root, crash_flag=crash_flag)
 
-    last = _latest_state_version_prefixed(root, "test_ivm_join")
-    assert last == 2
+    last = latest_version(root, "state_v", "test_ivm_join")
+    assert last == os.path.join(root, "state_v2")
     healed = {
         (r.seg, r.cents)
-        for r in spark.read.parquet(os.path.join(root, f"state_v{last}"))
+        for r in spark.read.parquet(last)
         .filter(F.col("tbl") == "v")
         .collect()
     }
@@ -562,34 +554,90 @@ def test_crash_replay_ivm_join_state(spark, smoke_dir):
     assert healed == truth
 
 
-def test_pin_new_mtimes_stamps_only_new_files(tmp_path):
-    """_pin_new_mtimes (ADVICE r12): each call stamps exactly the
-    parquet part files that appeared since the previous call, skips
-    hidden/metadata files, and leaves earlier batches' stamps intact —
-    the property that makes staged-batch drain order deterministic on
-    a coarse-mtime filesystem."""
-    import os
+def test_stage_batches_stamps_one_file_per_frame(spark, tmp_path):
+    """stage_batches (ADVICE r12): frame i lands as exactly one parquet
+    part file stamped BATCH_EPOCH + 10*i, a later frame leaves earlier
+    stamps intact, and hidden/metadata files are never stamped — the
+    property that makes staged-batch drain order deterministic on a
+    coarse-mtime filesystem. The drain then sees frame i as batch i."""
+    import pyarrow.parquet as pq
 
-    from ex_aws_firehose_spark.streaming.queries import (
-        _BATCH_EPOCH,
-        _pin_new_mtimes,
+    src = stage_batches(
+        str(tmp_path / "src"), [spark.range(0, 1), spark.range(1, 3)]
+    )
+    names = os.listdir(src)
+    parts = [
+        f for f in names if f.endswith(".parquet") and not f.startswith((".", "_"))
+    ]
+    assert len(parts) == 2
+    stamps = {
+        pq.read_metadata(os.path.join(src, f)).num_rows: os.path.getmtime(
+            os.path.join(src, f)
+        )
+        for f in parts
+    }
+    assert stamps == {1: BATCH_EPOCH, 2: BATCH_EPOCH + 10}
+    meta = [f for f in names if f.startswith((".", "_"))]
+    assert "_SUCCESS" in meta
+    assert all(
+        os.path.getmtime(os.path.join(src, f)) > BATCH_EPOCH + 10 for f in meta
     )
 
+    batches = []
+    drain(
+        read_staged(spark, "id long", src),
+        lambda df, bid: batches.append((bid, df.count())),
+    )
+    assert batches == [(0, 1), (1, 2)]
+
+
+def test_latest_version_raises_naming_key_when_drain_committed_nothing(
+    spark, tmp_path
+):
+    """A versioned drain over an empty staged source commits nothing;
+    reading its latest state must fail loudly and name the key."""
     src = tmp_path / "src"
     src.mkdir()
-    (src / "part-0.parquet").write_bytes(b"a")
-    (src / "_SUCCESS").write_bytes(b"")
-    (src / ".part-0.parquet.crc").write_bytes(b"")
-    seen = _pin_new_mtimes(str(src), set(), _BATCH_EPOCH)
-    assert {os.path.basename(f) for f in seen} == {"part-0.parquet"}
-    (src / "part-1.parquet").write_bytes(b"b")
-    seen2 = _pin_new_mtimes(str(src), seen, _BATCH_EPOCH + 10)
-    assert {os.path.basename(f) for f in seen2} == {
-        "part-0.parquet",
-        "part-1.parquet",
-    }
-    assert os.path.getmtime(src / "part-0.parquet") == _BATCH_EPOCH
-    assert os.path.getmtime(src / "part-1.parquet") == _BATCH_EPOCH + 10
+    root = str(tmp_path / "state")
+    drain(
+        read_staged(spark, "id long", str(src)),
+        lambda df, bid: df.write.parquet(os.path.join(root, f"state_v{bid}")),
+    )
+    assert not os.path.exists(root)
+    with pytest.raises(RuntimeError, match="q_empty_drain"):
+        latest_version(root, "state_v", "q_empty_drain")
+
+
+def test_latest_version_orders_numerically(tmp_path):
+    """v10 beats v9 (a string max would pick v9); dirs whose suffix is
+    not a number, and other prefixes, are not versions."""
+    for d in ("state_v2", "state_v9", "state_v10", "state_vx", "ckpt"):
+        (tmp_path / d).mkdir()
+    assert state_versions(str(tmp_path), "state_v") == [2, 9, 10]
+    assert latest_version(str(tmp_path), "state_v", "k") == str(
+        tmp_path / "state_v10"
+    )
+
+
+def test_drain_reraises_batch_failure_and_restores_shuffle(spark, tmp_path):
+    """A foreachBatch function that raises fails the drain with that
+    error, the batch ran with drain's shuffle-partition count, and the
+    session's own setting is back afterwards."""
+    from pyspark.errors import StreamingQueryException
+
+    src = stage_batches(str(tmp_path / "src"), [spark.range(0, 2)])
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    n = int(before) + 1
+    seen = []
+
+    def boom(df, bid):
+        seen.append(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        raise RuntimeError("boom in foreachBatch")
+
+    with pytest.raises(StreamingQueryException, match="boom in foreachBatch"):
+        drain(read_staged(spark, "id long", src), boom, n=n)
+    assert seen == [str(n)]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_graph_upsert_crash_replay_heals(spark, sf_dir):
@@ -604,10 +652,7 @@ def test_graph_upsert_crash_replay_heals(spark, sf_dir):
     import tempfile
 
     from ex_aws_firehose_spark.operators.llm import q_sim_graph_ann_add
-    from ex_aws_firehose_spark.streaming.queries import (
-        _graph_upsert_stream_run,
-        _latest_state_version_prefixed_name,
-    )
+    from ex_aws_firehose_spark.streaming.queries import _graph_upsert_stream_run
 
     root = tempfile.mkdtemp(prefix="graph_upsert_heal_")
     crash = os.path.join(root, "crash_armed")
@@ -618,10 +663,9 @@ def test_graph_upsert_crash_replay_heals(spark, sf_dir):
     assert not os.path.isdir(os.path.join(root, "serve_v0"))
 
     _graph_upsert_stream_run(spark, sf_dir, root)  # same checkpoint
-    last = _latest_state_version_prefixed_name(
-        root, "serve_v", "q_stream_graph_upsert"
+    healed = spark.read.parquet(
+        latest_version(root, "serve_v", "q_stream_graph_upsert")
     )
-    healed = spark.read.parquet(os.path.join(root, f"serve_v{last}"))
     want = q_sim_graph_ann_add(spark, sf_dir)
     assert sorted(map(tuple, healed.collect())) == sorted(
         map(tuple, want.collect())

@@ -2,8 +2,10 @@
 #4): time each streaming shape with a (near-)EMPTY source so the
 measurement is pure per-query fixed cost — query start, checkpoint dir
 creation, offset/commit log writes, state-store lifecycle, query stop —
-with no data-proportional work. Three repetitions per shape, median
-reported. The floor table goes to BASELINE.md: stream_total is
+with no data-proportional work. Every shape is staged, read and
+drained by streaming/pipeline.py's ``stage_batches``, ``read_staged``
+and ``drain``, so the floor is the engine's own. Three repetitions per
+shape, median reported. The floor table goes to BASELINE.md: stream_total is
 re-targeted against SUM(class floor x class population) instead of the
 round-8 guess the target was carried from.
 
@@ -24,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from ex_aws_firehose_spark.session import get_spark
-from ex_aws_firehose_spark.streaming.pipeline import stream_shuffle
+from ex_aws_firehose_spark.streaming.pipeline import drain, read_staged, stage_batches
 
 REPS = 3
 
@@ -34,87 +36,39 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     root = tempfile.mkdtemp(prefix="stream_floor_")
 
-    # Tiny 3-file source: the staged-batch shape every file-replay key
-    # uses (3 single-row files so per-batch machinery dominates).
-    src3 = os.path.join(root, "src3")
-    one = spark.range(3).select(
+    # Tiny sources staged the way every file-replay key stages them:
+    # src3 = 3 single-row files (3 micro-batches, so per-batch machinery
+    # dominates), src1 = the same 3 rows in one file (1 micro-batch).
+    rows = spark.range(3).select(
         F.col("id").alias("k"),
         F.expr("timestamp '2024-01-01 00:00:00' + make_interval(0,0,0,0,0,0,id)").alias("ts"),
         F.lit(1.0).alias("v"),
     )
-    for i in range(3):
-        one.filter(F.col("k") == i).coalesce(1).write.mode("append").parquet(src3)
+    src3 = stage_batches(
+        os.path.join(root, "src3"), [rows.filter(F.col("k") == i) for i in range(3)]
+    )
+    src1 = stage_batches(os.path.join(root, "src1"), [rows])
     schema = "k long, ts timestamp, v double"
 
-    def rd(max_files: int = 1):
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", str(max_files))
-            .parquet(src3)
-        )
-
-    def run(q_starter, n=8):
-        # same shuffle-partition regime the engine keys use: 8 default,
-        # 4 for stream-stream joins (state stores per partition are the
-        # dominant machinery cost — BASELINE.md round-12 notes)
-        with stream_shuffle(spark, n):
-            t0 = time.perf_counter()
-            q = q_starter()
-            q.processAllAvailable()
-            q.stop()
-            return time.perf_counter() - t0
+    def rd(src: str = src3):
+        return read_staged(spark, schema, src)
 
     def ckpt():
         return tempfile.mkdtemp(prefix="ck_", dir=root)
 
-    def shape_map_foreach():
-        return (
-            rd(3).writeStream.option("checkpointLocation", ckpt())
-            .foreachBatch(lambda df, bid: df.count())
-            .start()
-        )
+    def stateful_agg():
+        return rd().groupBy("k").count(), "memory", "complete"
 
-    def shape_3batch_foreach():
-        return (
-            rd(1).writeStream.option("checkpointLocation", ckpt())
-            .foreachBatch(lambda df, bid: df.count())
-            .start()
-        )
-
-    _n = iter(range(10_000))
-
-    def shape_stateful_agg():
-        agg = rd(1).groupBy("k").count()
-        return (
-            agg.writeStream.outputMode("complete")
-            .option("checkpointLocation", ckpt())
-            .format("memory")
-            .queryName(f"floor_mem_{next(_n)}")
-            .start()
-        )
-
-    def shape_stream_stream_join():
-        a = rd(1).withWatermark("ts", "0 seconds")
-        b = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src3)
-            .withWatermark("ts", "0 seconds")
-        )
+    def stream_stream_join():
+        a = rd().withWatermark("ts", "0 seconds")
+        b = rd().withWatermark("ts", "0 seconds")
         j = a.alias("a").join(
             b.alias("b"),
-            (F.col("a.k") == F.col("b.k"))
-            & (F.col("a.ts") == F.col("b.ts")),
+            (F.col("a.k") == F.col("b.k")) & (F.col("a.ts") == F.col("b.ts")),
         ).select("a.k")
-        return (
-            j.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt())
-            .format("memory")
-            .queryName(f"floor_mem_{next(_n)}")
-            .start()
-        )
+        return j, "memory", "append"
 
-    def shape_apply_in_pandas_with_state():
+    def apply_in_pandas_with_state():
         from pyspark.sql.streaming.state import GroupStateTimeout
 
         def fn(key, pdfs, state):
@@ -123,49 +77,42 @@ def main() -> None:
             n = sum(len(p) for p in pdfs)
             yield pd.DataFrame({"k": [key[0]], "n": [n]})
 
-        out = (
-            rd(1)
-            .groupBy("k")
-            .applyInPandasWithState(
-                fn,
-                "k long, n long",
-                "k long, n long",
-                "update",
-                GroupStateTimeout.NoTimeout,
-            )
+        out = rd().groupBy("k").applyInPandasWithState(
+            fn, "k long, n long", "k long, n long", "update",
+            GroupStateTimeout.NoTimeout,
         )
-        return (
-            out.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt())
-            .format("memory")
-            .queryName(f"floor_mem_{next(_n)}")
-            .start()
-        )
+        return out, "memory", "update"
 
-    def shape_dedup_watermark():
-        d = rd(1).withWatermark("ts", "1 hour").dropDuplicates(["k", "ts"])
-        return (
-            d.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt())
-            .format("memory")
-            .queryName(f"floor_mem_{next(_n)}")
-            .start()
-        )
+    def dedup_watermark():
+        d = rd().withWatermark("ts", "1 hour").dropDuplicates(["k", "ts"])
+        return d, "memory", "append"
 
+    # Each shape: (stream, sink, output mode), drained by the engine's
+    # own drain — the same trigger, checkpointing and shuffle-partition
+    # regime the keys use: 8 partitions by default, 4 for stream-stream
+    # joins (state stores per partition are the dominant machinery
+    # cost — BASELINE.md round-12 notes).
     shapes = {
-        "map_only_1batch": shape_map_foreach,
-        "map_only_3batch": shape_3batch_foreach,
-        "stateful_agg_3batch": shape_stateful_agg,
-        "stream_stream_join_3batch": shape_stream_stream_join,
-        "apply_in_pandas_state_3batch": shape_apply_in_pandas_with_state,
-        "dedup_watermark_3batch": shape_dedup_watermark,
+        "map_only_1batch": lambda: (rd(src1), lambda df, bid: df.count(), "append"),
+        "map_only_3batch": lambda: (rd(), lambda df, bid: df.count(), "append"),
+        "stateful_agg_3batch": stateful_agg,
+        "stream_stream_join_3batch": stream_stream_join,
+        "apply_in_pandas_state_3batch": apply_in_pandas_with_state,
+        "dedup_watermark_3batch": dedup_watermark,
     }
+
+    def run(shape, n):
+        stream, sink, mode = shape()
+        t0 = time.perf_counter()
+        drain(stream, sink, ckpt(), mode=mode, n=n)
+        return time.perf_counter() - t0
+
     results = {}
-    for name, starter in shapes.items():
+    for name, shape in shapes.items():
         n = 4 if "stream_stream" in name else 8
         # one untimed warm-up of the shape class, then REPS timed
-        run(starter, n)
-        ts = [run(starter, n) for _ in range(REPS)]
+        run(shape, n)
+        ts = [run(shape, n) for _ in range(REPS)]
         results[name] = {
             "median_s": round(statistics.median(ts), 2),
             "runs": [round(t, 2) for t in ts],
