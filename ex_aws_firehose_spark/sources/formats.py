@@ -15,7 +15,11 @@ remains the analytics path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+from collections.abc import Iterable
+from functools import reduce
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ex_aws_firehose_spark.caching import session_cached, tracked_mkdtemp
@@ -344,8 +348,6 @@ N_BINARY_FILES = 100
 
 @session_cached
 def _stage_blobs(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
     root = tracked_mkdtemp(prefix="blobs_") + "/data"
     os.makedirs(root, exist_ok=True)
     rows = (
@@ -442,13 +444,13 @@ COMPACT_FRAGMENTS = 64
 COMPACT_TARGET_FILES = 4
 
 
-def _count_parquet(path: str) -> int:
-    import os
-
-    return sum(
-        1
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(".")
+def _parquet_files(d: str) -> list[str]:
+    """The parquet file names in ``d``, sorted; hidden (``.crc``) and
+    ``_``-prefixed files are not data."""
+    return sorted(
+        f
+        for f in os.listdir(d)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
     )
 
 
@@ -462,7 +464,7 @@ def _stage_compaction(spark: SparkSession, sf_dir: str):
     spark.read.parquet(frag).repartition(
         COMPACT_TARGET_FILES
     ).write.parquet(compacted)
-    return frag, _count_parquet(frag), compacted, _count_parquet(compacted)
+    return frag, len(_parquet_files(frag)), compacted, len(_parquet_files(compacted))
 
 
 @query(
@@ -891,8 +893,6 @@ _AVRO_EVENT_SCHEMA = {
 
 @session_cached
 def _stage_events_avro(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
     import pandas as pd
 
     from ex_aws_firehose_spark.sources.avro import write_avro_ocf
@@ -1102,8 +1102,6 @@ def _stage_manifest_table(spark: SparkSession, sf_dir: str):
     single data page), exactly what an Iceberg manifest file carries
     per data file. Driver-side loop is file-count grain (≈80 files),
     the same planning cost Iceberg pays on its coordinator."""
-    import os
-
     import pyarrow.parquet as pq
 
     root = tracked_mkdtemp(prefix="orders_manifest_") + "/data"
@@ -1124,9 +1122,7 @@ def _stage_manifest_table(spark: SparkSession, sf_dir: str):
     for d in sorted(os.listdir(root)):
         if not d.startswith("month="):
             continue
-        for fn in os.listdir(os.path.join(root, d)):
-            if not fn.endswith(".parquet") or fn.startswith("."):
-                continue
+        for fn in _parquet_files(os.path.join(root, d)):
             fpath = os.path.join(root, d, fn)
             md = pq.ParquetFile(fpath).metadata
             schema_names = [md.schema.column(i).name for i in range(md.num_columns)]
@@ -1142,23 +1138,10 @@ def _stage_manifest_table(spark: SparkSession, sf_dir: str):
                  max(maxs).isoformat(sep=" "), nrows)
             )
     mdir = tracked_mkdtemp(prefix="orders_manifest_meta_")
-    os.makedirs(mdir + "/manifest", exist_ok=True)
-    # the manifest is driver-side METADATA — write it with pyarrow
-    # directly (a createDataFrame-backed write pays a ~5 s/job
-    # Python-runner tax in local mode; a real catalog writes its
-    # manifest files the same way, outside the query engine)
-    import pyarrow as pa
-
-    pq.write_table(
-        pa.table(
-            {
-                "path": pa.array([m[0] for m in manifest], pa.string()),
-                "min_date": pa.array([m[1] for m in manifest], pa.string()),
-                "max_date": pa.array([m[2] for m in manifest], pa.string()),
-                "n_rows": pa.array([m[3] for m in manifest], pa.int64()),
-            }
-        ),
+    _write_meta(
         mdir + "/manifest/part-0.parquet",
+        "path string, min_date string, max_date string, n_rows int64",
+        manifest,
     )
     return root, mdir + "/manifest", len(manifest)
 
@@ -1763,6 +1746,128 @@ def q_read_secondary_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 SNAP_GROUPS = 5  # staged commits (one per o_orderkey % SNAP_GROUPS slice)
 SNAP_PIN = 3  # the snapshot reads only the first SNAP_PIN commits
 
+# The manifest-committed table family (snapshot, ref, rollback, merge,
+# expiry, WAP and conflict keys) shares the helpers below: sliced orders
+# staging, one driver-side metadata writer, ref resolution, commit-log
+# prefixes and per-version totals.
+
+_COMMIT_LOG_COLS = "commit_id int64, path string"
+_REF_LOG_COLS = "seq int64, ref_name string, ref_type string, commit_id int64"
+
+
+@session_cached
+def _sliced_orders(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+    """orders as (o_orderkey, slice = o_orderkey % n, cents), scanned
+    once per (session, sf, n) and localCheckpointed: each member write of
+    :func:`_write_slices` would otherwise re-run the full scan lineage
+    (5 commits cost 5 table scans, measured 22 s at sf0.1; 6 s with the
+    one materialization)."""
+    return (
+        load_table(spark, sf_dir, "orders")
+        .select(
+            "o_orderkey",
+            (F.col("o_orderkey") % n).alias("slice"),
+            _cents("o_totalprice").alias("cents"),
+        )
+        .localCheckpoint()
+    )
+
+
+def _write_slices(
+    o: DataFrame, data: str, members: dict[str, list[int]], cols: tuple[str, ...]
+) -> dict[str, str]:
+    """Write each member (a list of slices) of a :func:`_sliced_orders`
+    frame as one ``coalesce(1)`` parquet file under ``data/<member>``,
+    keeping ``cols``. Returns member -> path."""
+    paths = {}
+    for name, slices in members.items():
+        paths[name] = os.path.join(data, name)
+        part = o.filter(F.col("slice").isin(slices)).select(*cols)
+        part.coalesce(1).write.parquet(paths[name])
+    return paths
+
+
+def _write_meta(path: str, cols: str, rows) -> None:
+    """Write table metadata rows (a commit log, ref log or file
+    manifest) as one parquet file at ``path``. ``cols`` declares
+    ``"name type, ..."`` with pyarrow type names, so a column keeps its
+    type even when every value is NULL. Metadata is driver-side and
+    written with pyarrow directly: a createDataFrame-backed write pays a
+    ~5 s/job Python-runner tax in local mode, and a real catalog writes
+    its manifest files the same way, outside the query engine. pyarrow
+    is imported here so the package import does not pay for it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    fields = [c.split() for c in cols.split(",")]
+    values = list(zip(*rows)) or [()] * len(fields)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(
+        pa.table(
+            {
+                name: pa.array(v, getattr(pa, typ)())
+                for (name, typ), v in zip(fields, values)
+            }
+        ),
+        path,
+    )
+
+
+def _resolve_refs(reflog: DataFrame) -> list:
+    """Every ref's latest ref-log entry (highest seq; a seq tie goes to
+    the higher commit_id) as collected rows sorted by ref_name —
+    metadata grain, one row per ref."""
+    latest = Window.partitionBy("ref_name").orderBy(
+        F.desc("seq"), F.desc("commit_id")
+    )
+    return sorted(
+        reflog.withColumn("rn", F.row_number().over(latest))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+        .collect(),
+        key=lambda r: r.ref_name,
+    )
+
+
+def _commit_paths(log: DataFrame, upto: int | None = None) -> list[str]:
+    """The sorted data paths of the commit-log prefix commit_id <=
+    ``upto`` (the whole log when None): the files a reader pinned at
+    that snapshot plans from."""
+    if upto is not None:
+        log = log.filter(F.col("commit_id") <= upto)
+    return sorted(r.path for r in log.select("path").collect())
+
+
+def _labels(d: dict) -> list:
+    """Literal columns named by ``d``'s keys: a str as string, an int as
+    long."""
+    return [
+        (F.lit(v) if isinstance(v, str) else F.lit(v).cast("long")).alias(k)
+        for k, v in d.items()
+    ]
+
+
+def _totals_row(df: DataFrame, head: dict, tail: dict | None = None) -> DataFrame:
+    """One row: the ``head`` labels, ``df``'s n_rows and cents_total,
+    then the ``tail`` labels."""
+    return df.agg(
+        F.count("*").alias("n_rows"), F.sum("cents").alias("cents_total")
+    ).select(*_labels(head), "n_rows", "cents_total", *_labels(tail or {}))
+
+
+def _version_totals(
+    spark: SparkSession,
+    data: str,
+    paths: Iterable[str],
+    head: dict,
+    tail: dict | None = None,
+) -> DataFrame:
+    """:func:`_totals_row` over the table version made of ``paths``
+    (data files under ``data``)."""
+    return _totals_row(
+        spark.read.option("basePath", data).parquet(*sorted(paths)), head, tail
+    )
+
 
 @session_cached
 def _stage_committed_table(spark: SparkSession, sf_dir: str):
@@ -1770,36 +1875,21 @@ def _stage_committed_table(spark: SparkSession, sf_dir: str):
     commits: data file first, then a manifest entry carrying a
     monotonically increasing commit_id — the append-only commit log
     every table format keeps."""
-    import os
-
     base = tracked_mkdtemp(prefix="orders_snap_")
     data, man = os.path.join(base, "data"), os.path.join(base, "manifest")
-    # localCheckpoint: each commit's coalesce(1) write would otherwise
-    # re-run the full scan lineage — 5 commits cost 5 table scans
-    # (measured 22 s at sf0.1; 6 s with the one materialization)
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", _cents("o_totalprice").alias("cents"))
-        .localCheckpoint()
+    paths = _write_slices(
+        _sliced_orders(spark, sf_dir, SNAP_GROUPS),
+        data,
+        {f"commit-{c}": [c] for c in range(SNAP_GROUPS)},
+        ("o_orderkey", "cents"),
     )
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(man, exist_ok=True)
+    # commit-log entries after their data files (the transactional
+    # ordering: data durable FIRST)
     for commit_id in range(SNAP_GROUPS):
-        path = os.path.join(data, f"commit-{commit_id}")
-        part = o.filter(F.col("o_orderkey") % SNAP_GROUPS == commit_id)
-        part.coalesce(1).write.parquet(path)
-        # commit-log entry: driver-side metadata, written directly
-        # (data durable FIRST — the transactional ordering)
-        pq.write_table(
-            pa.table(
-                {
-                    "commit_id": pa.array([commit_id], pa.int64()),
-                    "path": pa.array([path], pa.string()),
-                }
-            ),
+        _write_meta(
             os.path.join(man, f"commit-{commit_id}.parquet"),
+            _COMMIT_LOG_COLS,
+            [(commit_id, paths[f"commit-{commit_id}"])],
         )
     return data, man
 
@@ -1850,28 +1940,14 @@ def q_read_snapshot_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (metadata grain); both scans read only their version's files."""
     data, man = _stage_committed_table(spark, sf_dir)
     log = spark.read.parquet(man)
-    snap_paths = [
-        r.path
-        for r in log.filter(F.col("commit_id") < SNAP_PIN)
-        .select("path")
-        .collect()
-    ]
-    head_paths = [r.path for r in log.select("path").collect()]
 
     def version(label: str, paths: list[str]) -> DataFrame:
-        t = spark.read.option("basePath", data).parquet(*sorted(paths))
-        return t.agg(
-            F.count("*").alias("n_rows"),
-            F.sum("cents").alias("cents_total"),
-        ).select(
-            F.lit(label).alias("version"),
-            "n_rows",
-            "cents_total",
-            F.lit(len(paths)).cast("long").alias("n_commits"),
+        return _version_totals(
+            spark, data, paths, {"version": label}, {"n_commits": len(paths)}
         )
 
-    return version("snapshot", snap_paths).union(
-        version("head", head_paths)
+    return version("snapshot", _commit_paths(log, SNAP_PIN - 1)).unionByName(
+        version("head", _commit_paths(log))
     )
 
 
@@ -1900,25 +1976,10 @@ SNAP_REF_LOG = [
 def _stage_ref_log(spark: SparkSession, sf_dir: str) -> str:
     """Write the ref log beside the committed table's manifest — the
     same driver-side metadata write the commit log uses."""
-    import os
-
     data, man = _stage_committed_table(spark, sf_dir)
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     refs_dir = os.path.join(os.path.dirname(man), "refs")
-    os.makedirs(refs_dir, exist_ok=True)
-    seqs, names, types, cids = zip(*SNAP_REF_LOG)
-    pq.write_table(
-        pa.table(
-            {
-                "seq": pa.array(seqs, pa.int64()),
-                "ref_name": pa.array(names, pa.string()),
-                "ref_type": pa.array(types, pa.string()),
-                "commit_id": pa.array(cids, pa.int64()),
-            }
-        ),
-        os.path.join(refs_dir, "reflog.parquet"),
+    _write_meta(
+        os.path.join(refs_dir, "reflog.parquet"), _REF_LOG_COLS, SNAP_REF_LOG
     )
     return refs_dir
 
@@ -1977,42 +2038,33 @@ def q_meta_snapshot_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata-grain (|refs| rows); each ref's scan reads only its
     prefix's files — a lagging branch never pays head-sized I/O."""
     data, man = _stage_committed_table(spark, sf_dir)
-    refs_dir = _stage_ref_log(spark, sf_dir)
-    from pyspark.sql import Window
+    refs = _resolve_refs(spark.read.parquet(_stage_ref_log(spark, sf_dir)))
+    return _ref_totals(spark, data, spark.read.parquet(man), refs)
 
-    reflog = spark.read.parquet(refs_dir)
-    wr = Window.partitionBy("ref_name").orderBy(
-        F.desc("seq"), F.desc("commit_id")
+
+def _ref_totals(
+    spark: SparkSession, data: str, log: DataFrame, refs: list
+) -> DataFrame:
+    """Each resolved ref's row: its snapshot and the totals of the
+    commit-log prefix up to it (q_meta_snapshot_refs and, over the
+    compacted logs, q_maintenance_rewrite_manifests)."""
+    return reduce(
+        DataFrame.unionByName,
+        [
+            _version_totals(
+                spark,
+                data,
+                _commit_paths(log, r.commit_id),
+                {
+                    "ref_name": r.ref_name,
+                    "ref_type": r.ref_type,
+                    "resolved_commit_id": r.commit_id,
+                    "n_commits": r.commit_id + 1,
+                },
+            )
+            for r in refs
+        ],
     )
-    resolved = (
-        reflog.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") == 1)
-        .select("ref_name", "ref_type", "commit_id")
-        .collect()  # metadata grain: one row per ref
-    )
-    log = spark.read.parquet(man)
-    out = None
-    for r in sorted(resolved, key=lambda x: x.ref_name):
-        paths = sorted(
-            row.path
-            for row in log.filter(F.col("commit_id") <= r.commit_id)
-            .select("path")
-            .collect()
-        )
-        t = spark.read.option("basePath", data).parquet(*paths)
-        part = t.agg(
-            F.count("*").alias("n_rows"),
-            F.sum("cents").alias("cents_total"),
-        ).select(
-            F.lit(r.ref_name).alias("ref_name"),
-            F.lit(r.ref_type).alias("ref_type"),
-            F.lit(r.commit_id).cast("long").alias("resolved_commit_id"),
-            F.lit(r.commit_id + 1).cast("long").alias("n_commits"),
-            "n_rows",
-            "cents_total",
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
 
 
 def _branch_ff_oracle() -> str:
@@ -2093,25 +2145,9 @@ def q_table_branch_fast_forward(
     appended entry is one row; each ref's read plans from its
     (possibly advanced) commit prefix — the lagging branch pays
     head-sized I/O only AFTER it chose to advance."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     data, man = _stage_committed_table(spark, sf_dir)
     refs_dir = _stage_ref_log(spark, sf_dir)
-    from pyspark.sql import Window
-
-    reflog = spark.read.parquet(refs_dir)
-    wr = Window.partitionBy("ref_name").orderBy(
-        F.desc("seq"), F.desc("commit_id")
-    )
-    resolved = (
-        reflog.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") == 1)
-        .select("ref_name", "ref_type", "commit_id", "seq")
-        .collect()  # metadata grain: one row per ref
-    )
+    resolved = _resolve_refs(spark.read.parquet(refs_dir))
     head = next(r for r in resolved if r.ref_name == "main")
     decisions = []
     appended = []
@@ -2130,45 +2166,31 @@ def q_table_branch_fast_forward(
         # staged in its OWN dir (this key's branch of the log) so the
         # shared fixture other ref keys resolve stays pristine; a real
         # table would append in place under its commit lock.
-        ff_dir = os.path.join(os.path.dirname(refs_dir), "refs-ff")
-        os.makedirs(ff_dir, exist_ok=True)
-        seqs, names, types, cids = zip(*appended)
-        pq.write_table(
-            pa.table(
-                {
-                    "seq": pa.array(seqs, pa.int64()),
-                    "ref_name": pa.array(names, pa.string()),
-                    "ref_type": pa.array(types, pa.string()),
-                    "commit_id": pa.array(cids, pa.int64()),
-                }
-            ),
-            os.path.join(ff_dir, "reflog-ff.parquet"),
+        _write_meta(
+            os.path.join(os.path.dirname(refs_dir), "refs-ff", "reflog-ff.parquet"),
+            _REF_LOG_COLS,
+            appended,
         )
     log = spark.read.parquet(man)
-    out = None
-    for name, rtype, from_id, to_id, ff, rej in sorted(decisions):
-        paths = sorted(
-            row.path
-            for row in log.filter(F.col("commit_id") <= to_id)
-            .select("path")
-            .collect()
-        )
-        t = spark.read.option("basePath", data).parquet(*paths)
-        part = t.agg(
-            F.count("*").alias("n_rows"),
-            F.sum("cents").alias("cents_total"),
-        ).select(
-            F.lit(name).alias("ref_name"),
-            F.lit(rtype).alias("ref_type"),
-            F.lit(from_id).cast("long").alias("from_commit_id"),
-            F.lit(to_id).cast("long").alias("to_commit_id"),
-            F.lit(ff).cast("long").alias("fast_forwarded"),
-            F.lit(rej).cast("long").alias("rejected_tag"),
-            "n_rows",
-            "cents_total",
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
+    return reduce(
+        DataFrame.unionByName,
+        [
+            _version_totals(
+                spark,
+                data,
+                _commit_paths(log, to_id),
+                {
+                    "ref_name": name,
+                    "ref_type": rtype,
+                    "from_commit_id": from_id,
+                    "to_commit_id": to_id,
+                    "fast_forwarded": ff,
+                    "rejected_tag": rej,
+                },
+            )
+            for name, rtype, from_id, to_id, ff, rej in sorted(decisions)
+        ],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2264,25 +2286,9 @@ def q_table_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference lifecycle pattern: q_table_branch_fast_forward
     (sources/formats.py), q_meta_snapshot_refs resolution."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     data, man = _stage_committed_table(spark, sf_dir)
     refs_dir = _stage_ref_log(spark, sf_dir)
-    from pyspark.sql import Window
-
-    reflog = spark.read.parquet(refs_dir)
-    wr = Window.partitionBy("ref_name").orderBy(
-        F.desc("seq"), F.desc("commit_id")
-    )
-    resolved = (
-        reflog.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") == 1)
-        .select("ref_name", "ref_type", "commit_id", "seq")
-        .collect()  # metadata grain: one row per ref
-    )
+    resolved = _resolve_refs(spark.read.parquet(refs_dir))
     requests = {"main": ROLLBACK_TO, "v1.0": 0}
     max_seq = max(r.seq for r in resolved)
     decisions, appended = {}, []
@@ -2302,56 +2308,37 @@ def q_table_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     rb_dir = os.path.join(os.path.dirname(refs_dir), "refs-rollback")
     os.makedirs(rb_dir, exist_ok=True)
     if appended:
-        seqs, names, types, cids = zip(*appended)
-        pq.write_table(
-            pa.table(
-                {
-                    "seq": pa.array(seqs, pa.int64()),
-                    "ref_name": pa.array(names, pa.string()),
-                    "ref_type": pa.array(types, pa.string()),
-                    "commit_id": pa.array(cids, pa.int64()),
-                }
-            ),
+        _write_meta(
             os.path.join(rb_dir, "reflog-rollback.parquet"),
+            _REF_LOG_COLS,
+            appended,
         )
     # Re-resolve from base log ∪ appended entries: the append is the
     # operation; the served state must come from what a NEW reader of
     # the log would see.
-    post = (
-        spark.read.parquet(refs_dir, rb_dir)
-        .withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") == 1)
-        .select("ref_name", "commit_id")
-        .collect()
-    )
+    post = _resolve_refs(spark.read.parquet(refs_dir, rb_dir))
     n_after = len(SNAP_REF_LOG) + len(appended)
     log = spark.read.parquet(man)
-    out = None
-    for p in sorted(post, key=lambda x: x.ref_name):
+    parts = []
+    for p in post:
         rtype, from_id, rolled, rejected = decisions[p.ref_name]
-        paths = sorted(
-            row.path
-            for row in log.filter(F.col("commit_id") <= p.commit_id)
-            .select("path")
-            .collect()
+        parts.append(
+            _version_totals(
+                spark,
+                data,
+                _commit_paths(log, p.commit_id),
+                {
+                    "ref_name": p.ref_name,
+                    "ref_type": rtype,
+                    "from_commit_id": from_id,
+                    "to_commit_id": p.commit_id,
+                    "rolled_back": rolled,
+                    "rejected_tag": rejected,
+                },
+                {"n_reflog_rows_after": n_after},
+            )
         )
-        t = spark.read.option("basePath", data).parquet(*paths)
-        part = t.agg(
-            F.count("*").alias("n_rows"),
-            F.sum("cents").alias("cents_total"),
-        ).select(
-            F.lit(p.ref_name).alias("ref_name"),
-            F.lit(rtype).alias("ref_type"),
-            F.lit(from_id).cast("long").alias("from_commit_id"),
-            F.lit(p.commit_id).cast("long").alias("to_commit_id"),
-            F.lit(rolled).cast("long").alias("rolled_back"),
-            F.lit(rejected).cast("long").alias("rejected_tag"),
-            "n_rows",
-            "cents_total",
-            F.lit(n_after).cast("long").alias("n_reflog_rows_after"),
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
+    return reduce(DataFrame.unionByName, parts)
 
 
 CHERRY_BASE = 1  # the 'hotfix' branch is created at this snapshot
@@ -2430,11 +2417,6 @@ def q_table_cherry_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference lifecycle pattern: q_table_commit_conflict validation,
     q_table_branch_fast_forward ref append (sources/formats.py)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     data, man = _stage_committed_table(spark, sf_dir)
     log = spark.read.parquet(man)
     commit_paths = {
@@ -2445,7 +2427,7 @@ def q_table_cherry_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     pick_dir = tracked_mkdtemp(prefix="cherry_pick_")
     next_commit = SNAP_GROUPS
-    out = None
+    parts = []
     for c in CHERRY_PICKS:
         picked_path = commit_paths[c]
         contained = picked_path in branch_files.values()
@@ -2465,35 +2447,29 @@ def q_table_cherry_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
             outcome, cid, nf = "cherry_picked", next_commit, 1
             # metadata-only replay: the new manifest entry references
             # the EXISTING data file
-            pq.write_table(
-                pa.table(
-                    {
-                        "commit_id": pa.array([cid], pa.int64()),
-                        "path": pa.array([picked_path], pa.string()),
-                    }
-                ),
+            _write_meta(
                 os.path.join(pick_dir, f"commit-{cid}.parquet"),
+                _COMMIT_LOG_COLS,
+                [(cid, picked_path)],
             )
             branch_files[c] = picked_path
             next_commit += 1
-        t = spark.read.option("basePath", data).parquet(
-            *sorted(set(branch_files.values()))
+        parts.append(
+            _version_totals(
+                spark,
+                data,
+                set(branch_files.values()),
+                {
+                    "pick_commit": c,
+                    "target_ref": "hotfix",
+                    "outcome": outcome,
+                    "new_commit_id": cid,
+                    "n_files_replayed": nf,
+                    "n_conflicting_files": 0,
+                },
+            )
         )
-        part = t.agg(
-            F.count("*").alias("n_rows"),
-            F.sum("cents").alias("cents_total"),
-        ).select(
-            F.lit(c).cast("long").alias("pick_commit"),
-            F.lit("hotfix").alias("target_ref"),
-            F.lit(outcome).alias("outcome"),
-            F.lit(cid).cast("long").alias("new_commit_id"),
-            F.lit(nf).cast("long").alias("n_files_replayed"),
-            F.lit(0).cast("long").alias("n_conflicting_files"),
-            "n_rows",
-            "cents_total",
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
+    return reduce(DataFrame.unionByName, parts)
 
 
 # ---------------------------------------------------------------------------
@@ -2511,8 +2487,6 @@ def _current_log_dirs(base: str) -> tuple:
     compaction (staged dirs, no pointer) leaves every reader on the
     original logs."""
     import json as _json
-    import os
-
     cur = os.path.join(base, "CURRENT")
     if os.path.exists(cur):
         with open(cur) as f:
@@ -2537,50 +2511,28 @@ def _compact_logs(spark: SparkSession, sf_dir: str) -> dict:
     touched; the rewritten logs are snapshot-equivalent by
     construction and pinned so by the pre/post law test."""
     import json as _json
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     data, man = _stage_committed_table(spark, sf_dir)
     refs_dir = _stage_ref_log(spark, sf_dir)
     base = os.path.dirname(man)
-
-    def _parquet_files(d: str) -> list:
-        return sorted(
-            f
-            for f in os.listdir(d)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-
     stats = {"n_manifest_files_before": len(_parquet_files(man))}
     commits = sorted(
         (r.commit_id, r.path)
         for r in spark.read.parquet(man).collect()  # metadata grain
     )
     man2 = os.path.join(base, "manifest-rewrite")
-    os.makedirs(man2, exist_ok=True)
-    head = [(c, p) for c, p in commits if c < MAN_COMPACT_CUT]
-    tail = [(c, p) for c, p in commits if c >= MAN_COMPACT_CUT]
-    pq.write_table(
-        pa.table(
-            {
-                "commit_id": pa.array([c for c, _ in head], pa.int64()),
-                "path": pa.array([p for _, p in head], pa.string()),
-            }
-        ),
+    _write_meta(
         os.path.join(man2, "base-manifest.parquet"),
+        _COMMIT_LOG_COLS,
+        [(c, p) for c, p in commits if c < MAN_COMPACT_CUT],
     )
-    for c, p in tail:
-        pq.write_table(
-            pa.table(
-                {
-                    "commit_id": pa.array([c], pa.int64()),
-                    "path": pa.array([p], pa.string()),
-                }
-            ),
-            os.path.join(man2, f"commit-{c}.parquet"),
-        )
+    for c, p in commits:
+        if c >= MAN_COMPACT_CUT:
+            _write_meta(
+                os.path.join(man2, f"commit-{c}.parquet"),
+                _COMMIT_LOG_COLS,
+                [(c, p)],
+            )
     stats["n_manifest_files_after"] = len(_parquet_files(man2))
 
     reflog = sorted(
@@ -2594,19 +2546,10 @@ def _compact_logs(spark: SparkSession, sf_dir: str) -> dict:
     for seq, name, rtype, cid in prefix:  # ordered: latest wins
         resolved[name] = (seq, name, rtype, cid)
     compacted = sorted(resolved.values()) + ref_tail
-    refs2 = os.path.join(base, "refs-rewrite")
-    os.makedirs(refs2, exist_ok=True)
-    seqs, names, types, cids = zip(*compacted)
-    pq.write_table(
-        pa.table(
-            {
-                "seq": pa.array(seqs, pa.int64()),
-                "ref_name": pa.array(names, pa.string()),
-                "ref_type": pa.array(types, pa.string()),
-                "commit_id": pa.array(cids, pa.int64()),
-            }
-        ),
-        os.path.join(refs2, "reflog.parquet"),
+    _write_meta(
+        os.path.join(base, "refs-rewrite", "reflog.parquet"),
+        _REF_LOG_COLS,
+        compacted,
     )
     stats["n_reflog_rows_after"] = len(compacted)
 
@@ -2670,40 +2613,8 @@ def q_maintenance_rewrite_manifests(
     info = _compact_logs(spark, sf_dir)
     man2, refs2 = _current_log_dirs(info["base"])
     data, stats = info["data"], info["stats"]
-    from pyspark.sql import Window
-
-    reflog = spark.read.parquet(refs2)
-    wr = Window.partitionBy("ref_name").orderBy(
-        F.desc("seq"), F.desc("commit_id")
-    )
-    resolved = (
-        reflog.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") == 1)
-        .select("ref_name", "ref_type", "commit_id")
-        .collect()  # metadata grain: one row per ref
-    )
-    log = spark.read.parquet(man2)
-    out = None
-    for r in sorted(resolved, key=lambda x: x.ref_name):
-        paths = sorted(
-            row.path
-            for row in log.filter(F.col("commit_id") <= r.commit_id)
-            .select("path")
-            .collect()
-        )
-        t = spark.read.option("basePath", data).parquet(*paths)
-        part = t.agg(
-            F.count("*").alias("n_rows"),
-            F.sum("cents").alias("cents_total"),
-        ).select(
-            F.lit(r.ref_name).alias("ref_name"),
-            F.lit(r.ref_type).alias("ref_type"),
-            F.lit(r.commit_id).cast("long").alias("resolved_commit_id"),
-            F.lit(r.commit_id + 1).cast("long").alias("n_commits"),
-            "n_rows",
-            "cents_total",
-        )
-        out = part if out is None else out.unionByName(part)
+    refs = _resolve_refs(spark.read.parquet(refs2))
+    out = _ref_totals(spark, data, spark.read.parquet(man2), refs)
     for col, val in stats.items():
         out = out.withColumn(col, F.lit(val).cast("long"))
     return out
@@ -2724,8 +2635,6 @@ def _stage_partition_evolution(spark: SparkSession, sf_dir: str):
     the live tail under spec 1 (day-grain dirs, rows on/after it) —
     the exact layout a table has after ALTER TABLE ... SET PARTITION
     SPEC. Returns (paths-by-spec manifest rows, files_total)."""
-    import os
-
     e = load_table(spark, sf_dir, "events").select(
         "ts",
         "event_id",
@@ -3071,23 +2980,13 @@ def q_read_incremental_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     data, man = _stage_committed_table(spark, sf_dir)
     log = spark.read.parquet(man)
     delta = log.filter(F.col("commit_id") >= SNAP_PIN).collect()
-    frames = []
-    for r in sorted(delta, key=lambda r: r.commit_id):
-        t = spark.read.option("basePath", data).parquet(r.path)
-        frames.append(
-            t.agg(
-                F.count("*").alias("n_rows"),
-                F.sum("cents").alias("cents_total"),
-            ).select(
-                F.lit(r.commit_id).cast("long").alias("commit_id"),
-                "n_rows",
-                "cents_total",
-            )
-        )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out.orderBy("commit_id")
+    return reduce(
+        DataFrame.unionByName,
+        [
+            _version_totals(spark, data, [r.path], {"commit_id": r.commit_id})
+            for r in sorted(delta, key=lambda r: r.commit_id)
+        ],
+    ).orderBy("commit_id")
 
 
 # ---------------------------------------------------------------------------
@@ -3120,8 +3019,6 @@ def _stage_merge_commit(spark: SparkSession, sf_dir: str):
     Returns (data_root, base_manifest, merge_dir, n_updated,
     n_deleted, n_inserted) where merge_dir holds data/, deletes/ and
     manifest/."""
-    import os
-
     data, man = _stage_committed_table(spark, sf_dir)
     mdir = tracked_mkdtemp(prefix="orders_merge_")
     base = merge_read(spark, data, man, None).localCheckpoint()
@@ -3145,19 +3042,10 @@ def _stage_merge_commit(spark: SparkSession, sf_dir: str):
     # manifest row makes the whole merge visible at once (the
     # torn-write test pins that without this row readers see the
     # exact pre-merge table)
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(mdir + "/manifest", exist_ok=True)
-    pq.write_table(
-        pa.table(
-            {
-                "commit_id": pa.array([SNAP_GROUPS], pa.int64()),
-                "data_path": pa.array([mdir + "/data"], pa.string()),
-                "delete_path": pa.array([mdir + "/deletes"], pa.string()),
-            }
-        ),
+    _write_meta(
         mdir + "/manifest/commit.parquet",
+        "commit_id int64, data_path string, delete_path string",
+        [(SNAP_GROUPS, mdir + "/data", mdir + "/deletes")],
     )
     return data, man, mdir, n_updated, n_deleted, n_inserted
 
@@ -3172,19 +3060,12 @@ def merge_read(
     committed row yet (the torn-write window: data + delete files
     durable, manifest append not) — this is the exact pre-merge
     table: the reader plans from the MANIFEST, never the directory."""
-    import os
-
-    log = spark.read.parquet(man)
-    paths = sorted(r.path for r in log.select("path").collect())
+    paths = _commit_paths(spark.read.parquet(man))
     base = spark.read.option("basePath", data).parquet(*paths).select(
         "o_orderkey", "cents"
     )
     if merge_manifest is not None and (
-        not os.path.isdir(merge_manifest)
-        or not any(
-            f.endswith(".parquet") and not f.startswith(".")
-            for f in os.listdir(merge_manifest)
-        )
+        not os.path.isdir(merge_manifest) or not _parquet_files(merge_manifest)
     ):
         merge_manifest = None
     if merge_manifest is None:
@@ -3258,22 +3139,11 @@ def q_table_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     data, man, mdir, n_upd, n_del, n_ins = _stage_merge_commit(
         spark, sf_dir
     )
-
-    def agg(label: str, df: DataFrame) -> DataFrame:
-        return df.agg(
-            F.count("*").alias("n_rows"),
-            F.sum("cents").alias("cents_total"),
-        ).select(
-            F.lit(label).alias("version"),
-            "n_rows",
-            "cents_total",
-            F.lit(n_upd).cast("long").alias("n_updated"),
-            F.lit(n_del).cast("long").alias("n_deleted"),
-            F.lit(n_ins).cast("long").alias("n_inserted"),
-        )
-
-    pre = agg("pre", merge_read(spark, data, man, None))
-    post = agg("post", merge_read(spark, data, man, mdir + "/manifest"))
+    counts = {"n_updated": n_upd, "n_deleted": n_del, "n_inserted": n_ins}
+    pre = merge_read(spark, data, man, None)
+    post = merge_read(spark, data, man, mdir + "/manifest")
+    pre = _totals_row(pre, {"version": "pre"}, counts)
+    post = _totals_row(post, {"version": "post"}, counts)
     return pre.unionByName(post).orderBy("version")
 
 
@@ -3292,8 +3162,6 @@ def _stage_delete_compaction(spark: SparkSession, sf_dir: str):
     write them as a position-delete file, and drop the equality file
     from the live delete set. Returns (data_root, posdel_dir,
     n_eq_keys_in, n_pos_rows_out, n_files_touched, n_files_total)."""
-    import os
-
     root, eq_dir, n_eq_keys, _n_del_rows = _stage_equality_deletes(
         spark, sf_dir
     )
@@ -3314,11 +3182,9 @@ def _stage_delete_compaction(spark: SparkSession, sf_dir: str):
     n_pos_rows = pos.count()
     n_files_touched = pos.select("file_path").distinct().count()
     n_files_total = sum(
-        1
+        len(_parquet_files(os.path.join(root, d)))
         for d in os.listdir(root)
         if d.startswith("month=")
-        for f in os.listdir(os.path.join(root, d))
-        if f.endswith(".parquet") and not f.startswith(".")
     )
     return root, pdir, n_eq_keys, n_pos_rows, n_files_touched, n_files_total
 
@@ -3435,47 +3301,25 @@ def _stage_expire_table(spark: SparkSession, sf_dir: str):
     plan without touching data.
 
     snapshots: s0={f0} s1={f0,f1} s2={C} s3={C,f2} s4={C,f2,f3}."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     base = tracked_mkdtemp(prefix="orders_expire_")
-    data = os.path.join(base, "data")
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            (F.col("o_orderkey") % EXP_SLICES).alias("sl"),
-            _cents("o_totalprice").alias("cents"),
-        )
-        .localCheckpoint()
+    paths = _write_slices(
+        _sliced_orders(spark, sf_dir, EXP_SLICES),
+        os.path.join(base, "data"),
+        {"f0": [0], "f1": [1], "C": [0, 1], "f2": [2], "f3": [3]},
+        ("cents",),
     )
-    members = {
-        "f0": [0],
-        "f1": [1],
-        "C": [0, 1],
-        "f2": [2],
-        "f3": [3],
-    }
     stats = []
-    for fid, slices in members.items():
-        path = os.path.join(data, fid)
-        part = o.filter(F.col("sl").isin(slices)).select("cents")
-        part.coalesce(1).write.parquet(path)
-        agg = part.agg(
-            F.count("*").alias("n"), F.sum("cents").alias("c")
-        ).collect()[0]
+    for fid, path in paths.items():
+        agg = (
+            spark.read.parquet(path)
+            .agg(F.count("*").alias("n"), F.sum("cents").alias("c"))
+            .collect()[0]
+        )
         stats.append((fid, path, int(agg.n), int(agg.c)))
-    pq.write_table(
-        pa.table(
-            {
-                "file_id": pa.array([s[0] for s in stats], pa.string()),
-                "path": pa.array([s[1] for s in stats], pa.string()),
-                "n_rows": pa.array([s[2] for s in stats], pa.int64()),
-                "cents": pa.array([s[3] for s in stats], pa.int64()),
-            }
-        ),
+    _write_meta(
         os.path.join(base, "files.parquet"),
+        "file_id string, path string, n_rows int64, cents int64",
+        stats,
     )
     snapshots = [
         (0, "f0"),
@@ -3484,14 +3328,10 @@ def _stage_expire_table(spark: SparkSession, sf_dir: str):
         (3, "C"), (3, "f2"),
         (4, "C"), (4, "f2"), (4, "f3"),
     ]
-    pq.write_table(
-        pa.table(
-            {
-                "snapshot_id": pa.array([s[0] for s in snapshots], pa.int64()),
-                "file_id": pa.array([s[1] for s in snapshots], pa.string()),
-            }
-        ),
+    _write_meta(
         os.path.join(base, "snapshots.parquet"),
+        "snapshot_id int64, file_id string",
+        snapshots,
     )
     return base
 
@@ -3551,7 +3391,6 @@ def q_maintenance_expire_snapshots(
     set-difference over the snapshot⋈file manifest (metadata grain,
     KB-scale); the only data touched is the verify scan a reader pays
     anyway."""
-    import os
     import shutil
 
     base = _stage_expire_table(spark, sf_dir)
@@ -3585,32 +3424,23 @@ def q_maintenance_expire_snapshots(
         .select("path")
         .collect()
     )
-    consts = [
-        F.lit(n_snapshots).cast("long").alias("n_snapshots_total"),
-        F.lit(int(cutoff)).cast("long").alias("n_snapshots_expired"),
-    ]
+    snap_counts = {
+        "n_snapshots_total": n_snapshots,
+        "n_snapshots_expired": int(cutoff),
+    }
 
     def meta_row(label: str, df: DataFrame) -> DataFrame:
         return df.agg(
             F.count("*").cast("long").alias("n_files"),
             F.sum("n_rows").alias("n_rows"),
             F.sum("cents").alias("cents_total"),
-        ).select(F.lit(label).alias("category"), "n_files", "n_rows",
-                 "cents_total", *consts)
+        ).select(*_labels({"category": label}), "n_files", "n_rows",
+                 "cents_total", *_labels(snap_counts))
 
-    head_scan = (
-        spark.read.parquet(*head_paths)
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum("cents").alias("cents_total"),
-        )
-        .select(
-            F.lit("head_scan_post_gc").alias("category"),
-            F.lit(len(head_paths)).cast("long").alias("n_files"),
-            "n_rows",
-            "cents_total",
-            *consts,
-        )
+    head_scan = _totals_row(
+        spark.read.parquet(*head_paths),
+        {"category": "head_scan_post_gc", "n_files": len(head_paths)},
+        snap_counts,
     )
     return meta_row("live", live).union(meta_row("deletable", deletable)).union(
         head_scan
@@ -3630,32 +3460,15 @@ def _stage_wap_table(spark: SparkSession, sf_dir: str):
     """Stage the WAP fixture: a published base (slices 0,1), a CLEAN
     incoming batch (slice 2), and a CORRUPT batch (slice 1 again — its
     keys all collide with the base, the classic double-delivery
-    replay).  All three land as data files plus an audit-branch
-    manifest; nothing is on the main branch but the base."""
-    import os
-
+    replay).  All three land as data files and no manifest is written:
+    nothing is on the main branch but the base until the key publishes."""
     base = tracked_mkdtemp(prefix="orders_wap_")
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            "o_orderkey",
-            (F.col("o_orderkey") % WAP_SLICES).alias("sl"),
-            _cents("o_totalprice").alias("cents"),
-        )
-        .localCheckpoint()
+    paths = _write_slices(
+        _sliced_orders(spark, sf_dir, WAP_SLICES),
+        os.path.join(base, "data"),
+        {"base": [0, 1], "batch_clean": [2], "batch_corrupt": [1]},
+        ("o_orderkey", "cents"),
     )
-    members = {
-        "base": [0, 1],
-        "batch_clean": [2],
-        "batch_corrupt": [1],
-    }
-    paths = {}
-    for fid, slices in members.items():
-        path = os.path.join(base, "data", fid)
-        o.filter(F.col("sl").isin(slices)).select(
-            "o_orderkey", "cents"
-        ).coalesce(1).write.parquet(path)
-        paths[fid] = path
     return base, paths
 
 
@@ -3713,8 +3526,6 @@ def q_table_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, a bloom-filter or manifest min-max prescan bounds it);
     publish/reject are O(1) manifest writes.  Completes the commit
     lifecycle: WAP gate → snapshot reads → compaction → expiry."""
-    import os
-
     root, paths = _stage_wap_table(spark, sf_dir)
     base_df = spark.read.parquet(paths["base"])
     base_keys = base_df.select("o_orderkey")
@@ -3801,8 +3612,6 @@ def q_meta_snapshot_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches only metadata.  100 TB shape: everything runs on the
     snapshot⋈file manifest (KB grain) — two broadcast anti-joins and
     one agg, independent of table size."""
-    import os
-
     base = _stage_expire_table(spark, sf_dir)
     snaps = spark.read.parquet(os.path.join(base, "snapshots.parquet"))
     files = spark.read.parquet(os.path.join(base, "files.parquet"))
@@ -3976,42 +3785,26 @@ def _stage_conflict_scenario(spark: SparkSession, sf_dir: str):
       it ABORTS. Its staged file stays on disk as an orphan the
       manifest never lists (q_maintenance_orphan_audit's GC class).
 
-    Returns (data_dir, manifest_dir, per-writer decision rows)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    Returns (data_dir, the head snapshot's live files, per-writer
+    decision rows)."""
     base = tracked_mkdtemp(prefix="orders_occ_")
     data, man = os.path.join(base, "data"), os.path.join(base, "manifest")
-    os.makedirs(man, exist_ok=True)
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            "o_orderkey",
-            (F.col("o_orderkey") % CC_SLICES).alias("slice"),
-            _cents("o_totalprice").alias("cents"),
-        )
-        .localCheckpoint()
-    )
 
     def log_entry(commit_id: int, adds: str, removes, slice_id: int):
-        pq.write_table(
-            pa.table(
-                {
-                    "commit_id": pa.array([commit_id], pa.int64()),
-                    "adds": pa.array([adds], pa.string()),
-                    "removes": pa.array([removes], pa.string()),
-                    "slice": pa.array([slice_id], pa.int64()),
-                }
-            ),
+        _write_meta(
             os.path.join(man, f"commit-{commit_id}.parquet"),
+            "commit_id int64, adds string, removes string, slice int64",
+            [(commit_id, adds, removes, slice_id)],
         )
 
+    paths = _write_slices(
+        _sliced_orders(spark, sf_dir, CC_SLICES),
+        data,
+        {f"f{i}": [i] for i in range(CC_SLICES)},
+        ("o_orderkey", "slice", "cents"),
+    )
     for slice_id in range(CC_SLICES):
-        path = os.path.join(data, f"f{slice_id}")
-        o.filter(F.col("slice") == slice_id).coalesce(1).write.parquet(path)
-        log_entry(slice_id, path, None, slice_id)
+        log_entry(slice_id, paths[f"f{slice_id}"], None, slice_id)
 
     def read_log():
         return spark.read.parquet(man)
@@ -4245,8 +4038,6 @@ def _stage_incr_layout(spark: SparkSession, sf_dir: str) -> str:
     split by % 8) — each append straddles the whole (date, custkey)
     plane, the classic append-ruins-clustering shape. Every staged row
     carries its z value under the table-level spec."""
-    import os
-
     root = tracked_mkdtemp(prefix="orders_incr_layout_")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -4422,8 +4213,6 @@ def q_layout_cluster_incremental(
     rows vs the full-table rewrite of q_layout_zorder_rewrite) — cost
     scales with append churn, not table size; the clean majority's
     files are never opened."""
-    import os
-
     root = _stage_incr_layout(spark, sf_dir)
     clustered = spark.read.parquet(os.path.join(root, "clustered"))
     appends = spark.read.parquet(os.path.join(root, "appends"))

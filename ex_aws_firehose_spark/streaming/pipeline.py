@@ -21,7 +21,8 @@ Every stream in the package runs through the same three steps:
 :func:`stage_batches` writes one file per intended micro-batch,
 :func:`read_staged` reads them back one file per trigger, and
 :func:`drain` runs the query under ``Trigger.AvailableNow`` until the
-backlog is consumed. Versioned foreachBatch state is found on disk by
+backlog is consumed (:func:`drain_to_memory` returns a memory sink's
+rows). Versioned foreachBatch state is found on disk by
 :func:`latest_version` and :func:`read_prior_state`.
 
 At scale: one drain per schedule plays the role of buffer_interval
@@ -67,10 +68,9 @@ N_SOURCE_FILES = 4
 # for) exactly spark.sql.shuffle.partitions tasks. Size this to the
 # stream's key cardinality, not the batch-side default: per-batch state
 # here is tiny, and 32 partitions × N batches of state-store commit I/O
-# dominates wall-clock. A production deployment raises it via env.
-STREAM_SHUFFLE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-)
+# dominates wall-clock. A stream with more keys passes a larger ``n``
+# to :func:`drain`.
+STREAM_SHUFFLE_PARTITIONS = 8
 
 
 @contextmanager
@@ -162,6 +162,23 @@ def drain(
         q = w.trigger(availableNow=True).start()
         q.awaitTermination()
     return q
+
+
+def drain_to_memory(
+    stream: DataFrame,
+    checkpoint: str | None = None,
+    mode: str = "append",
+    n: int = STREAM_SHUFFLE_PARTITIONS,
+) -> DataFrame:
+    """:func:`drain` into a memory sink and return the sink's rows. The
+    sink's temp view is dropped before returning: the DataFrame still
+    reads the sink, so its rows live as long as the DataFrame does, not
+    in the session catalog until the session ends."""
+    spark = stream.sparkSession
+    name = drain(stream, "memory", checkpoint, mode, n).name
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def state_versions(root: str, prefix: str) -> list[int]:

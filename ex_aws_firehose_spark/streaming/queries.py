@@ -26,6 +26,7 @@ from ex_aws_firehose_spark.operators.llm import _minhash_cte
 from ex_aws_firehose_spark.registry import query
 from ex_aws_firehose_spark.streaming.pipeline import (
     drain,
+    drain_to_memory,
     latest_version,
     read_prior_state,
     read_staged,
@@ -231,7 +232,7 @@ def q_stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value"
         ),
     )
-    out = spark.table(drain(agg, "memory", mode="complete").name)
+    out = drain_to_memory(agg, mode="complete")
     return out.select(
         F.col("w.start").alias("window_start"), "event_type", "n", "total_value"
     )
@@ -259,7 +260,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = e.groupBy(
         F.window("ts", "2 hours", "1 hour").alias("w"), "event_type"
     ).agg(F.count("*").alias("n"))
-    out = spark.table(drain(agg, "memory", mode="complete").name)
+    out = drain_to_memory(agg, mode="complete")
     return out.select(
         F.col("w.start").alias("window_start"), "event_type", "n"
     )
@@ -313,7 +314,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream.groupBy(
         F.session_window("ts", "30 minutes").alias("w"), "user_id"
     ).agg(F.count("*").alias("n_events"))
-    out = spark.table(drain(agg, "memory", mode="complete").name)
+    out = drain_to_memory(agg, mode="complete")
     return out.select(
         "user_id", F.col("w.start").alias("session_start"), "n_events"
     )
@@ -452,7 +453,7 @@ def q_stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = spark.table(drain(counted, "memory", mode="update").name)
+    out = drain_to_memory(counted, mode="update")
     # Update-mode sink holds one row per (user, batch); the final state
     # is the monotone maximum.
     return out.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
@@ -623,7 +624,7 @@ def q_stream_join_static(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("tier", F.lit("other")).alias("tier"),
         F.round(F.col("value") * 100, 0).cast("long").alias("value_cents"),
     )
-    return spark.table(drain(enriched, "memory").name)
+    return drain_to_memory(enriched)
 
 
 @query(
@@ -681,7 +682,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # their commit I/O scales with partitions harder than any other
     # stateful op; they run at 4 (measured ~1 s/key saving vs 8 across
     # repeated A/B at sf0.1; key cardinality is far below either).
-    return spark.table(drain(joined, "memory", n=4).name)
+    return drain_to_memory(joined, n=4)
 
 
 @query(
@@ -1120,7 +1121,7 @@ def q_stream_window_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
     )
-    return spark.table(drain(stream, "memory").name).select(
+    return drain_to_memory(stream).select(
         F.col("w.start").alias("window_start"), "event_type", "n"
     )
 
@@ -1528,7 +1529,7 @@ def q_stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.count("*").alias("n_events"))
     )
-    drain(counts, "memory", ckpt, mode="complete")
+    drain_to_memory(counts, ckpt, mode="complete")
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.user_id").alias("user_id"),
@@ -1580,7 +1581,7 @@ def q_stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(F.count("*").alias("n_unique"))
         )
-        out = spark.table(drain(stream, "memory", mode="complete").name)
+        out = drain_to_memory(stream, mode="complete")
     finally:
         for k, v in old.items():
             if v is not None:
@@ -1751,7 +1752,7 @@ def q_stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    out = spark.table(drain(sessions, "memory").name)
+    out = drain_to_memory(sessions)
     return out.filter(F.col("user_id") >= 0).select(
         "user_id",
         F.timestamp_micros(F.col("start_us")).alias("session_start"),
@@ -1876,7 +1877,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
         "left_outer",
     ).select(F.col("v_user").alias("user_id"), "view_id", "click_id")
-    out = spark.table(drain(joined, "memory", n=4).name)
+    out = drain_to_memory(joined, n=4)
     return out.filter(F.col("user_id") >= 0)
 
 
@@ -1953,7 +1954,7 @@ def q_stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFra
         "view_id",
         "click_id",
     )
-    out = spark.table(drain(joined, "memory", n=4).name)
+    out = drain_to_memory(joined, n=4)
     return out.filter(F.col("user_id") >= 0)
 
 
@@ -2328,7 +2329,7 @@ def q_stream_join_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("valid_to").isNull() | (F.col("ts") < F.col("valid_to"))),
         "left",
     ).select("event_id", "user_id", "purchase_cents", "tier_cents")
-    return spark.table(drain(joined, "memory").name)
+    return drain_to_memory(joined)
 
 
 # ---------------------------------------------------------------------------
@@ -2403,7 +2404,7 @@ def src_stream_bus_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = bus_topic_dir(spark, sf_dir)
     register_bus_datasource(spark)
     stream = spark.readStream.format("bus_topic").option("path", root).load()
-    return spark.table(drain(stream, "memory").name)
+    return drain_to_memory(stream)
 
 
 # ---------------------------------------------------------------------------
@@ -2444,7 +2445,7 @@ def q_stream_filter_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     flt = raw.select("event_id", msg.alias("message")).filter(
         _STREAM_FP.column(message=F.col("message"))
     )
-    return spark.table(drain(flt, "memory").name)
+    return drain_to_memory(flt)
 
 
 # ---------------------------------------------------------------------------

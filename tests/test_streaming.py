@@ -229,101 +229,95 @@ def test_crash_replay_batch_id_sink(spark):
 
 @pytest.mark.parametrize("crash_point", ["before_commit", "after_commit"])
 def test_crash_replay_upsert_state(spark, crash_point):
-    """q_stream_upsert's copy-on-write state pattern under fault
-    injection, at BOTH crash windows: (a) after the state_v{id} write
-    but before the in-driver pointer swap, (b) after the pointer swap
-    but before the checkpoint commit. In both cases the replayed merge
-    is idempotent (last-writer-wins by (ts, event_id) absorbs re-merged
-    rows) and the final image equals the batch-computed truth."""
+    """q_stream_upsert's merge (``_last_writer_wins_batch``) under fault
+    injection, run the way the key runs it (``read_staged`` + ``drain``),
+    at both crash windows of batch 1: before it commits state_v1, and
+    after that commit but before the checkpoint commit. The restarted
+    drain replays batch 1, which rebuilds from the prior version on
+    disk (state_v0) and overwrites state_v1, so the final image is the
+    batch-computed truth either way."""
     import datetime as dt
 
+    from ex_aws_firehose_spark.streaming.queries import (
+        _last_writer_wins_batch,
+    )
+
     root = tempfile.mkdtemp(prefix="crash_upsert_")
-    src = os.path.join(root, "src")
     crash_flag = os.path.join(root, "crash_armed")
     open(crash_flag, "w").close()
     t0 = dt.datetime(2024, 1, 1)
-
-    # Two files -> two micro-batches; keys 1..3 update across batches.
-    _write_batch(
-        spark,
-        src,
-        [(1, t0, 1, 10.0), (2, t0 + dt.timedelta(minutes=1), 2, 20.0),
-         (3, t0 + dt.timedelta(minutes=2), 3, 30.0)],
+    schema = (
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double"
     )
-    _write_batch(
-        spark,
-        src,
-        [(4, t0 + dt.timedelta(minutes=3), 1, 40.0),
-         (5, t0 + dt.timedelta(minutes=4), 2, 50.0)],
+    # Two files -> two micro-batches; keys 1 and 2 update in batch 1.
+    src = stage_batches(
+        os.path.join(root, "src"),
+        [
+            spark.createDataFrame(rows, schema)
+            for rows in (
+                [(1, t0, 1, "a", 10.0),
+                 (2, t0 + dt.timedelta(minutes=1), 2, "a", 20.0),
+                 (3, t0 + dt.timedelta(minutes=2), 3, "a", 30.0)],
+                [(4, t0 + dt.timedelta(minutes=3), 1, "b", 40.0),
+                 (5, t0 + dt.timedelta(minutes=4), 2, "b", 50.0)],
+            )
+        ],
     )
 
-    state = {"dir": None}
+    def crash_here(point, batch_id):
+        if point == crash_point and batch_id == 1 and os.path.exists(crash_flag):
+            os.remove(crash_flag)
+            raise RuntimeError(f"injected crash: {point}")
 
     def upsert(batch_df, batch_id):
-        cur = (
-            spark.read.parquet(state["dir"])
-            if state["dir"] is not None
-            else spark.createDataFrame(
-                [], "user_id long, last_ts timestamp, value double, event_id long"
-            )
-        )
-        incoming = batch_df.select(
-            "user_id", F.col("ts").alias("last_ts"), "value", "event_id"
-        )
-        from pyspark.sql import Window
+        crash_here("before_commit", batch_id)
+        _last_writer_wins_batch(spark, root, batch_df, batch_id)
+        crash_here("after_commit", batch_id)
 
-        w = Window.partitionBy("user_id").orderBy(
-            F.desc("last_ts"), F.desc("event_id")
-        )
-        merged = (
-            cur.unionByName(incoming)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        new_dir = os.path.join(root, f"state_v{batch_id}")
-        merged.write.mode("overwrite").parquet(new_dir)
-        if (
-            crash_point == "before_commit"
-            and batch_id == 1
-            and os.path.exists(crash_flag)
-        ):
-            os.remove(crash_flag)
-            raise RuntimeError("injected crash: state written, pointer pending")
-        state["dir"] = new_dir
-        if (
-            crash_point == "after_commit"
-            and batch_id == 1
-            and os.path.exists(crash_flag)
-        ):
-            os.remove(crash_flag)
-            raise RuntimeError("injected crash: pointer swapped, commit pending")
+    def run():
+        drain(read_staged(spark, schema, src), upsert, os.path.join(root, "ckpt"))
 
-    def start():
-        return (
-            spark.readStream.schema(TS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .writeStream.foreachBatch(upsert)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation", os.path.join(root, f"ckpt_{crash_point}")
-            )
-            .start()
-        )
+    with pytest.raises(Exception, match="injected crash"):
+        run()
+    assert not os.path.exists(crash_flag), "crash hook never fired"
+    assert os.path.isdir(os.path.join(root, "state_v1")) == (
+        crash_point == "after_commit"
+    )
+    run()  # same checkpoint -> batch 1 replays
 
-    q = start()
-    with pytest.raises(Exception, match="injected crash|Query .* terminated"):
-        q.awaitTermination()
-    q2 = start()
-    q2.awaitTermination()
-
+    last = latest_version(root, "state_v", "test_upsert")
+    assert last == os.path.join(root, "state_v1")
     image = {
-        r["user_id"]: r["value"]
-        for r in spark.read.parquet(state["dir"]).collect()
+        r["user_id"]: r["last_cents"] for r in spark.read.parquet(last).collect()
     }
     # Batch truth: last writer per key by event time.
-    assert image == {1: 40.0, 2: 50.0, 3: 30.0}
+    assert image == {1: 4000, 2: 5000, 3: 3000}
+
+
+def test_memory_sink_key_drops_its_temp_view(spark, smoke_dir):
+    """A memory-sink key leaves no ``mem_sink_*`` view in the session
+    catalog once it returns, and the DataFrame it returns still reads
+    the sink: its rows match the key's oracle."""
+    from ex_aws_firehose_spark.registry import REGISTRY, load_all_operators
+    from ex_aws_firehose_spark.testing import compare_frames, duckdb_connection
+
+    load_all_operators()
+    q = REGISTRY["q_stream_tumbling_agg"]
+    out = q.fn(spark, smoke_dir)
+    views = [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith("mem_sink_")
+    ]
+    assert views == []
+    con = duckdb_connection(smoke_dir)
+    try:
+        want = con.execute(q.oracle).df()
+    finally:
+        con.close()
+    res = compare_frames(q.key, out.toPandas(), want)
+    assert res.ok, res.detail
 
 
 @pytest.mark.parametrize("provider", ["hdfs", "rocksdb"])
