@@ -94,7 +94,8 @@ def build_jar(source: Path = SOURCE, build_dir: Path = BUILD_DIR) -> Path:
     return jar
 
 
-def _register(spark: SparkSession) -> None:
+def register(spark: SparkSession) -> None:
+    """Register the codec UDFs on ``spark`` unless it already has them."""
     if spark.catalog.functionExists(GUNZIP):
         return
     spark.sql(f"ADD JAR '{build_jar()}'")
@@ -104,11 +105,11 @@ def _register(spark: SparkSession) -> None:
 
 def gunzip(spark: SparkSession, data: Column) -> Column:
     """gzip bytes -> bytes; NULL for NULL or undecodable input."""
-    _register(spark)
+    register(spark)
     return F.call_function(GUNZIP, data)
 
 
 def gzip(spark: SparkSession, data: Column) -> Column:
     """bytes -> gzip bytes (deterministic: mtime=0, level 6)."""
-    _register(spark)
+    register(spark)
     return F.call_function(GZIP, data)

@@ -256,36 +256,51 @@ def _synthesize_records_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+@session_cached
+def _decode_columns(spark: SparkSession) -> dict[str, Column]:
+    """The columns :func:`decode_chain` adds, in order, built once per
+    session (``spark`` is the cache key) instead of once per call."""
+    # try_to_binary (not unbase64): invalid base64 yields null → the
+    # record dead-letters instead of throwing inside codegen. It rejects
+    # MIME line breaks, which the reference's b64decode skips, so they
+    # are stripped first (the inverse of unchunked_base64).
+    raw = F.try_to_binary(F.translate("data", "\r\n", ""), F.lit("base64"))
+    return {
+        "payload": codec.gunzip(spark, raw).cast("string"),
+        "envelope": F.from_json("payload", ENVELOPE_SCHEMA),
+        # 'error': undecodable record (bad b64/gzip/utf8) → dead-letter
+        # route; the reference's Lambda would crash the invocation here,
+        # Firehose would retry then error-log — we go straight to the
+        # error route (main.tf:21-25 semantics) without poisoning the batch.
+        "kind": F.when(F.col("payload").isNull(), "error")
+        .when(F.col("payload").startswith('"'), "bare")
+        .when(F.col("envelope.messageType") == "DATA_MESSAGE", "data")
+        .otherwise("control"),
+        "bare_value": F.when(
+            F.col("kind") == "bare", F.get_json_object("payload", "$")
+        ),
+    }
+
+
 def decode_chain(records: DataFrame) -> DataFrame:
     """base64 → gunzip → utf-8 → parse (reference lambda/main.py:74).
 
     Adds ``payload`` (decoded string), ``envelope`` (parsed struct, null
     for non-envelope payloads), ``kind`` ('data'|'control'|'bare' — the
     3-way dispatch condition of lambda/main.py:80-91) and ``bare_value``
-    (the JSON string payload for the re-ingested-data branch)."""
-    # try_to_binary (not unbase64): invalid base64 yields null → the
-    # record dead-letters instead of throwing inside codegen. It rejects
-    # MIME line breaks, which the reference's b64decode skips, so they
-    # are stripped first (the inverse of unchunked_base64).
-    raw = F.try_to_binary(F.translate("data", "\r\n", ""), F.lit("base64"))
-    df = records.withColumn(
-        "payload", codec.gunzip(records.sparkSession, raw).cast("string")
-    )
-    df = df.withColumn("envelope", F.from_json("payload", ENVELOPE_SCHEMA))
-    return df.withColumn(
-        "kind",
-        # 'error': undecodable record (bad b64/gzip/utf8) → dead-letter
-        # route; the reference's Lambda would crash the invocation here,
-        # Firehose would retry then error-log — we go straight to the
-        # error route (main.tf:21-25 semantics) without poisoning the batch.
-        F.when(F.col("payload").isNull(), "error")
-        .when(F.col("payload").startswith('"'), "bare")
-        .when(F.col("envelope.messageType") == "DATA_MESSAGE", "data")
-        .otherwise("control"),
-    ).withColumn(
-        "bare_value",
-        F.when(F.col("kind") == "bare", F.get_json_object("payload", "$")),
-    )
+    (the JSON string payload for the re-ingested-data branch).
+
+    The column expressions are built once per session, not on every
+    delivery micro-batch that calls this. The gunzip registration
+    is still checked on every call, because a ``foreachBatch`` frame's
+    cloned session shares the application id but not necessarily the
+    registered UDF."""
+    spark = records.sparkSession
+    codec.register(spark)
+    df = records
+    for name, col in _decode_columns(spark).items():
+        df = df.withColumn(name, col)
+    return df
 
 
 def explode_events(decoded: DataFrame) -> DataFrame:
@@ -349,6 +364,39 @@ def reassemble(transformed: DataFrame) -> DataFrame:
     )
 
 
+@session_cached
+def _route_columns(spark: SparkSession) -> tuple[Column, Column, Column]:
+    """:func:`route`'s ``result`` and ``payload`` projections and its
+    ``data`` column, built once per session (``spark`` is the cache
+    key)."""
+    payload = F.array_join(
+        F.transform("envelope.logEvents", lambda e: rewrite_message(e.message)),
+        "",
+    )
+    kind = F.col("kind")
+    result = (
+        F.when(kind.isin("control", "error"), "ProcessingFailed")
+        .otherwise("Ok")
+        .alias("result")
+    )
+    out_payload = (
+        F.when(kind == "bare", F.col("bare_value"))
+        # empty or NULL logEvents → empty payload, not null: the
+        # reference joins an empty list to b'' (lambda/main.py:92).
+        .when(kind == "data", F.coalesce(payload, F.lit("")))
+        .alias("payload")
+    )
+    # the wire-format 'data' field of the processor result record:
+    # bare records pass the decoded string through unmodified
+    # (lambda/main.py:80-85 yields the str, not a re-encoding),
+    # data records carry the base64 of the reassembled payload
+    # (lambda/main.py:93), failed records carry none.
+    data = F.when(kind == "bare", F.col("payload")).when(
+        kind == "data", unchunked_base64(F.col("payload"))
+    )
+    return result, out_payload, data
+
+
 def route(decoded: DataFrame) -> DataFrame:
     """3-way dispatch (lambda/main.py:80-98): bare → Ok (pass-through,
     'data that is re-ingested'), control → ProcessingFailed, data → Ok
@@ -359,34 +407,12 @@ def route(decoded: DataFrame) -> DataFrame:
     record's ``logEvents`` array — array order is event order, and
     ``array_join`` skips a NULL-message event exactly as the
     explode → ``reassemble`` composition does. No shuffle, no join
-    back, and ``decoded`` (with its gunzip) is read once."""
-    payload = F.array_join(
-        F.transform("envelope.logEvents", lambda e: rewrite_message(e.message)),
-        "",
-    )
-    kind = F.col("kind")
-    return decoded.select(
-        "idx",
-        "record_id",
-        "kind",
-        F.when(kind.isin("control", "error"), "ProcessingFailed")
-        .otherwise("Ok")
-        .alias("result"),
-        F.when(kind == "bare", F.col("bare_value"))
-        # empty or NULL logEvents → empty payload, not null: the
-        # reference joins an empty list to b'' (lambda/main.py:92).
-        .when(kind == "data", F.coalesce(payload, F.lit("")))
-        .alias("payload"),
-    ).withColumn(
-        # the wire-format 'data' field of the processor result record:
-        # bare records pass the decoded string through unmodified
-        # (lambda/main.py:80-85 yields the str, not a re-encoding),
-        # data records carry the base64 of the reassembled payload
-        # (lambda/main.py:93), failed records carry none.
-        "data",
-        F.when(kind == "bare", F.col("payload")).when(
-            kind == "data", unchunked_base64(F.col("payload"))
-        ),
+    back, and ``decoded`` (with its gunzip) is read once. The column
+    expressions are built once per session, as in
+    :func:`decode_chain`."""
+    result, payload, data = _route_columns(decoded.sparkSession)
+    return decoded.select("idx", "record_id", "kind", result, payload).withColumn(
+        "data", data
     )
 
 
@@ -415,6 +441,14 @@ def overflow_split(routed: DataFrame, threshold: int = OVERFLOW_THRESHOLD) -> Da
         .when(F.col("cum_size") > threshold, "Dropped")
         .otherwise("Ok"),
     )
+
+
+# The reingest pass below is one task running one Python loop over the
+# whole sorted Dropped tail. The tail is ~8.8 k rows at sf0.1, so this
+# bound is ~100x that; a tail past it would make one core's serial loop
+# the query's run time, and belongs to per-micro-batch accounting (the
+# reference's per-invocation unit) instead.
+REINGEST_MAX_TAIL_ROWS = 1_000_000
 
 
 def reingest(
@@ -456,7 +490,9 @@ def reingest(
     barriers at sf0.1, where the tail outlasts the bound. (An
     ``aggregate()`` expression fold was tried first and REJECTED:
     appending to the lambda's accumulator array copies it per element
-    — O(n²) in the 8.8 k-row tail, measured slower than the loop.)"""
+    — O(n²) in the 8.8 k-row tail, measured slower than the loop.)
+    The pass raises once the tail passes ``REINGEST_MAX_TAIL_ROWS``
+    rows; the check runs inside the task, so it costs no extra job."""
     # A NULL data/record_id sizes 0, as the per-round window F.sum
     # skipped it; left NULL, pandas sees NaN and poisons pack's `run`.
     sz = F.coalesce(
@@ -473,12 +509,20 @@ def reingest(
         "idx", "record_id", F.col("sz").cast("long").alias("sz")
     )
     last_bin = max_attempts - 1  # bins 1..max_attempts-1 deliver in bound
+    max_rows = REINGEST_MAX_TAIL_ROWS
 
     def pack(batches):
         import pandas as pd
 
-        bin_no, run, blocked = 1, 0, False
+        bin_no, run, blocked, seen = 1, 0, False, 0
         for pdf in batches:
+            seen += len(pdf)
+            if seen > max_rows:
+                raise RuntimeError(
+                    f"reingest: the Dropped tail passed {max_rows} rows "
+                    "(REINGEST_MAX_TAIL_ROWS); its greedy packing pass is "
+                    "a single serial task"
+                )
             res, att = [], []
             for szv in pdf["sz"]:
                 if blocked or szv > threshold:

@@ -27,9 +27,9 @@ rows). Versioned foreachBatch state is found on disk by
 
 At scale: one drain per schedule plays the role of buffer_interval
 (main.tf:18); each sink write is append-only partitioned parquet; no
-state is kept on the driver. A micro-batch runs two single-stage jobs
-(the backup write and the result-partitioned routed write) with no
-shuffle; tests/test_plans.py::test_tri_sink_batch_two_jobs_no_shuffle
+state is kept on the driver. A micro-batch runs two concurrent
+single-stage jobs (the backup write and the result-partitioned routed
+write) with no shuffle; tests/test_plans.py::test_tri_sink_batch_two_jobs_no_shuffle
 pins that shape.
 """
 
@@ -41,6 +41,7 @@ from collections.abc import Callable, Iterable
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -242,10 +243,10 @@ def prepare_source_files(
         source=os.path.join(root, "source"),
         routed=routed,
         # primary / error sinks are the partition subdirs of ONE
-        # result-partitioned write per batch (2 write jobs per batch,
-        # not 3 — the trim that matters when the per-batch data is
-        # small and job overhead dominates). Readers see the same
-        # directories-of-parquet contract as separate sinks.
+        # result-partitioned write per batch (2 concurrent write jobs
+        # per batch, not 3 — the trim that matters when the per-batch
+        # data is small and job overhead dominates). Readers see the
+        # same directories-of-parquet contract as separate sinks.
         primary=os.path.join(routed, "result=Ok"),
         backup=os.path.join(root, "backup"),
         errors=os.path.join(routed, "result=ProcessingFailed"),
@@ -267,23 +268,46 @@ def tri_sink_batch(batch_df: DataFrame, batch_id: int, paths: SinkPaths) -> None
     and fan out to the three sinks. The primary and error sinks are the
     two partitions of ONE result-partitioned write, and ``route`` is
     row-local, so a batch is exactly two single-stage jobs: the backup
-    write, then the routed write, whose one stage decodes each record
+    write and the routed write, whose one stage decodes each record
     once, in the JVM, with no exchange, join or Python worker (per-batch
-    data is tiny, so job count IS the cost)."""
-    # Every routed row is Ok or ProcessingFailed, so the write needs no
-    # filter on `result`: one would be pushed below the decode and run
-    # the gunzip a second time.
-    routed = route(decode_chain(batch_df)).select(
-        "idx",
-        "record_id",
-        "payload",
-        "kind",
-        F.lit(batch_id).alias("batch_id"),
-        "result",
-    )
-    # backup: raw source records verbatim (main.tf:27-34 semantics)
-    batch_df.write.mode("append").parquet(paths.backup)
-    routed.write.partitionBy("result").mode("append").parquet(paths.routed)
+    data is tiny, so job count IS the cost).
+
+    The two jobs run concurrently: the backup write starts on an
+    ``InheritableThread`` before the routed frame is built, and the
+    routed write runs on the caller's thread. ``InheritableThread``
+    (not a bare thread) copies the caller's Spark local properties, so
+    the backup job keeps the micro-batch's job group and
+    ``streaming.sql.batchId``. Both writes finish before this returns,
+    and a failed backup write re-raises here, so the batch commits only
+    when every sink has its rows."""
+    failed: list[BaseException] = []
+
+    def backup() -> None:
+        # raw source records verbatim (main.tf:27-34 semantics)
+        try:
+            batch_df.write.mode("append").parquet(paths.backup)
+        except BaseException as exc:
+            failed.append(exc)
+
+    writer = InheritableThread(target=backup)
+    writer.start()
+    try:
+        # Every routed row is Ok or ProcessingFailed, so the write needs
+        # no filter on `result`: one would be pushed below the decode
+        # and run the gunzip a second time.
+        routed = route(decode_chain(batch_df)).select(
+            "idx",
+            "record_id",
+            "payload",
+            "kind",
+            F.lit(batch_id).alias("batch_id"),
+            "result",
+        )
+        routed.write.partitionBy("result").mode("append").parquet(paths.routed)
+    finally:
+        writer.join()
+    if failed:
+        raise failed[0]
 
 
 def run_stream(spark: SparkSession, paths: SinkPaths) -> int:

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import re
+import threading
 
 import pandas as pd
 import pytest
@@ -1328,18 +1329,35 @@ def test_reingest_null_size_does_not_poison_packing(spark):
     assert got == {rid: ("Ok", 2) for rid in "anbc"}, got
 
 
-def test_tri_sink_batch_two_jobs_no_shuffle(spark, tmp_path):
-    """One delivery micro-batch is exactly two jobs (backup write,
-    routed write), and the routed write has no exchange, no join and no
-    Python evaluation node: the gunzip runs in the JVM. A return to the
-    explode/join-back route (4 jobs, 4 gzip decodes) or to a Python
-    codec fails here."""
+def test_reingest_tail_over_row_bound_raises(spark, monkeypatch):
+    """The serial reingest pass refuses a Dropped tail longer than
+    ``REINGEST_MAX_TAIL_ROWS`` with an error naming the bound, instead
+    of running one task over it (the bound is lowered here so a
+    five-row tail passes it)."""
+    from ex_aws_firehose_spark.operators import firehose
+
+    monkeypatch.setattr(firehose, "REINGEST_MAX_TAIL_ROWS", 4)
+    rows = [(i, f"r{i}", "Dropped", "x") for i in range(5)]
+    split_df = spark.createDataFrame(
+        rows, "idx long, record_id string, result string, data string"
+    )
+    with pytest.raises(Exception, match="REINGEST_MAX_TAIL_ROWS"):
+        firehose.reingest(split_df, max_attempts=5, threshold=10).collect()
+    # at the bound the pass runs: sz 3 each, so three fit bin 1
+    at_bound = spark.createDataFrame(rows[:4], split_df.schema)
+    got = firehose.reingest(at_bound, max_attempts=5, threshold=10).collect()
+    assert sorted(r["attempts"] for r in got) == [2, 2, 2, 3]
+
+
+def _tri_sink_inputs(spark, tmp_path):
+    """A three-record micro-batch (data, control, bare) read from one
+    parquet file, and the sink paths of a delivery run under
+    ``tmp_path``."""
     import base64
     import gzip
     import json
 
-    from ex_aws_firehose_spark.plans.audit import PYTHON_EVAL
-    from ex_aws_firehose_spark.streaming.pipeline import SinkPaths, tri_sink_batch
+    from ex_aws_firehose_spark.streaming.pipeline import SinkPaths
 
     def enc(payload):
         return base64.b64encode(gzip.compress(json.dumps(payload).encode())).decode()
@@ -1357,7 +1375,6 @@ def test_tri_sink_batch_two_jobs_no_shuffle(spark, tmp_path):
     spark.createDataFrame(
         rows, "idx long, record_id string, data string"
     ).coalesce(1).write.parquet(src)
-    batch = spark.read.parquet(src)
     routed = str(tmp_path / "routed")
     paths = SinkPaths(
         source=src,
@@ -1367,7 +1384,20 @@ def test_tri_sink_batch_two_jobs_no_shuffle(spark, tmp_path):
         errors=routed + "/result=ProcessingFailed",
         checkpoint=str(tmp_path / "checkpoint"),
     )
+    return spark.read.parquet(src), paths
 
+
+def test_tri_sink_batch_two_jobs_no_shuffle(spark, tmp_path):
+    """One delivery micro-batch is exactly two jobs (backup write,
+    routed write), both in the caller's job group, and the routed write
+    has no exchange, no join and no Python evaluation node: the gunzip
+    runs in the JVM. A return to the explode/join-back route (4 jobs,
+    4 gzip decodes) or to a Python codec fails here, and so does a
+    backup write on a thread that drops the caller's local properties."""
+    from ex_aws_firehose_spark.plans.audit import PYTHON_EVAL
+    from ex_aws_firehose_spark.streaming.pipeline import tri_sink_batch
+
+    batch, paths = _tri_sink_inputs(spark, tmp_path)
     sc = spark.sparkContext
     group = f"tri_sink_structure_{tmp_path.name}"
     sc.setJobGroup(group, group)
@@ -1377,18 +1407,40 @@ def test_tri_sink_batch_two_jobs_no_shuffle(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
-    # the executed plan of the last SQL execution: the routed write
-    plan = (
-        spark._jsparkSession.sharedState()
-        .statusStore()
-        .executionsList()
-        .last()
-        .physicalPlanDescription()
+    # The two writes run concurrently, so either can be the last SQL
+    # execution: pick the routed write by its partition column and path.
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plan = next(
+        p
+        for p in (
+            execs.apply(i).physicalPlanDescription()
+            for i in reversed(range(execs.size()))
+        )
+        if '__partition_columns=["result"]' in p and paths.routed in p
     )
-    assert '__partition_columns=["result"]' in plan, plan
     assert PYTHON_EVAL.findall(plan) == [] and "firehose_gunzip" in plan, plan
     assert "Exchange" not in plan and "Join" not in plan, plan
-    assert spark.read.parquet(routed).count() == 3
+    assert spark.read.parquet(paths.routed).count() == 3
+
+
+def test_tri_sink_batch_backup_failure_is_loud(spark, tmp_path):
+    """A backup write that fails re-raises from ``tri_sink_batch`` after
+    the routed write has finished, and the backup thread is joined, not
+    left running: a batch whose backup sink lost its rows must not
+    commit."""
+    from pyspark import InheritableThread
+
+    from ex_aws_firehose_spark.streaming.pipeline import tri_sink_batch
+
+    batch, paths = _tri_sink_inputs(spark, tmp_path)
+    with open(paths.backup, "w") as f:  # a file where the backup dir goes
+        f.write("not a directory")
+    with pytest.raises(Exception) as info:
+        tri_sink_batch(batch, 0, paths)
+    assert "backup" in str(info.value), info.value
+    alive = [t for t in threading.enumerate() if isinstance(t, InheritableThread)]
+    assert alive == [], alive
+    assert spark.read.parquet(paths.routed).count() == 3
 
 
 def test_bradley_terry_fold_matches_loop(spark, sf_dir):

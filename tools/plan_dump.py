@@ -16,9 +16,15 @@ the DataFrame raises), in key order. Building a key runs its fixtures,
 as the bench does; the plan itself is never executed.
 
 The plan text is ``queryExecution().optimizedPlan().toString()`` with
-two run-dependent parts normalized: expression ids (``#123`` → ``#``)
-and the random 8-character suffix of ``tempfile.mkdtemp`` dirs under the
-temp root (``/tmp/orders_snap_x1y2z3w4`` → ``/tmp/orders_snap_*``).
+four run-dependent parts normalized: expression ids (``#123`` → ``#``),
+the counter PySpark appends to lambda variables (``lambda x_12#`` →
+``lambda x_#``; it counts every ``F.transform``/``F.exists`` built in
+the JVM, so it moves when the order those are built in changes), the
+physical plan ids inside a cached relation (``plan_id=6382`` →
+``plan_id=``; adaptive re-planning of earlier keys moves them between
+runs of one tree) and the random 8-character suffix of
+``tempfile.mkdtemp`` dirs under the temp root
+(``/tmp/orders_snap_x1y2z3w4`` → ``/tmp/orders_snap_*``).
 
 Known nondeterminism: the four keys that aggregate several DISTINCT
 expressions (``q_curate_split_leakage``, ``q_dq_profile``,
@@ -43,6 +49,8 @@ from ex_aws_firehose_spark.registry import REGISTRY, load_all_operators
 from ex_aws_firehose_spark.session import get_spark
 
 _EXPR_ID = re.compile(r"#\d+")
+_LAMBDA_VAR = re.compile(r"(\blambda \w+?_)\d+#")
+_PLAN_ID = re.compile(r"plan_id=\d+")
 _TEMP_DIR = re.compile(
     "(" + re.escape(tempfile.gettempdir()) + r"/[^/\s,\]\)'\"]*?)"
     r"[a-z0-9_]{8}(?=[/\s,\]\)'\"]|$)"
@@ -50,8 +58,10 @@ _TEMP_DIR = re.compile(
 
 
 def normalize(plan: str) -> str:
-    """Blank out expression ids and mkdtemp suffixes."""
-    return _TEMP_DIR.sub(r"\1*", _EXPR_ID.sub("#", plan))
+    """Blank out expression ids, lambda-variable counters, plan ids and
+    mkdtemp suffixes."""
+    plan = _LAMBDA_VAR.sub(r"\1#", _EXPR_ID.sub("#", plan))
+    return _TEMP_DIR.sub(r"\1*", _PLAN_ID.sub("plan_id=", plan))
 
 
 def select_keys(keys: list[str], tags: list[str], modules: list[str]) -> list[str]:
