@@ -12,14 +12,58 @@ The same builder serves local testing (``local[N]``) and a real cluster
 - Arrow enabled — fast toPandas and pandas-UDF transport.
 - shuffle partitions default to cores locally; on a cluster AQE coalesces
   from ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``.
+- a fork-free ``file:`` filesystem (``functions/LocalFs.java``) for
+  ``local[...]`` masters. pyspark ships without ``libhadoop``, so the
+  stock local filesystem starts a ``chmod`` process per file or directory
+  it creates and a ``readlink`` process per checkpoint/offset-log rename:
+  ~50 processes per delivery micro-batch at ~3.6 ms each. The jar is
+  built (once per source version, see ``functions/codec.py``) and put on
+  the driver classpath before the JVM starts, which only reaches the
+  executors when they share the driver JVM, hence local masters only.
+  Checksums, committers and layouts are the stock ``LocalFileSystem``'s.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+from collections.abc import Mapping
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+from ex_aws_firehose_spark.functions import codec
+
+LOCAL_FS_SOURCE = Path(codec.__file__).with_name("LocalFs.java")
+_LOCAL_FS = "ex_aws_firehose_spark.functions.LocalFs"
+# masters whose executors run inside the driver JVM (not local-cluster)
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+
+
+def session_conf(
+    master: str,
+    extra_conf: Mapping[str, str] | None,
+    env_conf: str | None,
+    jar: Path,
+) -> dict[str, str]:
+    """The settings applied over :func:`get_spark`'s defaults, in order:
+    ``env_conf`` (``$SPARK_GRAFT_EXTRA_CONF``, a JSON object), then
+    ``extra_conf``, then, for ``local``/``local[...]`` masters only, the
+    fork-free ``file:`` filesystem from ``jar``. A caller's
+    ``spark.driver.extraClassPath`` is kept, after the jar."""
+    conf = {k: str(v) for k, v in json.loads(env_conf or "{}").items()}
+    conf.update(extra_conf or {})
+    if _LOCAL_MASTER.fullmatch(master):
+        classpath = [str(jar), conf.get("spark.driver.extraClassPath", "")]
+        conf.update(
+            {
+                "spark.driver.extraClassPath": os.pathsep.join(p for p in classpath if p),
+                "spark.hadoop.fs.file.impl": f"{_LOCAL_FS}$Local",
+                "spark.hadoop.fs.AbstractFileSystem.file.impl": f"{_LOCAL_FS}$Checked",
+            }
+        )
+    return conf
 
 
 def get_spark(
@@ -77,10 +121,11 @@ def get_spark(
     # Deployment-specific overrides without code changes: a JSON object of
     # conf key -> value (e.g. cluster advisory partition sizes). Applied
     # after the defaults above, before caller-supplied extra_conf.
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
-    if env_conf:
-        for k, v in json.loads(env_conf).items():
-            builder = builder.config(k, str(v))
-    for k, v in (extra_conf or {}).items():
+    jar = codec.jar_path(LOCAL_FS_SOURCE)
+    conf = session_conf(master, extra_conf, os.environ.get("SPARK_GRAFT_EXTRA_CONF"), jar)
+    if _LOCAL_MASTER.fullmatch(master):
+        # against hadoop-client-api alone: ~1 s on a cold checkout, then 0
+        codec.build_jar(LOCAL_FS_SOURCE, jars="hadoop-client-api-*.jar")
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
