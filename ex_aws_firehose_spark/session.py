@@ -19,7 +19,10 @@ The same builder serves local testing (``local[N]``) and a real cluster
   ~50 processes per delivery micro-batch at ~3.6 ms each. The jar is
   built (once per source version, see ``functions/codec.py``) and put on
   the driver classpath before the JVM starts, which only reaches the
-  executors when they share the driver JVM, hence local masters only.
+  executors when they share the driver JVM, hence local masters only,
+  and only when this call starts that JVM: under spark-submit, or after
+  another session started the gateway in this process, the JVM already
+  runs with its own classpath and keeps its own ``file:`` settings.
   Checksums, committers and layouts are the stock ``LocalFileSystem``'s.
 """
 
@@ -31,34 +34,55 @@ import re
 from collections.abc import Mapping
 from pathlib import Path
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 from ex_aws_firehose_spark.functions import codec
 
 LOCAL_FS_SOURCE = Path(codec.__file__).with_name("LocalFs.java")
 _LOCAL_FS = "ex_aws_firehose_spark.functions.LocalFs"
+# the launcher appends it to spark.driver.extraClassPath, whatever sets that
+_DEFAULT_CLASSPATH = "spark.driver.defaultExtraClassPath"
 # masters whose executors run inside the driver JVM (not local-cluster)
 _LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
 
 
+def launches_local_jvm(master: str) -> bool:
+    """Whether building a session for ``master`` starts the driver JVM
+    here, with its executors inside it: the only case in which a
+    classpath setting reaches every JVM that opens ``file:`` paths.
+    Under spark-submit python joins a running JVM through
+    ``PYSPARK_GATEWAY_PORT``; after an earlier session in this process
+    the gateway is already up, and a new session inherits the ``file:``
+    settings that JVM was started with."""
+    return (
+        _LOCAL_MASTER.fullmatch(master) is not None
+        and SparkContext._gateway is None
+        and "PYSPARK_GATEWAY_PORT" not in os.environ
+    )
+
+
 def session_conf(
-    master: str,
     extra_conf: Mapping[str, str] | None,
     env_conf: str | None,
-    jar: Path,
+    local_fs_jar: Path | None,
 ) -> dict[str, str]:
     """The settings applied over :func:`get_spark`'s defaults, in order:
     ``env_conf`` (``$SPARK_GRAFT_EXTRA_CONF``, a JSON object), then
-    ``extra_conf``, then, for ``local``/``local[...]`` masters only, the
-    fork-free ``file:`` filesystem from ``jar``. A caller's
-    ``spark.driver.extraClassPath`` is kept, after the jar."""
+    ``extra_conf``, then, given ``local_fs_jar``, the fork-free ``file:``
+    filesystem. The jar goes on ``spark.driver.defaultExtraClassPath``,
+    which the launcher appends to ``spark.driver.extraClassPath`` from
+    any source (these settings, ``spark-defaults.conf``,
+    ``--driver-class-path``), so none of those is replaced; a caller's
+    ``spark.driver.defaultExtraClassPath`` given here is kept after the
+    jar, one in ``spark-defaults.conf`` is overridden."""
     conf = {k: str(v) for k, v in json.loads(env_conf or "{}").items()}
     conf.update(extra_conf or {})
-    if _LOCAL_MASTER.fullmatch(master):
-        classpath = [str(jar), conf.get("spark.driver.extraClassPath", "")]
+    if local_fs_jar is not None:
+        classpath = [str(local_fs_jar), conf.get(_DEFAULT_CLASSPATH, "")]
         conf.update(
             {
-                "spark.driver.extraClassPath": os.pathsep.join(p for p in classpath if p),
+                _DEFAULT_CLASSPATH: os.pathsep.join(p for p in classpath if p),
                 "spark.hadoop.fs.file.impl": f"{_LOCAL_FS}$Local",
                 "spark.hadoop.fs.AbstractFileSystem.file.impl": f"{_LOCAL_FS}$Checked",
             }
@@ -121,11 +145,8 @@ def get_spark(
     # Deployment-specific overrides without code changes: a JSON object of
     # conf key -> value (e.g. cluster advisory partition sizes). Applied
     # after the defaults above, before caller-supplied extra_conf.
-    jar = codec.jar_path(LOCAL_FS_SOURCE)
-    conf = session_conf(master, extra_conf, os.environ.get("SPARK_GRAFT_EXTRA_CONF"), jar)
-    if _LOCAL_MASTER.fullmatch(master):
-        # against hadoop-client-api alone: ~1 s on a cold checkout, then 0
-        codec.build_jar(LOCAL_FS_SOURCE, jars="hadoop-client-api-*.jar")
+    jar = codec.build_jar(LOCAL_FS_SOURCE) if launches_local_jvm(master) else None
+    conf = session_conf(extra_conf, os.environ.get("SPARK_GRAFT_EXTRA_CONF"), jar)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

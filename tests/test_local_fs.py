@@ -3,21 +3,27 @@
 stock ``RawLocalFileSystem`` (modes on disk, link status field by field,
 missing paths), a JFR recording that finds no process start in a
 partitioned parquet write and a checkpointed stream, and the session
-settings that install it."""
+settings that install it, only into a JVM the session starts itself."""
 
 from __future__ import annotations
 
 import json
 import os
 import stat
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 
-from ex_aws_firehose_spark.session import session_conf
+from ex_aws_firehose_spark.functions import codec
+from ex_aws_firehose_spark.session import launches_local_jvm, session_conf
 
 MODES = ["755", "644", "700", "600", "777", "000"]
-JAR = "/build/LocalFs-0123.jar"
+JAR = Path("/build/LocalFs-0123.jar")
 
 
 @pytest.fixture(scope="module")
@@ -193,35 +199,104 @@ def test_writes_and_stream_start_no_process(spark, tmp_path):
 
 
 @pytest.mark.parametrize("master", ["local", "local[1]", "local[8]", "local[*]"])
-def test_conf_installs_filesystem_on_local_masters(master):
-    conf = session_conf(master, None, None, JAR)
-    assert conf["spark.driver.extraClassPath"] == JAR
-    assert conf["spark.hadoop.fs.file.impl"].endswith("LocalFs$Local")
-    assert conf["spark.hadoop.fs.AbstractFileSystem.file.impl"].endswith("LocalFs$Checked")
+def test_new_local_jvm_gets_filesystem(master, monkeypatch):
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    assert launches_local_jvm(master)
 
 
 @pytest.mark.parametrize(
     "master", ["local-cluster[2,1,1024]", "spark://host:7077", "yarn", "k8s://https://h:443"]
 )
-def test_conf_absent_on_other_masters(master):
-    assert session_conf(master, None, None, JAR) == {}
-    conf = session_conf(master, {"spark.driver.extraClassPath": "/a.jar"}, None, JAR)
-    assert conf == {"spark.driver.extraClassPath": "/a.jar"}
+def test_other_masters_keep_stock_filesystem(master, monkeypatch):
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    assert not launches_local_jvm(master)
+
+
+def test_running_jvm_gets_no_filesystem_settings(spark, monkeypatch):
+    """A JVM that is already up (this process's gateway, or spark-submit's
+    through PYSPARK_GATEWAY_PORT) has its classpath: no jar can join it."""
+    assert SparkContext._gateway is not None
+    assert not launches_local_jvm("local[4]")
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "12345")
+    assert not launches_local_jvm("local[4]")
+
+
+def test_conf_installs_filesystem_given_jar():
+    conf = session_conf(None, None, JAR)
+    assert conf["spark.driver.defaultExtraClassPath"] == str(JAR)
+    assert conf["spark.hadoop.fs.file.impl"].endswith("LocalFs$Local")
+    assert conf["spark.hadoop.fs.AbstractFileSystem.file.impl"].endswith("LocalFs$Checked")
+    assert "spark.driver.extraClassPath" not in conf
+
+
+def test_conf_without_jar_is_the_callers():
+    assert session_conf(None, None, None) == {}
+    conf = session_conf({"spark.driver.extraClassPath": "/a.jar"}, '{"x": 1}', None)
+    assert conf == {"spark.driver.extraClassPath": "/a.jar", "x": "1"}
 
 
 def test_conf_keeps_caller_classpath():
-    via_extra = session_conf("local[4]", {"spark.driver.extraClassPath": "/a.jar"}, None, JAR)
-    via_env = session_conf(
-        "local[4]", None, json.dumps({"spark.driver.extraClassPath": "/b.jar", "x": 1}), JAR
-    )
-    both = session_conf(
-        "local[4]",
-        {"spark.driver.extraClassPath": "/a.jar"},
-        json.dumps({"spark.driver.extraClassPath": "/b.jar"}),
-        JAR,
-    )
-    assert via_extra["spark.driver.extraClassPath"] == os.pathsep.join([JAR, "/a.jar"])
-    assert via_env["spark.driver.extraClassPath"] == os.pathsep.join([JAR, "/b.jar"])
-    assert via_env["x"] == "1"
+    cp, default_cp = "spark.driver.extraClassPath", "spark.driver.defaultExtraClassPath"
+    via_extra = session_conf({cp: "/a.jar", default_cp: "/d.jar"}, None, JAR)
+    via_env = session_conf(None, json.dumps({cp: "/b.jar", default_cp: "/e.jar"}), JAR)
+    both = session_conf({default_cp: "/d.jar"}, json.dumps({default_cp: "/e.jar"}), JAR)
+    assert via_extra[cp] == "/a.jar"
+    assert via_extra[default_cp] == os.pathsep.join([str(JAR), "/d.jar"])
+    assert via_env[cp] == "/b.jar"
+    assert via_env[default_cp] == os.pathsep.join([str(JAR), "/e.jar"])
     # extra_conf overrides the environment, as for any other key
-    assert both["spark.driver.extraClassPath"] == os.pathsep.join([JAR, "/a.jar"])
+    assert both[default_cp] == os.pathsep.join([str(JAR), "/d.jar"])
+
+
+_PROBE = """
+import os
+from ex_aws_firehose_spark.session import get_spark
+spark = get_spark(app_name="local-fs-launch", shuffle_partitions=1)
+jvm = spark._jvm
+fs = jvm.org.apache.hadoop.fs.FileSystem.get(
+    jvm.java.net.URI("file:///"), spark.sparkContext._jsc.hadoopConfiguration())
+try:
+    jvm.java.lang.Class.forName("ex_aws_firehose_spark.functions.GzipCodec$Compress")
+    on_classpath = True
+except Exception:
+    on_classpath = False
+spark.range(3).write.parquet(os.environ["PROBE_OUT"])
+print("PROBE", fs.getClass().getName().endswith("LocalFs$Local"), on_classpath,
+      spark.read.parquet(os.environ["PROBE_OUT"]).count())
+spark.stop()
+"""
+
+
+@pytest.mark.parametrize("launch", ["spark-submit", "driver-class-path"])
+def test_session_launches_keep_file_access_and_classpath(tmp_path, launch):
+    """get_spark in a fresh process. Under spark-submit the JVM is up
+    before python runs: no jar can join its classpath, so the stock
+    filesystem stays. With ``--driver-class-path`` in
+    PYSPARK_SUBMIT_ARGS (it overrides ``spark.driver.extraClassPath``)
+    both that classpath and the filesystem's jar are on the JVM's."""
+    script = tmp_path / "probe.py"
+    script.write_text(_PROBE)
+    repo = str(Path(__file__).resolve().parents[1])
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")])),
+        "PROBE_OUT": str(tmp_path / "out"),
+        "SPARK_GRAFT_CPUS": "1",
+        "SPARK_GRAFT_DRIVER_MEM": "512m",
+    }
+    for key in ("PYSPARK_GATEWAY_PORT", "PYSPARK_GATEWAY_SECRET", "SPARK_GRAFT_EXTRA_CONF"):
+        env.pop(key, None)
+    if launch == "spark-submit":
+        cmd = [str(Path(_find_spark_home(), "bin", "spark-submit")),
+               "--master", "local[1]", "--driver-memory", "512m", str(script)]
+        want = "False False 3"
+    else:
+        env["PYSPARK_SUBMIT_ARGS"] = f"--driver-class-path {codec.build_jar()} pyspark-shell"
+        cmd = [sys.executable, str(script)]
+        want = "True True 3"
+    proc = subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=300)
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("PROBE ")]
+    assert lines == [f"PROBE {want}"], proc.stderr[-3000:]
